@@ -1527,7 +1527,13 @@ def contamination_hits(
     join (every returned row has a positive count by construction).
     Same plan shape: eval reduces to distinct grams (broadcast by
     default), training pays one scan + explode + probe + per-doc
-    agg."""
+    agg.
+
+    Precondition: ``id_col`` is unique in ``docs``. The result has one
+    row per contaminated id, with the hits of every row sharing that
+    id summed; ``decontaminate(...).filter("is_contaminated")`` keeps
+    one row per input row, so the two agree only on unique ids (true
+    after ``exact_dedup``)."""
     def doc_grams(df: DataFrame, keep_pos: bool) -> DataFrame:
         toks = F.split(F.col(text_col), " ")
         base = df.select(

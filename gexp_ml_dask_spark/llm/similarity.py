@@ -563,19 +563,22 @@ def kmeans_lloyd(
         # pivot to k columns keyed by vec alone; the argmin is then a
         # row-local fold (min over struct(dist, cluster) — the same
         # (dist asc, cluster asc) tie order the window form used).
+        # The pivot columns are renamed by position to _d0.._d{k-1},
+        # so an id column named like a cluster number cannot clash.
         sq = (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
         dist_wide = (
             dims.join(cent, "pos")
             .groupBy(id_col)
             .pivot("cluster", clusters)
             .agg(F.round(F.sum(sq), 6))
+            .toDF(id_col, *[f"_d{j}" for j in clusters])
         )
         best = F.array_min(
             F.filter(
                 F.array(
                     *[
                         F.struct(
-                            F.col(str(j)).alias("dist"),
+                            F.col(f"_d{j}").alias("dist"),
                             F.lit(j).cast("long").alias("cluster"),
                         )
                         for j in clusters
@@ -661,8 +664,12 @@ def pca_power_top_component(
 
     def _replant(v_df: DataFrame) -> DataFrame:
         # dim rows of pre-rounded doubles -> driver -> literal:
-        # truncates the per-round lineage (see kmeans_lloyd)
-        rows = [(int(r["pos"]), float(r["v"])) for r in v_df.collect()]
+        # truncates the per-round lineage (see kmeans_lloyd). A zero
+        # norm (C @ v == 0, e.g. a constant first dim) leaves v NULL.
+        rows = [
+            (int(r["pos"]), None if r["v"] is None else float(r["v"]))
+            for r in v_df.collect()
+        ]
         return F.broadcast(spark.createDataFrame(rows, "pos int, v double"))
 
     v = _replant(v)

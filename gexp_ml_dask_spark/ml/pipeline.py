@@ -131,7 +131,17 @@ def train_test_split(
     (SURVEY.md §7.5); the contract is the proportion + determinism
     for a fixed seed. NB ``randomSplit`` membership depends on the
     physical partition layout — prefer :func:`hash_split` when the
-    split must be reproducible across scales/clusters."""
+    split must be reproducible across scales/clusters.
+
+    Cached-layout hazard: a persisted DataFrame whose plan ends in a
+    shuffle keeps the un-coalesced shuffle width (Spark runs cached
+    plans with ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    =false``), while the same plan run lazily is coalesced by AQE. So
+    splitting ``df.persist()`` selects other rows than splitting
+    ``df``, and two splits of one lazy plan can disagree if only one
+    of them reads through a cache. Split an input whose layout is
+    fixed once: a ``localCheckpoint`` (as ``plans.gexp_pipeline.
+    labeled_samples`` does) or a table read back from storage."""
     train, test = df.randomSplit([1.0 - test_size, test_size], seed=seed)
     return train, test
 

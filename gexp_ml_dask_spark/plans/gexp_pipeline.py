@@ -14,9 +14,21 @@ Stages (reference line refs inline):
   split/encode/scale          pre_ml_processing :55-76
   k-fold CV + eval fit/score  dask_default_xgboost_pipeline :79-104
 
-Persist points mirror the reference's (SURVEY.md §4): the normalized
-long table feeds both the stat aggregation and the filtered output;
-the scaled train set feeds all k folds plus the eval fit.
+Persist points. The reference persists its sample matrix once and
+reuses it (dask_pipeline.py:61-74, SURVEY.md §4); Spark re-runs a
+lazy plan for every action, so the port fixes three points:
+
+- ``preprocessed`` (the filtered long table) is persisted lazily: the
+  gene-dim distinct and the assemble ``groupBy`` read one evaluation.
+  It is released once the labeled table below exists.
+- The labeled per-sample table (vectors joined to labels) is built
+  ONCE by :func:`labeled_samples`, an eager local checkpoint. Label
+  encoding, the split, the scaler fit, the train persist and the eval
+  scoring all read it, so none of those actions re-runs the
+  preprocess -> assemble -> join lineage, and every read of the split
+  (the scaler fit, the cached train set) sees the same rows.
+- The scaled train set is persisted eagerly: it feeds all k folds
+  plus the eval fit.
 """
 
 from __future__ import annotations
@@ -42,9 +54,26 @@ from gexp_ml_dask_spark.operators.scalars import log2_plus_one
 def feature_preprocessing(gexp: DataFrame, exact: bool = True) -> DataFrame:
     """UQ normalize -> mean/var quantile threshold -> log2(x+1)
     (functions/dask_pipeline.py:30-45), one lazy long-form plan."""
-    normalized = persist_df(upper_quartile_transform(gexp, exact=exact))
+    normalized = upper_quartile_transform(gexp, exact=exact)
     filtered = stat_threshold_filter(normalized, q=0.25, exact=exact)
     return log2_plus_one(filtered, "value")
+
+
+def labeled_samples(preprocessed: DataFrame, labels: DataFrame) -> DataFrame:
+    """The labeled per-sample table: one feature vector per sample
+    joined to its label, materialized once as a local checkpoint.
+
+    A checkpoint, not a persist: ``randomSplit`` membership depends
+    on the partition layout (see :func:`~gexp_ml_dask_spark.ml.
+    pipeline.train_test_split`). The checkpoint runs the plan as an
+    ordinary query and keeps the layout AQE gave it, so a seeded
+    split selects the same rows as a split of the lazy plan; a
+    persisted shuffle output keeps its un-coalesced width and splits
+    differently. ``unpersist`` does not release the checkpoint's
+    blocks: Spark's ContextCleaner frees them once the returned
+    DataFrame is garbage-collected."""
+    vectors = assemble_vectors(preprocessed)
+    return vectors.join(F.broadcast(labels), "sample_id").localCheckpoint(eager=True)
 
 
 def gexp_pipeline(
@@ -80,9 +109,11 @@ def gexp_pipeline(
     if task not in ("classification", "regression"):
         raise ValueError("Invalid ML task!")
 
-    preprocessed = feature_preprocessing(gexp, exact=exact)
-    vectors = assemble_vectors(preprocessed)
-    data = vectors.join(F.broadcast(labels), "sample_id")
+    preprocessed = persist_df(feature_preprocessing(gexp, exact=exact))
+    try:
+        data = labeled_samples(preprocessed, labels)
+    finally:
+        unpersist_df(preprocessed)
 
     if task == "classification":
         data, _ = encode_labels(data, "label", "label_idx")
@@ -124,7 +155,6 @@ def gexp_pipeline(
         train = train.repartition(fit_partitions)
         test = test.repartition(fit_partitions)
     train = persist_df(train, eager=True)
-    test = persist_df(test)
 
     if task == "classification":
         make_model = lambda: make_classifier("features_scaled", label_col, seed)  # noqa: E731
@@ -137,19 +167,27 @@ def gexp_pipeline(
             m.transform(df), label_col, "prediction"
         )
 
-    cv_scores = cross_validate(
-        train,
-        fit_fn=lambda df: make_model().fit(df),
-        score_fn=score,
-        k=k_folds,
-        seed=seed,
-        parallelism=cv_parallelism,
-    )
-    mean_cv, var_cv = cv_summary(cv_scores)
+    def fit(df: DataFrame):
+        # copy() drops the training summary. A binary random-forest
+        # summary holds the SparkSession, which the scoring UDF then
+        # ships to every task, and once the session has run an
+        # observe() its ObservationManager makes that fail with "Task
+        # not serializable".
+        return make_model().fit(df).copy()
 
-    eval_model = make_model().fit(train)
-    eval_score = score(eval_model, test)
+    try:
+        cv_scores = cross_validate(
+            train,
+            fit_fn=fit,
+            score_fn=score,
+            k=k_folds,
+            seed=seed,
+            parallelism=cv_parallelism,
+        )
+        mean_cv, var_cv = cv_summary(cv_scores)
 
-    unpersist_df(train)
-    unpersist_df(test)
+        eval_model = fit(train)
+        eval_score = score(eval_model, test)
+    finally:
+        unpersist_df(train)
     return mean_cv, var_cv, eval_score

@@ -15,10 +15,14 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from gexp_ml_dask_spark.session import get_spark
 
+    # A fixed heap cap: get_spark's local default (48g) is above the
+    # RAM of a small host, and over a full run G1 grows the heap until
+    # the kernel's OOM killer ends the JVM. The fixtures are sf0.01.
     spark = get_spark(
         app_name="gexp_ml_dask_spark_tests",
         master="local[4]",
         shuffle_partitions=8,
+        extra_configs={"spark.driver.memory": "4g"},
     )
     yield spark
     spark.stop()

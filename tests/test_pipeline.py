@@ -165,6 +165,115 @@ def test_sparse_degenerate_input_fails_fast(spark, gexp_data):
         )
 
 
+def _ids(df):
+    return sorted(r["sample_id"] for r in df.select("sample_id").collect())
+
+
+def _pipeline_module():
+    # The module, not the function of the same name that
+    # ``gexp_ml_dask_spark.plans`` exports.
+    import importlib
+
+    return importlib.import_module("gexp_ml_dask_spark.plans.gexp_pipeline")
+
+
+def test_classification_pipeline_exact_scores(spark, gexp_data):
+    """Pinned result of the benchmark's pipeline arguments on the
+    fixture: building the labeled table once must not move a score.
+
+    The session runs an ``observe()`` first: from then on a fitted
+    model that keeps its training summary drags the SparkSession into
+    its scoring tasks and fails with "Task not serializable"."""
+    from pyspark.sql import Observation
+
+    from gexp_ml_dask_spark.plans import gexp_pipeline
+
+    spark.range(3).observe(Observation(), F.count(F.lit(1)).alias("n")).collect()
+    gexp, labels, _ = gexp_data
+    got = gexp_pipeline(
+        gexp, labels, "classification", k_folds=3, cv_parallelism=3, fit_partitions=4
+    )
+    assert got == (0.9848484848484849, 0.00045913682277318554, 1.0)
+
+
+def test_labeled_samples_split_matches_lazy_plan(spark, gexp_data):
+    """``randomSplit`` membership follows the partition layout. The
+    materialized labeled table must split into the same rows as the
+    lazy join it replaces (a ``persist`` keeps the un-coalesced
+    shuffle width and does not)."""
+    from gexp_ml_dask_spark.ml.pipeline import assemble_vectors, train_test_split
+    from gexp_ml_dask_spark.plans.gexp_pipeline import (
+        feature_preprocessing,
+        labeled_samples,
+    )
+
+    gexp, labels, _ = gexp_data
+    pre = feature_preprocessing(gexp)
+    lazy = assemble_vectors(pre).join(F.broadcast(labels), "sample_id")
+    table = labeled_samples(pre, labels)
+    for want, got in zip(
+        train_test_split(lazy, seed=42), train_test_split(table, seed=42)
+    ):
+        assert _ids(got) == _ids(want)
+    spark.catalog.clearCache()
+
+
+def test_pipeline_scaler_fits_on_model_train_rows(spark, gexp_data, monkeypatch):
+    """Default path (no ``fit_partitions``): the scaler fits on exactly
+    the rows the CV and the eval model train on, and the eval score
+    comes from the other rows only."""
+    gp = _pipeline_module()
+    gexp, labels, _ = gexp_data
+    seen = {}
+    scaler, cv, metric = gp.fit_standard_scaler, gp.cross_validate, gp.accuracy
+
+    def record_scaler(train, *args, **kwargs):
+        seen["scaler"] = _ids(train)
+        return scaler(train, *args, **kwargs)
+
+    def record_cv(train, **kwargs):
+        seen["train"] = _ids(train)
+        return cv(train, **kwargs)
+
+    def record_metric(pred, *args, **kwargs):
+        # The eval score is the last call, after the CV folds.
+        seen["scored"] = _ids(pred)
+        return metric(pred, *args, **kwargs)
+
+    monkeypatch.setattr(gp, "fit_standard_scaler", record_scaler)
+    monkeypatch.setattr(gp, "cross_validate", record_cv)
+    monkeypatch.setattr(gp, "accuracy", record_metric)
+    gp.gexp_pipeline(gexp, labels, "classification", k_folds=3, cv_parallelism=3)
+
+    assert seen["scaler"] == seen["train"]
+    assert not set(seen["scored"]) & set(seen["train"])
+    assert sorted(seen["train"] + seen["scored"]) == _ids(labels)
+
+
+def test_pipeline_releases_its_persists(spark, gexp_data, monkeypatch):
+    """Every ``persist_df`` handle the pipeline creates, the CV's
+    included, is uncached when the call returns."""
+    from pyspark.storagelevel import StorageLevel
+
+    import gexp_ml_dask_spark.ml.cv as cv
+    from gexp_ml_dask_spark.operators.physical import persist_df
+
+    gp = _pipeline_module()
+    gexp, labels, _ = gexp_data
+    handles = []
+
+    def record(df, eager=False):
+        handles.append(persist_df(df, eager))
+        return handles[-1]
+
+    monkeypatch.setattr(gp, "persist_df", record)
+    monkeypatch.setattr(cv, "persist_df", record)
+    gp.gexp_pipeline(gexp, labels, "classification", k_folds=3, cv_parallelism=3)
+
+    assert handles
+    assert [h.storageLevel for h in handles] == [StorageLevel.NONE] * len(handles)
+
+
 def test_hash_split_is_partition_layout_stable(spark):
     """The property that motivates hash_split over randomSplit:
     membership is a pure function of (key, seed), so re-partitioning

@@ -62,13 +62,14 @@ def main() -> int:
             print(f"ERR unknown query {name}", file=sys.stderr)
             return 1
         spark.catalog.clearCache()
+        # Each query's group replaces the previous one; nothing after
+        # the loop runs a job, so no group needs clearing.
         group = f"audit_{name}"
         sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         df = QUERIES[name](spark, args.sf_dir)
         df.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
-        sc.setJobGroup(None, None)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         out[name] = {"jobs": jobs, "wall_s": round(wall, 3)}
         print(f"# {name}: jobs={jobs} wall={wall:.3f}s", file=sys.stderr)
