@@ -3720,37 +3720,34 @@ _NGRAM_JACCARD_ORACLE = (
 @register("op_llm_02_ngram_jaccard", _NGRAM_JACCARD_ORACLE)
 def op_llm_02_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-02 (exact n-gram Jaccard): shingle inverted-index
-    self-join — only pairs sharing a shingle materialize. Routed
-    through the lazy strategy gate: the lossless prefix-filtered form
-    (AllPairs) takes over at 100 TB via conf/size-hint, identical
-    pair set either way."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    self-join — only pairs sharing a shingle materialize. The lossless
+    prefix-filtered form (AllPairs) is its own query,
+    op_llm_02_ngram_jaccard_prefix, with the identical pair set."""
+    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    return ngram_jaccard_pairs(load_docs(spark, sf_dir), threshold=0.4, n=3)
 
 
 @register("op_llm_02_ngram_jaccard_prefix", _NGRAM_JACCARD_ORACLE)
 def op_llm_02_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OP-LLM-02 (exact n-gram Jaccard, prefix-filtered 100 TB form):
-    the SAME oracle as op_llm_02_ngram_jaccard — AllPairs prefix
-    filtering is lossless, so the driver value-checks the scale
-    path's exact output directly. Hot shingles never enter the
+    """OP-LLM-02 (exact n-gram Jaccard, prefix-filtered form): the
+    SAME oracle as op_llm_02_ngram_jaccard — AllPairs prefix
+    filtering is lossless, so the oracle checks the prefix form's
+    exact output directly. Hot shingles never enter the
     candidate index (BASELINE.md hot-shingle A/B: 11.8 s vs the
     inverted join's 58 s on a boilerplate-header corpus)."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_prefix
 
-    return ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3, strategy="prefix"
+    return ngram_jaccard_pairs_prefix(
+        load_docs(spark, sf_dir), threshold=0.4, n=3
     )
 
 
 # Containment (overlap coefficient): |A∩B| / min(|A|,|B|) — catches
 # documents that are near-SUBSETS of another (quote inclusion,
 # boilerplate wrapping), which symmetric Jaccard under-scores. ONE
-# oracle for both physical strategies (inverted / size-oriented
-# prefix filter) — the driver itself checks their equivalence.
+# oracle for both physical forms (inverted / size-oriented prefix
+# filter) — the oracle check covers their equivalence.
 _CONTAINMENT_ORACLE = (
     "WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents), "
     "sh AS (SELECT doc_id, list_distinct(list_transform("
@@ -3770,35 +3767,34 @@ def op_llm_02_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-02 (containment): overlap coefficient
     |A∩B| / min(|A|,|B|) over shingle sets — flags near-SUBSET
     duplicates (quoted or boilerplate-wrapped documents) that
-    symmetric Jaccard under-scores; routed through the lazy strategy
-    gate (inverted-index join at bench scale, size-oriented lossless
-    prefix filter via ``spark.gexp_ml.containment.strategy=prefix``
-    or a size hint at 100 TB)."""
-    from gexp_ml_dask_spark.llm.dedup import containment_pairs_auto
+    symmetric Jaccard under-scores; inverted-index join (the
+    size-oriented lossless prefix filter is
+    op_llm_02_containment_prefix)."""
+    from gexp_ml_dask_spark.llm.dedup import containment_pairs
 
-    return containment_pairs_auto(load_docs(spark, sf_dir), threshold=0.7, n=3)
+    return containment_pairs(load_docs(spark, sf_dir), threshold=0.7, n=3)
 
 
 @register("op_llm_02_containment_prefix", _CONTAINMENT_ORACLE)
 def op_llm_02_containment_prefix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """OP-LLM-02 (containment, forced prefix strategy): the 100 TB
-    physical form registered against the SAME oracle, so the driver
-    value-checks the size-oriented prefix filter's losslessness
-    itself (mirrors the jaccard/tf-cosine prefix twins)."""
-    from gexp_ml_dask_spark.llm.dedup import containment_pairs_auto
+    """OP-LLM-02 (containment, prefix-filtered form): registered
+    against the SAME oracle, so the oracle check covers the
+    size-oriented prefix filter's losslessness (mirrors the
+    jaccard/tf-cosine prefix twins)."""
+    from gexp_ml_dask_spark.llm.dedup import containment_pairs_prefix
 
-    return containment_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.7, n=3, strategy="prefix"
+    return containment_pairs_prefix(
+        load_docs(spark, sf_dir), threshold=0.7, n=3
     )
 
 
 # Sparse term-frequency cosine between documents — the classic IR
 # doc-doc similarity, no embeddings: dot = sum(tfa*tfb) over SHARED
-# terms, norms prejoined per doc. ONE oracle for both physical
-# strategies (inverted-index join / lossless L2 prefix filter) — the
-# driver itself checks their equivalence.
+# terms, norms prejoined per doc. ONE oracle for every physical form
+# (inverted-index join / lossless L2 prefix filter / dense GEMM) — the
+# oracle check covers their equivalence.
 _TF_COSINE_ORACLE = (
     "WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term "
     "FROM documents), "
@@ -3818,61 +3814,52 @@ _TF_COSINE_ORACLE = (
 @register("op_llm_02_tf_cosine", _TF_COSINE_ORACLE)
 def op_llm_02_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-02 (TF cosine): doc-doc cosine over sparse term-
-    frequency vectors — the embedding-free IR similarity, routed
-    through the strategy gate WITH the vocabulary-density probe
-    (VERDICT r6 item 4): one bounded stats job measures posting
-    density over <=100k docs and routes dense corpora (vocab <= 4k,
-    density >= 0.2) to the exact tiled-GEMM form, Zipf corpora to the
-    inverted/prefix sparse forms. Since round 8 the probe is gated by
-    a small-corpus cheap-out (VERDICT r7 item 3): under
-    ``probe_min_docs`` (20k) documents, the inverted index finishes
-    in seconds regardless of density and the probe itself was the
-    dominant cost, so small corpora — including the driver fixtures
-    (500–5,000 docs) — route straight to the sparse resolution and
-    this entry times the gate's PRODUCTION small-input path. The
-    dense tiled-GEMM route keeps value evidence via
+    frequency vectors — the embedding-free IR similarity, routed by
+    the input (``tf_cosine_pairs_auto``): one bounded stats job
+    measures posting density over the 10k smallest-id docs and routes
+    dense corpora (vocab <= 4k, density >= 0.2) to the exact
+    tiled-GEMM form, everything else to the inverted-index form. The
+    probe is gated by a small-corpus cheap-out: under 20k documents
+    the inverted index finishes in seconds regardless of density and
+    the probe itself was the dominant cost, so small corpora —
+    including the oracle fixtures (500–5,000 docs) — go straight to
+    the inverted form and this entry times the PRODUCTION small-input
+    path. The dense tiled-GEMM route keeps value evidence via
     tests/test_llm_ops.py::test_dense_tf_cosine_identical_pairs (row
     parity vs inverted on the probe-dense fixture) and the sf1 dense
-    bench in SCALING.md §2e; op_llm_02_tf_cosine_inverted/_prefix
-    keep the sparse forms value-checked against the SAME oracle. All
-    strategies emit identical rows by construction (integer-exact
-    dot + one shared finish), pinned in tests/test_llm_ops.py."""
+    bench in SCALING.md §2e; op_llm_02_tf_cosine_inverted/_prefix keep
+    the sparse forms value-checked against the SAME oracle. All forms
+    emit identical rows by construction (integer-exact dot + one
+    shared finish), pinned in tests/test_llm_ops.py."""
     from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
 
-    return tf_cosine_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.9, probe=True
-    )
+    return tf_cosine_pairs_auto(load_docs(spark, sf_dir), threshold=0.9)
 
 
 @register("op_llm_02_tf_cosine_inverted", _TF_COSINE_ORACLE)
 def op_llm_02_tf_cosine_inverted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """OP-LLM-02 (TF cosine, forced inverted-index strategy): the
-    posting self-join form registered against the same oracle, so the
-    classic sparse route keeps independent driver evidence after the
-    auto gate started routing the (dense) driver fixtures to the
-    tiled-GEMM form."""
-    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
+    """OP-LLM-02 (TF cosine, inverted-index form): the posting
+    self-join registered against the same oracle, so the classic
+    sparse form keeps oracle evidence of its own whichever way
+    op_llm_02_tf_cosine's density probe routes."""
+    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs
 
-    return tf_cosine_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.9, strategy="inverted"
-    )
+    return tf_cosine_pairs(load_docs(spark, sf_dir), threshold=0.9)
 
 
 @register("op_llm_02_tf_cosine_prefix", _TF_COSINE_ORACLE)
 def op_llm_02_tf_cosine_prefix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """OP-LLM-02 (TF cosine, forced L2-prefix strategy): the 100 TB
-    physical form registered as its own query against the SAME
-    oracle, so the driver value-checks the prefix filter's
-    losslessness itself (mirrors op_llm_02_ngram_jaccard_prefix)."""
-    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
+    """OP-LLM-02 (TF cosine, L2-prefix-filtered form): registered as
+    its own query against the SAME oracle, so the oracle check covers
+    the prefix filter's losslessness (mirrors
+    op_llm_02_ngram_jaccard_prefix)."""
+    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_prefix
 
-    return tf_cosine_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.9, strategy="prefix"
-    )
+    return tf_cosine_pairs_prefix(load_docs(spark, sf_dir), threshold=0.9)
 
 
 @register(
@@ -4018,14 +4005,11 @@ def op_llm_02_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved into duplicate clusters via iterative connected
     components (label propagation + pointer jumping — the only
     legitimately iterative operator; see operators/graph.py). The
-    candidate stage goes through the lazy strategy gate, so at 100 TB
-    the prefix-filtered (hot-shingle-safe) form feeds the CC loop."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    candidate stage is the inverted-index n-gram Jaccard join."""
+    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
     from gexp_ml_dask_spark.operators.graph import dedup_clusters
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = ngram_jaccard_pairs(load_docs(spark, sf_dir), threshold=0.4, n=3)
     return dedup_clusters(pairs)
 
 
@@ -4061,11 +4045,11 @@ def op_llm_02_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (iterative CC over n-gram Jaccard pairs) anti-joined back onto
     the documents; the drop list is cluster-sized, so the anti-join
     broadcasts and the corpus never shuffles."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
     from gexp_ml_dask_spark.operators.graph import dedup_clusters
 
     docs = load_docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs_auto(docs, threshold=0.4, n=3)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.4, n=3)
     clusters = dedup_clusters(pairs)
     drop = clusters.filter(F.col("doc_id") != F.col("component")).select(
         "doc_id"
@@ -4099,12 +4083,10 @@ def op_llm_02_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph — the cluster-density signal that separates tight
     duplicate cliques from chains; oriented low->high edges make two
     hash joins count each triangle exactly once."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
     from gexp_ml_dask_spark.operators.graph import triangle_count
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = ngram_jaccard_pairs(load_docs(spark, sf_dir), threshold=0.4, n=3)
     return triangle_count(pairs)
 
 
@@ -4150,14 +4132,12 @@ def op_llm_02_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement to connected components (CC merges everything
     touching; LPA splits weakly-bridged groups). Three unrolled
     rounds, integer-exact oracle, deterministic tie order."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
     from gexp_ml_dask_spark.operators.graph import (
         label_propagation_communities,
     )
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = ngram_jaccard_pairs(load_docs(spark, sf_dir), threshold=0.4, n=3)
     return label_propagation_communities(pairs, n_iter=3)
 
 
@@ -4201,12 +4181,10 @@ def op_llm_02_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled power-iteration rounds; per round one edge shuffle +
     one node-sized left join (operators/graph.py pagerank). The
     oracle replays the identical closed form as unrolled CTEs."""
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs_auto
+    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
     from gexp_ml_dask_spark.operators.graph import pagerank
 
-    pairs = ngram_jaccard_pairs_auto(
-        load_docs(spark, sf_dir), threshold=0.4, n=3
-    )
+    pairs = ngram_jaccard_pairs(load_docs(spark, sf_dir), threshold=0.4, n=3)
     pr = pagerank(pairs, damping=0.85, n_iter=3)
     return pr.select(
         F.col("node").cast("long").alias("doc_id"),

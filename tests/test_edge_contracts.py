@@ -85,8 +85,17 @@ def test_resample_chunked_spine_exact_across_chunk_boundary(spark):
 
 
 # ------------------------------------------------------------- NULL text
-def test_null_text_doc_is_absent_from_shingle_pairs(spark):
-    from gexp_ml_dask_spark.llm.dedup import ngram_jaccard_pairs
+@pytest.mark.parametrize(
+    "form",
+    [
+        "ngram_jaccard_pairs",
+        "ngram_jaccard_pairs_prefix",
+        "containment_pairs",
+        "containment_pairs_prefix",
+    ],
+)
+def test_null_text_doc_is_absent_from_shingle_pairs(spark, form):
+    from gexp_ml_dask_spark.llm import dedup
 
     docs = spark.createDataFrame(
         [
@@ -96,7 +105,7 @@ def test_null_text_doc_is_absent_from_shingle_pairs(spark):
         ],
         DOCS_SCHEMA,
     )
-    pairs = ngram_jaccard_pairs(docs, threshold=0.0).collect()
+    pairs = getattr(dedup, form)(docs, threshold=0.0).collect()
     ids = {i for r in pairs for i in (r["id_a"], r["id_b"])}
     # the two EMPTY docs legitimately pair (identical degenerate
     # shingle set); the NULL doc must appear in no pair

@@ -122,14 +122,23 @@ def test_psi_drift_and_constraints_empty(spark):
 
 
 def test_dedup_empty(spark):
-    from gexp_ml_dask_spark.llm.dedup import (
-        exact_dedup,
-        minhash_lsh_pairs,
-    )
+    from gexp_ml_dask_spark.llm import dedup
 
     d = empty(spark, DOCS_SCHEMA)
-    assert_empty_frame(exact_dedup(d))
-    assert_empty_frame(minhash_lsh_pairs(d))
+    assert_empty_frame(dedup.exact_dedup(d))
+    assert_empty_frame(dedup.minhash_lsh_pairs(d))
+    # every exact pair form: (id_a, id_b, score) with no rows
+    for form in (
+        "ngram_jaccard_pairs",
+        "ngram_jaccard_pairs_prefix",
+        "containment_pairs",
+        "containment_pairs_prefix",
+        "tf_cosine_pairs",
+        "tf_cosine_pairs_prefix",
+        "tf_cosine_pairs_dense",
+        "tf_cosine_pairs_auto",
+    ):
+        assert_empty_frame(getattr(dedup, form)(d), min_cols=3)
 
 
 def test_text_ops_empty(spark):

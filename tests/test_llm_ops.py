@@ -1071,7 +1071,6 @@ def test_prefix_jaccard_block_col_forwarding(spark, hot_shingle_docs):
     restricted to the same blocking key, full-set jaccard."""
     from gexp_ml_dask_spark.llm.dedup import (
         ngram_jaccard_pairs,
-        ngram_jaccard_pairs_auto,
         ngram_jaccard_pairs_prefix,
     )
 
@@ -1082,55 +1081,10 @@ def test_prefix_jaccard_block_col_forwarding(spark, hot_shingle_docs):
     pre = _pair_set(
         ngram_jaccard_pairs_prefix(blocked, threshold=0.5, block_col="blk")
     )
-    auto = _pair_set(
-        ngram_jaccard_pairs_auto(
-            blocked, threshold=0.5, block_col="blk", strategy="prefix"
-        )
-    )
-    assert inv == pre == auto
+    assert inv == pre
     # blocking is a restriction of the unblocked pair set
     unblocked = _pair_set(ngram_jaccard_pairs(blocked, threshold=0.5))
     assert pre <= unblocked and len(pre) < len(unblocked)
-
-
-def test_jaccard_auto_gate_is_lazy_and_routes(spark, hot_shingle_docs):
-    """The strategy gate must not launch a job at plan-build time,
-    and must route per explicit arg > session conf > size_hint."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        JACCARD_STRATEGY_CONF,
-        ngram_jaccard_pairs_auto,
-    )
-
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    plan_prefix = ngram_jaccard_pairs_auto(
-        hot_shingle_docs, threshold=0.5, strategy="prefix"
-    )
-    plan_inverted = ngram_jaccard_pairs_auto(
-        hot_shingle_docs, threshold=0.5, strategy="inverted"
-    )
-    assert tracker.getJobIdsForGroup(None) == before  # lazy: no job ran
-    # the prefix plan carries the row_number Window; the inverted
-    # plan has none — a cheap structural probe of which path was built
-    assert "Window" in plan_prefix._jdf.queryExecution().toString()
-    assert "Window" not in plan_inverted._jdf.queryExecution().toString()
-
-    spark.conf.set(JACCARD_STRATEGY_CONF, "prefix")
-    try:
-        via_conf = ngram_jaccard_pairs_auto(hot_shingle_docs, threshold=0.5)
-        assert "Window" in via_conf._jdf.queryExecution().toString()
-    finally:
-        spark.conf.unset(JACCARD_STRATEGY_CONF)
-    via_hint = ngram_jaccard_pairs_auto(
-        hot_shingle_docs, threshold=0.5, size_hint=10_000_000
-    )
-    assert "Window" in via_hint._jdf.queryExecution().toString()
-    default = ngram_jaccard_pairs_auto(hot_shingle_docs, threshold=0.5)
-    assert "Window" not in default._jdf.queryExecution().toString()
-    with pytest.raises(ValueError):
-        ngram_jaccard_pairs_auto(
-            hot_shingle_docs, threshold=0.5, strategy="bogus"
-        )
 
 
 def test_remove_dup_spans_keeps_canonical_copy(spark):
@@ -1273,18 +1227,24 @@ def test_dense_tf_cosine_identical_pairs(spark, docs):
     assert inv  # non-trivial at 0.7 on the planted-dup corpus
 
 
-def test_tf_cosine_auto_gate_boundary(spark, docs, hot_shingle_docs):
+def test_tf_cosine_auto_gate_boundary(
+    spark, docs, hot_shingle_docs, monkeypatch
+):
     """The density-probed auto gate: the two fixtures straddle the
-    measured dense_min_density threshold (documents probe DENSE, the
+    measured DENSE_MIN_DENSITY threshold (documents probe DENSE, the
     Zipf hot-vocab corpus probes SPARSE), and on BOTH sides of the
     boundary the probed route emits the exact inverted-join pair set
     — flipping the gate never changes results (VERDICT r6 item 4)."""
+    from gexp_ml_dask_spark.llm import dedup
     from gexp_ml_dask_spark.llm.dedup import (
         tf_cosine_pairs,
         tf_cosine_pairs_auto,
         tf_density_stats,
     )
 
+    # PROBE_MIN_DOCS=0 defeats the small-corpus cheap-out (r8) so this
+    # test still exercises the probe itself
+    monkeypatch.setattr(dedup, "PROBE_MIN_DOCS", 0)
     dense_stats = tf_density_stats(docs)
     sparse_stats = tf_density_stats(hot_shingle_docs)
     # the fixtures actually sit on opposite sides of the gate
@@ -1298,26 +1258,27 @@ def test_tf_cosine_auto_gate_boundary(spark, docs, hot_shingle_docs):
         }
         auto = {
             (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs_auto(
-                # probe_min_docs=0 defeats the small-corpus cheap-out
-                # (r8) so this test still exercises the probe itself
-                corpus, threshold=t, probe=True, probe_min_docs=0
-            ).collect()
+            for r in tf_cosine_pairs_auto(corpus, threshold=t).collect()
         }
         assert inv == auto and inv
 
 
-def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark):
+def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark, monkeypatch):
     """A heterogeneous corpus can PROBE dense (its low-id head is
     template text) while its global vocabulary exceeds the densify
     bound — the dense route then refuses, and the gate must fall back
     to a sparse strategy instead of crashing (a misrouted gate is a
     performance miss, never a correctness one)."""
+    from gexp_ml_dask_spark.llm import dedup
     from gexp_ml_dask_spark.llm.dedup import (
         tf_cosine_pairs,
         tf_cosine_pairs_auto,
         tf_cosine_pairs_dense,
     )
+
+    monkeypatch.setattr(dedup, "PROBE_DOCS", 20)  # sees only the dense head
+    monkeypatch.setattr(dedup, "PROBE_MIN_DOCS", 0)  # defeat the cheap-out (r8)
+    monkeypatch.setattr(dedup, "DENSE_MAX_VOCAB", 50)
 
     head = [
         (i, "alpha beta gamma delta " + ("alpha beta " * (i % 3)))
@@ -1340,48 +1301,9 @@ def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark):
     }
     auto = {
         tuple(r)
-        for r in tf_cosine_pairs_auto(
-            corpus,
-            threshold=0.9,
-            probe=True,
-            probe_docs=20,  # the probe sees only the dense head
-            probe_min_docs=0,  # defeat the small-corpus cheap-out (r8)
-            dense_max_vocab=50,
-        ).collect()
+        for r in tf_cosine_pairs_auto(corpus, threshold=0.9).collect()
     }
     assert auto == inv and inv  # fell back, identical results
-
-
-def test_tf_cosine_auto_gate_lazy_and_routed(spark, hot_shingle_docs):
-    """The strategy gate must build the requested plan without
-    running a job: the prefix plan contains the suffix-norm Window,
-    the inverted plan does not; conf and size_hint both route."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        TF_COSINE_STRATEGY_CONF,
-        tf_cosine_pairs_auto,
-    )
-
-    plan_pre = tf_cosine_pairs_auto(
-        hot_shingle_docs, threshold=0.8, strategy="prefix"
-    )
-    plan_inv = tf_cosine_pairs_auto(
-        hot_shingle_docs, threshold=0.8, strategy="inverted"
-    )
-    assert "Window" in plan_pre._jdf.queryExecution().toString()
-    assert "Window" not in plan_inv._jdf.queryExecution().toString()
-
-    spark.conf.set(TF_COSINE_STRATEGY_CONF, "prefix")
-    try:
-        via_conf = tf_cosine_pairs_auto(hot_shingle_docs, threshold=0.8)
-        assert "Window" in via_conf._jdf.queryExecution().toString()
-    finally:
-        spark.conf.unset(TF_COSINE_STRATEGY_CONF)
-    via_hint = tf_cosine_pairs_auto(
-        hot_shingle_docs, threshold=0.8, size_hint=10_000_000
-    )
-    assert "Window" in via_hint._jdf.queryExecution().toString()
-    with pytest.raises(ValueError):
-        tf_cosine_pairs_auto(hot_shingle_docs, threshold=0.8, strategy="bogus")
 
 
 def test_prefix_containment_identical_pairs(spark, docs, hot_shingle_docs):
@@ -1408,6 +1330,37 @@ def test_prefix_containment_identical_pairs(spark, docs, hot_shingle_docs):
             }
             assert inv == pre, (t, inv ^ pre)
     assert inv  # hot-shingle fixture has planted near-subsets
+
+
+def test_contamination_hits_matches_decontaminate_filter(spark, docs):
+    """On a unique-doc_id corpus the hits-only probe returns exactly
+    the contaminated rows of the full operator: the same
+    (doc_id, n_contaminated_ngrams) rows as
+    ``decontaminate(...).filter("is_contaminated")``."""
+    from gexp_ml_dask_spark.llm.dedup import (
+        contamination_hits,
+        decontaminate,
+    )
+
+    assert docs.select("doc_id").distinct().count() == docs.count()
+    # the eval split's texts recur in the planted exact/near copies
+    eval_docs = docs.filter(F.col("doc_id") < 10)
+    for n in (3, 8):
+        hits = sorted(
+            tuple(r)
+            for r in contamination_hits(docs, eval_docs, n=n)
+            .select("doc_id", "n_contaminated_ngrams")
+            .collect()
+        )
+        full = sorted(
+            tuple(r)
+            for r in decontaminate(docs, eval_docs, n=n)
+            .filter("is_contaminated")
+            .select("doc_id", "n_contaminated_ngrams")
+            .collect()
+        )
+        assert hits == full, n
+        assert {i for i, _ in hits} >= {100000, 200003}, n
 
 
 def test_incremental_ingest_admission_rules(spark):
