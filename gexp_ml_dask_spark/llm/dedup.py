@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from gexp_ml_dask_spark.llm.similarity import cosine_expr
+from gexp_ml_dask_spark.operators.physical import local_table
 
 
 def exact_dedup_groups(
@@ -1077,8 +1078,8 @@ def tf_cosine_pairs_dense(
         (r[0] for r in tf.select("term").distinct().collect()),
         key=lambda v: (v is not None, v),
     )
-    vocab = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(terms)], "term string, tid int"
+    vocab = local_table(
+        spark, [(t, i) for i, t in enumerate(terms)], "term string, tid int"
     )
     tfj = tf.join(F.broadcast(vocab), "term")
     docvec = (
@@ -1134,16 +1135,15 @@ def tf_cosine_pairs_dense(
     cn = np.linalg.norm(C, axis=1)
     cn[cn == 0] = 1.0
     Cu = C / cn[:, None]
-    # per-doc cosine to its chunk centroid -> per-chunk min. Explicit
-    # schemas here and on tiles_df: an empty corpus yields empty
-    # frames, whose schema Spark cannot infer.
-    cen = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "chunk_id": cpdf["chunk_id"],
-                "tid": cpdf["tid"],
-                "_c": (cpdf["_s"] / cn[cpdf["chunk_id"].to_numpy()]),
-            }
+    # per-doc cosine to its chunk centroid -> per-chunk min.
+    cen = local_table(
+        spark,
+        list(
+            zip(
+                cpdf["chunk_id"].tolist(),
+                cpdf["tid"].tolist(),
+                (cpdf["_s"] / cn[cpdf["chunk_id"].to_numpy()]).tolist(),
+            )
         ),
         "chunk_id int, tid int, _c double",
     )
@@ -1173,10 +1173,7 @@ def tf_cosine_pairs_dense(
     tt = threshold - 1.0e-6
     ii, jj = np.where(np.triu(best >= tt))
     tiles = [(int(a), int(b)) for a, b in zip(ii, jj)]
-    tiles_df = spark.createDataFrame(
-        pd.DataFrame(tiles, columns=["ci", "cj"]).astype("int32"),
-        "ci int, cj int",
-    )
+    tiles_df = local_table(spark, tiles, "ci int, cj int")
 
     a_side = tiles_df.join(
         docvec, docvec["chunk_id"] == tiles_df["ci"]

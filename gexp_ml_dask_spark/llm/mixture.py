@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gexp_ml_dask_spark.operators.physical import local_table
+
 # Rate resolution: rates are quantized to 1/RESOLUTION steps so the
 # keep cut is an exact integer compare in every engine.
 RESOLUTION = 100_000
@@ -33,7 +35,8 @@ def sample_mixture(
     from gexp_ml_dask_spark.ml.pipeline import hash_bucket
 
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_table(
+        spark,
         [(s, int(round(w * RESOLUTION))) for s, w in sorted(weights.items())],
         f"{source_col} string, _cut long",
     )
@@ -63,7 +66,8 @@ def upsample_mixture(
     from gexp_ml_dask_spark.ml.pipeline import hash_bucket
 
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_table(
+        spark,
         [(s, int(round(w * RESOLUTION))) for s, w in sorted(weights.items())],
         f"{source_col} string, _base long",
     )

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gexp_ml_dask_spark.operators.physical import local_table
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Dot product of two array<double> columns — JVM-side fold
@@ -160,8 +162,8 @@ def knn_bruteforce_pandas(
         # empty query set is empty; np.linalg.norm on a (0,) matrix
         # would raise AxisError instead
         spark = corpus.sparkSession
-        return spark.createDataFrame(
-            [], f"query_id long, {id_col} long, cosine double, rank long"
+        return local_table(
+            spark, [], f"query_id long, {id_col} long, cosine double, rank long"
         )
     q_ids = [r[0] for r in q_rows]
     dims = {len(r[1]) for r in q_rows}
@@ -326,7 +328,8 @@ def knn_ivf(
 
     # Centroids: n_cells small vectors -> literal rows, broadcast.
     spark = corpus.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = local_table(
+        spark,
         [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
         "_cell long, _centroid array<double>",
     )
@@ -517,7 +520,7 @@ def kmeans_lloyd(
             for r in cent_df.collect()
         ]
         return F.broadcast(
-            spark.createDataFrame(rows, "cluster long, pos int, c double")
+            local_table(spark, rows, "cluster long, pos int, c double")
         )
 
     # Seed centroids: the k lowest-id vectors, numbered 0..k-1 in id
@@ -545,7 +548,8 @@ def kmeans_lloyd(
     )
     cluster_of = {v: i for i, v in enumerate(sids)}
     cent = F.broadcast(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [
                 (cluster_of[r["_sid"]], pos, float(x))
                 for r in seed_rows
@@ -670,7 +674,7 @@ def pca_power_top_component(
             (int(r["pos"]), None if r["v"] is None else float(r["v"]))
             for r in v_df.collect()
         ]
-        return F.broadcast(spark.createDataFrame(rows, "pos int, v double"))
+        return F.broadcast(local_table(spark, rows, "pos int, v double"))
 
     v = _replant(v)
     for _ in range(n_iter):

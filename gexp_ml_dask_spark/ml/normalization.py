@@ -103,6 +103,7 @@ def upper_quartile_transform(
     exact: bool = True,
     cache: bool = True,
     geomean_quantize: int | None = None,
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """UpperQuartile fit_transform: the normalized long table
     (zero genes dropped, values row-scaled by the symmetrized
@@ -117,6 +118,12 @@ def upper_quartile_transform(
     (guarded no-op when the scan already has enough splits): the
     zero-gene semi-join is broadcast, so without it every downstream
     stage inherits the scan's partitioning.
+
+    The returned plan reads the persisted frames (``kept`` and the
+    symmetrized factors), so they cannot be released here. Pass a
+    ``persisted`` list to receive them and unpersist each one once
+    the result has been materialized; otherwise only the caller's
+    ``clearCache()`` frees them.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -126,6 +133,8 @@ def upper_quartile_transform(
     kept = gexp.join(F.broadcast(keep), gene_col, "left_semi")
     if cache:
         kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
+        if persisted is not None:
+            persisted.append(kept)
     factors = _uq_factor_agg(kept, q, sample_col, value_col, exact)
     factors = symmetrize_factors(
         factors,
@@ -133,6 +142,7 @@ def upper_quartile_transform(
         "scaling_factor",
         eager=cache,
         geomean_quantize=geomean_quantize,
+        persisted=persisted,
     )
     return scale_rows(kept, factors, sample_col, value_col, "scaling_factor")
 

@@ -12,21 +12,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gexp_ml_dask_spark.operators.physical import local_table
 
-def gene_index(gexp: DataFrame, gene_col: str = "gene_id") -> DataFrame:
-    """Sorted gene dim with dense ordinal positions.
+
+def gene_index(
+    gexp: DataFrame, gene_col: str = "gene_id"
+) -> tuple[DataFrame, int]:
+    """Sorted gene dim with dense ordinal positions ``_gidx``, and its
+    row count.
 
     The feature dimension is BOUNDED by contract (~60k genes —
     functions/dask_pipeline.py:48-52 materializes it as an array
-    axis), so the dim is collected, sorted driver-side, and
-    re-broadcast as a literal DataFrame. This replaces the previous
-    ``row_number().over(Window.orderBy(...))`` form, whose empty
-    partition spec funneled the (tiny) sort through one task and
-    fired the single-partition WARN in every pipeline run. The
-    distinct is still distributed; only the dim-sized result ever
-    reaches the driver — same contract as the estimator-fit
-    collects. NULL gene ids sort first, matching the old window's
-    NULLS FIRST order."""
+    axis), so the distinct gene ids are computed distributed,
+    collected, sorted driver-side, and returned as a
+    :func:`~gexp_ml_dask_spark.operators.physical.local_table` (a
+    LocalRelation, no Python RDD). One job; only the dim-sized result
+    reaches the driver — same contract as the estimator-fit collects.
+    The count is the collected list's length, not a ``count()`` job.
+    NULL gene ids sort first, matching a window's NULLS FIRST order."""
     from pyspark.sql import types as T
 
     rows = gexp.select(gene_col).distinct().collect()
@@ -37,9 +40,10 @@ def gene_index(gexp: DataFrame, gene_col: str = "gene_id") -> DataFrame:
             T.StructField("_gidx", T.IntegerType(), False),
         ]
     )
-    return gexp.sparkSession.createDataFrame(
-        [(g, i) for i, g in enumerate(ids)], dim_schema
+    dim = local_table(
+        gexp.sparkSession, [(g, i) for i, g in enumerate(ids)], dim_schema
     )
+    return dim, len(ids)
 
 
 def assemble_vectors(
@@ -55,41 +59,50 @@ def assemble_vectors(
     (replaces the reference's to_dask_array + rechunk,
     functions/dask_pipeline.py:48-52).
 
-    Gene order is fixed by the sorted gene dim broadcast onto the
-    fact, so every sample's vector has identical layout without a
-    wide DataFrame ever materializing. One shuffle (the groupBy).
+    Two rules hold on both paths:
+
+    - rows with a NULL gene id are dropped (they have no position);
+    - ``combine_duplicates`` (default True) sums repeated
+      (sample, gene) pairs first — scipy's COO->CSR contract; without
+      it a duplicate pair corrupts the dense layout and throws in
+      SparseVector. The extra shuffle partial-aggregates map-side and
+      feeds the narrower per-sample shuffle; set False only when
+      uniqueness is guaranteed upstream.
 
     ``dense=True`` (the canonical gexp case: every kept gene present
-    for every sample, zeros explicit) stays entirely JVM-side:
-    sort_array + field extraction. ``dense=False`` handles ragged
-    input — absent pairs become sparse zeros — via an Arrow-batched
-    Python UDF building SparseVectors (the declared escape hatch; a
-    JVM sparse constructor doesn't exist in pyspark.ml.functions).
-    The indices/values arrays are column-built and sorted JVM-side
-    BEFORE the UDF, so Python only wraps two ready arrays per sample
-    (Arrow transfer, no per-cell pickle loop) — the plan shows
-    ArrowEvalPython, never BatchEvalPython (pinned in
-    tests/test_plans.py).
+    for every sample, zeros explicit) is one lazy plan with no driver
+    round trip: each sample's per-sample aggregate sorts its own
+    (gene_id, value) structs by gene id, so every sample's vector has
+    the same gene order without a global gene dim, and no wide
+    DataFrame ever materializes. One shuffle (the groupBy), entirely
+    JVM-side: sort_array + field extraction.
 
-    ``combine_duplicates`` (default True) sums repeated
-    (sample, gene) pairs first — scipy's COO->CSR contract; without
-    it a duplicate pair corrupts the dense layout and throws in
-    SparseVector. The extra shuffle partial-aggregates map-side and
-    feeds the narrower per-sample shuffle; set False only when
-    uniqueness is guaranteed upstream.
+    ``dense=False`` handles ragged input — absent pairs become sparse
+    zeros — so positions need the global dim: :func:`gene_index` (one
+    collect job; its length is the vector size) broadcast onto the
+    fact, then an Arrow-batched Python UDF builds SparseVectors (the
+    declared escape hatch; a JVM sparse constructor doesn't exist in
+    pyspark.ml.functions). The indices/values arrays are column-built
+    and sorted JVM-side BEFORE the UDF, so Python only wraps two
+    ready arrays per sample (Arrow transfer, no per-cell pickle loop)
+    — the plan shows ArrowEvalPython, never BatchEvalPython (pinned
+    in tests/test_plans.py).
     """
-    genes = gene_index(gexp, gene_col)
-    n_genes = genes.count()
-
     if combine_duplicates:
         gexp = gexp.groupBy(sample_col, gene_col).agg(
             F.sum(value_col).alias(value_col)
         )
 
-    indexed = gexp.join(F.broadcast(genes), gene_col)
-    pairs = indexed.groupBy(sample_col).agg(
+    if dense:
+        keyed, key = gexp.filter(F.col(gene_col).isNotNull()), gene_col
+    else:
+        genes, n_genes = gene_index(gexp, gene_col)
+        keyed, key = gexp.join(F.broadcast(genes), gene_col), "_gidx"
+    pairs = keyed.groupBy(sample_col).agg(
         F.sort_array(
-            F.collect_list(F.struct(F.col("_gidx"), F.col(value_col).alias("v")))
+            F.collect_list(
+                F.struct(F.col(key).alias("_k"), F.col(value_col).alias("v"))
+            )
         ).alias("_pairs")
     )
 
@@ -112,7 +125,7 @@ def assemble_vectors(
 
     flat = pairs.select(
         sample_col,
-        F.transform(F.col("_pairs"), lambda p: p["_gidx"]).alias("_idx"),
+        F.transform(F.col("_pairs"), lambda p: p["_k"]).alias("_idx"),
         F.transform(F.col("_pairs"), lambda p: p["v"].cast("double")).alias(
             "_vals"
         ),
@@ -268,8 +281,8 @@ def stratified_sample(
     else:
         w = Window.partitionBy(label_col).orderBy(F.rand(seed))
     ranked = df.withColumn("_rn", F.row_number().over(w))
-    quota_df = df.sparkSession.createDataFrame(
-        list(quota.items()), f"{label_col} string, _quota int"
+    quota_df = local_table(
+        df.sparkSession, list(quota.items()), f"{label_col} string, _quota int"
     )
     return (
         ranked.join(F.broadcast(quota_df), label_col)

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gexp_ml_dask_spark.operators.physical import local_table
+
 APPROX_ACCURACY = 10_000
 
 
@@ -349,6 +351,7 @@ def symmetrize_factors(
     out_col: str = "scaling_factor",
     eager: bool = False,
     geomean_quantize: int | None = None,
+    persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
     """OP-AGG-05 — geometric-mean symmetrization:
     ``factor / exp(mean(log(factor.replace(0,1))))``
@@ -363,7 +366,9 @@ def symmetrize_factors(
     so the window's single-partition funnel was the round-8 plan
     audit's last real flag; the persist closes the double-evaluation
     objection instead. Release is the caller's (unpersist /
-    clearCache), the same contract as global_rank.
+    clearCache), the same contract as global_rank: pass a
+    ``persisted`` list and the persisted factors frame is appended
+    to it, so the caller can unpersist it once its consumers ran.
 
     ``eager=True`` (the estimator-fit path): persist factors, run the
     geomean as a partial+final aggregate, COLLECT the scalar and
@@ -396,14 +401,19 @@ def symmetrize_factors(
             avg_log = F.floor(avg_log * scale) / scale
         return F.exp(avg_log)
 
+    from pyspark.storagelevel import StorageLevel
+
+    factors = (
+        factors.persist()
+        if eager
+        else factors.persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    if persisted is not None:
+        persisted.append(factors)
     if eager:
-        factors = factors.persist()
         gm = factors.agg(_geo(F.avg(logs))).collect()[0][0]
         return factors.withColumn(out_col, F.col(factor_col) / F.lit(gm))
 
-    from pyspark.storagelevel import StorageLevel
-
-    factors = factors.persist(StorageLevel.MEMORY_AND_DISK)
     gm_df = factors.agg(_geo(F.avg(logs)).alias("_gm"))
     return (
         factors.crossJoin(F.broadcast(gm_df))
@@ -451,8 +461,8 @@ def distinct_sorted_codes(labels: DataFrame, label_col: str = "label") -> DataFr
             T.StructField("code", T.IntegerType(), False),
         ]
     )
-    return labels.sparkSession.createDataFrame(
-        [(v, i) for i, v in enumerate(vals)], schema
+    return local_table(
+        labels.sparkSession, [(v, i) for i, v in enumerate(vals)], schema
     )
 
 

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from gexp_ml_dask_spark.operators.physical import local_table
+
 
 def connected_components(
     edges: DataFrame,
@@ -196,7 +198,7 @@ def _driver_union_find(spark, sym_rows, id_type) -> DataFrame:
             StructField("component", id_type, True),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return local_table(spark, out, schema)
 
 
 def dedup_clusters(

@@ -44,6 +44,33 @@ def unpersist_df(df: DataFrame) -> DataFrame:
     return df.unpersist()
 
 
+def local_table(spark, rows, schema) -> DataFrame:
+    """A small driver-built table as a ``LocalRelation``.
+
+    ``rows`` are tuples (or Rows) in ``schema`` order; ``schema`` is
+    a StructType or a DDL string. The rows become one pyarrow Table
+    in the driver, and ``createDataFrame`` ships it to the JVM as
+    Arrow batches. ``createDataFrame(<python list>)`` instead
+    parallelizes a pickled Python RDD, and the first job that reads
+    it starts a Python worker pool (one daemon plus one worker per
+    core) in a plan that otherwise runs no Python at all. NaN stays
+    NaN, None becomes NULL, and an empty ``rows`` keeps the schema.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Guarded round-robin repartition: widen a DataFrame to at least
     cluster parallelism, only when its current plan is narrower.

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gexp_ml_dask_spark.operators.physical import local_table
+
 
 def _report_row(name: str, viol: Column) -> list[Column]:
     return [
@@ -204,12 +206,10 @@ def psi_drift(
         # return the empty result with the contract schema instead of
         # raising TypeError on (None + None) / 2.
         key_type = dict(ev.dtypes)[key_col]
-        return ev.sparkSession.createDataFrame(
+        return local_table(
+            ev.sparkSession,
             [],
-            schema=(
-                f"{key_col} {key_type}, n_before bigint, "
-                "n_after bigint, psi double"
-            ),
+            f"{key_col} {key_type}, n_before bigint, n_after bigint, psi double",
         )
     mid = (lo + hi) / 2.0
     c = ev.groupBy(key_col, "bin").agg(

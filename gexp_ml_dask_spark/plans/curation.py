@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from gexp_ml_dask_spark.llm.dedup import exact_dedup
 from gexp_ml_dask_spark.llm.mixture import sample_mixture
 from gexp_ml_dask_spark.llm.text import quality_expr
+from gexp_ml_dask_spark.operators.physical import local_table
 
 
 def curate_documents(
@@ -280,7 +281,8 @@ def curation_funnel(
     )
 
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_table(
+        spark,
         [(s, int(round(x * RESOLUTION))) for s, x in sorted(weights.items())],
         f"{source_col} string, _cut long",
     )

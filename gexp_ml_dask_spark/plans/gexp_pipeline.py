@@ -16,19 +16,23 @@ Stages (reference line refs inline):
 
 Persist points. The reference persists its sample matrix once and
 reuses it (dask_pipeline.py:61-74, SURVEY.md §4); Spark re-runs a
-lazy plan for every action, so the port fixes three points:
+lazy plan for every action, so the port fixes two points:
 
-- ``preprocessed`` (the filtered long table) is persisted lazily: the
-  gene-dim distinct and the assemble ``groupBy`` read one evaluation.
-  It is released once the labeled table below exists.
 - The labeled per-sample table (vectors joined to labels) is built
-  ONCE by :func:`labeled_samples`, an eager local checkpoint. Label
-  encoding, the split, the scaler fit, the train persist and the eval
-  scoring all read it, so none of those actions re-runs the
-  preprocess -> assemble -> join lineage, and every read of the split
-  (the scaler fit, the cached train set) sees the same rows.
+  ONCE by :func:`labeled_samples`, an eager local checkpoint, and it
+  is the only reader of the preprocess -> assemble lineage: the dense
+  assemble needs no gene-dim collect, so that lineage runs once,
+  inside the checkpoint, and the filtered long table is not
+  persisted. Label encoding, the split, the scaler fit, the train
+  persist and the eval scoring all read the checkpoint, and every
+  read of the split (the scaler fit, the cached train set) sees the
+  same rows. The UQ step's own persists (the zero-gene-filtered
+  table and the symmetrized factors) are released as soon as the
+  checkpoint exists.
 - The scaled train set is persisted eagerly: it feeds all k folds
-  plus the eval fit.
+  plus the eval fit, and is released when the run ends.
+
+Nothing the pipeline persists outlives the call.
 """
 
 from __future__ import annotations
@@ -51,10 +55,19 @@ from gexp_ml_dask_spark.operators.physical import persist_df, unpersist_df
 from gexp_ml_dask_spark.operators.scalars import log2_plus_one
 
 
-def feature_preprocessing(gexp: DataFrame, exact: bool = True) -> DataFrame:
+def feature_preprocessing(
+    gexp: DataFrame,
+    exact: bool = True,
+    persisted: list[DataFrame] | None = None,
+) -> DataFrame:
     """UQ normalize -> mean/var quantile threshold -> log2(x+1)
-    (functions/dask_pipeline.py:30-45), one lazy long-form plan."""
-    normalized = upper_quartile_transform(gexp, exact=exact)
+    (functions/dask_pipeline.py:30-45), one lazy long-form plan.
+
+    The UQ step persists two frames the plan reads; a ``persisted``
+    list receives them (see :func:`~gexp_ml_dask_spark.ml.
+    normalization.upper_quartile_transform`) so the caller can
+    release them once the plan has been materialized."""
+    normalized = upper_quartile_transform(gexp, exact=exact, persisted=persisted)
     filtered = stat_threshold_filter(normalized, q=0.25, exact=exact)
     return log2_plus_one(filtered, "value")
 
@@ -109,11 +122,15 @@ def gexp_pipeline(
     if task not in ("classification", "regression"):
         raise ValueError("Invalid ML task!")
 
-    preprocessed = persist_df(feature_preprocessing(gexp, exact=exact))
+    uq_persisted: list[DataFrame] = []
     try:
+        preprocessed = feature_preprocessing(
+            gexp, exact=exact, persisted=uq_persisted
+        )
         data = labeled_samples(preprocessed, labels)
     finally:
-        unpersist_df(preprocessed)
+        for df in uq_persisted:
+            unpersist_df(df)
 
     if task == "classification":
         data, _ = encode_labels(data, "label", "label_idx")

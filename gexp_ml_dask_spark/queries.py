@@ -44,6 +44,7 @@ from gexp_ml_dask_spark.operators import (
 from gexp_ml_dask_spark.operators import (
     sorts as srt,
 )
+from gexp_ml_dask_spark.operators.physical import local_table
 from gexp_ml_dask_spark.sources.readers import load_events, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -3170,7 +3171,8 @@ def op_ml_09(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, _ = encode_labels(data, "label", "label_idx")
     cv_model = make_hpo_classifier("features", "label_idx").fit(data)
     best = cv_model.bestModel
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 float(best.getRegParam()),
@@ -3237,8 +3239,8 @@ def op_ml_12(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").alias("x"), F.col("l_extendedprice").alias("y")
     )
     state = incremental_linear_fit(li, "x", "y", lr=1e-4, epochs=4)
-    return spark.createDataFrame(
-        [(int(state["n"]), round(state["w"], 6))], "n BIGINT, w DOUBLE"
+    return local_table(
+        spark, [(int(state["n"]), round(state["w"], 6))], "n BIGINT, w DOUBLE"
     )
 
 
@@ -3281,7 +3283,7 @@ def op_phy_02(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     result = out.collect()
     unpersist_df(g)
-    return spark.createDataFrame(result)
+    return local_table(spark, result, out.schema)
 
 
 @register(
@@ -4886,7 +4888,7 @@ def op_llm_04_lexicon_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     token explode probed against a broadcast lexicon dim, one
     per-doc hash agg; the large-scale sentiment-analysis shape
     (lexicons are always broadcast-sized)."""
-    lex = spark.createDataFrame(_LEXICON, "term STRING, valence INT")
+    lex = local_table(spark, _LEXICON, "term STRING, valence INT")
     tok = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gexp_ml_dask_spark.datamodel import GEXP_RAW_FILE_SCHEMA
+from gexp_ml_dask_spark.operators.physical import local_table
 
 
 def load_gexp_dataset(
@@ -74,7 +75,8 @@ def load_gexp_dataset(
     # sort first, matching the old window's NULLS FIRST order.
     rows = raw.select("sample_file").distinct().collect()
     names = sorted((r[0] for r in rows), key=lambda v: (v is not None, v))
-    ids = raw.sparkSession.createDataFrame(
+    ids = local_table(
+        raw.sparkSession,
         [(f, i) for i, f in enumerate(names)],
         "sample_file string, sample_id long",
     )

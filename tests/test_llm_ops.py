@@ -960,6 +960,29 @@ def test_bigram_lm_scores_fluency_ordering(spark):
     assert abs(out[1]["avg_logp"] - round(3 / 5 * math.log(5 / 8), 6)) < 1e-9
 
 
+def test_bigram_lm_scores_score_docs_matches_score_then_join(spark, docs):
+    """Scoring a subset under the full corpus's model
+    (``score_docs=``) returns the same rows as scoring the whole
+    corpus and inner-joining the subset's ids."""
+    from gexp_ml_dask_spark.llm.text import bigram_lm_scores
+
+    subset = docs.filter(F.col("doc_id") % 3 == 0)
+    cols = ["doc_id", "n_bigrams", "avg_logp"]
+    direct = sorted(
+        tuple(r)
+        for r in bigram_lm_scores(docs, score_docs=subset).select(cols).collect()
+    )
+    joined = sorted(
+        tuple(r)
+        for r in bigram_lm_scores(docs)
+        .join(subset.select("doc_id"), "doc_id")
+        .select(cols)
+        .collect()
+    )
+    assert direct == joined
+    assert len(direct) > 10
+
+
 def test_random_projection_linear_and_deterministic(spark):
     from gexp_ml_dask_spark.llm.similarity import random_projection
 

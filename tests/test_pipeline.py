@@ -251,27 +251,90 @@ def test_pipeline_scaler_fits_on_model_train_rows(spark, gexp_data, monkeypatch)
 
 
 def test_pipeline_releases_its_persists(spark, gexp_data, monkeypatch):
-    """Every ``persist_df`` handle the pipeline creates, the CV's
-    included, is uncached when the call returns."""
+    """Every frame persisted during the pipeline run — the UQ step's
+    zero-gene-filtered table and symmetrized factors, the CV's folded
+    set and the scaled train set — is uncached when the call
+    returns."""
     from pyspark.storagelevel import StorageLevel
-
-    import gexp_ml_dask_spark.ml.cv as cv
-    from gexp_ml_dask_spark.operators.physical import persist_df
 
     gp = _pipeline_module()
     gexp, labels, _ = gexp_data
+    frame_cls = type(gexp)
     handles = []
+    persist = frame_cls.persist
 
-    def record(df, eager=False):
-        handles.append(persist_df(df, eager))
-        return handles[-1]
+    def record(self, *args, **kwargs):
+        handles.append(self)
+        return persist(self, *args, **kwargs)
 
-    monkeypatch.setattr(gp, "persist_df", record)
-    monkeypatch.setattr(cv, "persist_df", record)
+    monkeypatch.setattr(frame_cls, "persist", record)
     gp.gexp_pipeline(gexp, labels, "classification", k_folds=3, cv_parallelism=3)
 
-    assert handles
+    # kept + factors (UQ), folded (CV), train
+    assert len(handles) >= 4
+    assert [h.is_cached for h in handles] == [False] * len(handles)
     assert [h.storageLevel for h in handles] == [StorageLevel.NONE] * len(handles)
+
+
+def test_gexp_pipeline_and_ops_build_no_python_rdd(spark, gexp_data, monkeypatch):
+    """Neither benchmark workload parallelizes a Python list: the
+    pipeline (dense assemble, no driver-built gene dim) and the two
+    ``ops`` queries whose driver-built tables go through
+    ``local_table`` (the union-find result behind
+    ``op_llm_02_dup_clusters``, the mixture weights behind
+    ``op_llm_08_curation_pipeline``)."""
+    from pyspark import SparkContext
+
+    from gexp_ml_dask_spark.plans import gexp_pipeline
+    from gexp_ml_dask_spark.queries import QUERIES
+    from tests.conftest import SF_ORACLE
+
+    gexp, labels, _ = gexp_data
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    mean_cv, _, eval_score = gexp_pipeline(
+        gexp, labels, "classification", k_folds=3, cv_parallelism=3
+    )
+    assert 0.0 <= mean_cv <= 1.0 and 0.0 <= eval_score <= 1.0
+    for name in ("op_llm_02_dup_clusters", "op_llm_08_curation_pipeline"):
+        assert QUERIES[name](spark, SF_ORACLE).count() > 0, name
+
+
+def test_assemble_vectors_dense_matches_sparse(spark, gexp_data):
+    """The dense path (per-sample sort by gene id) gives every sample
+    the same vector as the sparse path (broadcast gene dim), and both
+    stated rules hold: NULL gene ids are dropped and duplicate
+    (sample, gene) pairs are summed."""
+    from gexp_ml_dask_spark.ml.pipeline import assemble_vectors
+
+    gexp, _, _ = gexp_data
+
+    def vectors(df, **kwargs):
+        return {
+            r["sample_id"]: r["features"].toArray().tolist()
+            for r in assemble_vectors(df, **kwargs).collect()
+        }
+
+    dense = vectors(gexp)
+    assert len(dense) == 80
+    assert dense == vectors(gexp, dense=False)
+
+    edge = spark.createDataFrame(
+        [
+            (0, "g1", 1.0),
+            (0, "g0", 2.0),
+            (0, None, 9.0),
+            (0, "g1", 0.5),
+            (1, "g0", 3.0),
+            (1, None, 5.0),
+            (1, "g1", 4.0),
+        ],
+        "sample_id long, gene_id string, value double",
+    )
+    assert vectors(edge) == {0: [2.0, 1.5], 1: [3.0, 4.0]}
 
 
 def test_hash_split_is_partition_layout_stable(spark):

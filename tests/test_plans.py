@@ -21,6 +21,12 @@ def plan(df) -> str:
     )
 
 
+def plan_extended(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "extended"
+    )
+
+
 @pytest.fixture(scope="module")
 def registry():
     from gexp_ml_dask_spark.queries import QUERIES
@@ -238,6 +244,74 @@ def test_fan_out_widens_narrow_input(spark):
         spark.sparkContext.defaultParallelism + 4
     )
     assert fan_out(wide) is wide
+
+
+def test_local_table_is_local_relation(spark, monkeypatch):
+    """local_table builds a LocalRelation without parallelizing a
+    Python list; NaN stays NaN, None becomes NULL, and empty rows keep
+    the schema."""
+    import math
+
+    from pyspark import SparkContext
+    from pyspark.sql import types as T
+
+    from gexp_ml_dask_spark.operators.physical import local_table
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    df = local_table(
+        spark,
+        [("a", float("nan"), [1.0]), (None, None, None), ("b", 1.5, [])],
+        "k string, v double, xs array<double>",
+    )
+    assert "LocalRelation" in plan_extended(df)
+    rows = df.collect()
+    assert rows[0]["k"] == "a" and math.isnan(rows[0]["v"])
+    assert rows[0]["xs"] == [1.0]
+    assert tuple(rows[1]) == (None, None, None)
+    assert tuple(rows[2]) == ("b", 1.5, [])
+    assert df.filter("isnan(v)").count() == 1
+    assert df.filter("v IS NULL").count() == 1
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), True),
+            T.StructField("code", T.IntegerType(), False),
+        ]
+    )
+    empty = local_table(spark, [], schema)
+    assert empty.schema == schema
+    assert empty.count() == 0
+    assert "LocalRelation" in plan_extended(empty)
+
+
+@pytest.mark.parametrize(
+    "ids", [[1, 2, 3, 10, 11], ["a", "b", "c", "x", "y"]], ids=["long", "string"]
+)
+def test_union_find_result_is_local_relation(spark, monkeypatch, ids):
+    """The driver-side union-find result (small edge lists in
+    connected_components) is a LocalRelation for long and string node
+    ids, and carries the min-member labels."""
+    from pyspark import SparkContext
+
+    from gexp_ml_dask_spark.operators.graph import connected_components
+
+    a, b, c, x, y = ids
+    id_type = "long" if isinstance(a, int) else "string"
+    edges = spark.createDataFrame(
+        [(a, b), (c, b), (y, x)], f"id_a {id_type}, id_b {id_type}"
+    )
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    comp = connected_components(edges)
+    assert "LocalRelation" in plan_extended(comp)
+    assert dict(comp.collect()) == {a: a, b: a, c: a, x: x, y: x}
+    assert comp.schema["node"].dataType == edges.schema["id_a"].dataType
 
 
 def test_ngram_shingles_materialized_below_generate(spark, registry):

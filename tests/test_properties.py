@@ -824,6 +824,30 @@ def test_global_rank_all_tied_nan_and_null(spark):
             assert got == naive, (desc, df is tied)
 
 
+def test_global_rank_total_col_equals_max_rank(spark):
+    """``total_col`` carries the frame's max rank on every row, and
+    the ranks are the same as without it, in both directions, with
+    NULL and NaN keys and ties."""
+    from gexp_ml_dask_spark.operators.sorts import global_rank
+
+    keys = [None, float("nan"), 1.0, 1.0, 2.5, None, 7.0, 1.0, 3.0, 2.5]
+    df = spark.createDataFrame(
+        [(i, k) for i, k in enumerate(keys * 20)], "id LONG, k DOUBLE"
+    )
+    for desc in (False, True):
+        plain = {
+            r["id"]: r["rank"]
+            for r in global_rank(df, "k", "id", descending=desc, n_buckets=4)
+            .collect()
+        }
+        rows = global_rank(
+            df, "k", "id", descending=desc, n_buckets=4, total_col="n"
+        ).collect()
+        assert {r["id"]: r["rank"] for r in rows} == plain, desc
+        assert {r["n"] for r in rows} == {max(plain.values())}, desc
+        assert max(plain.values()) == len(keys) * 20
+
+
 def test_global_rank_plan_has_no_global_window(spark):
     """The physical plan must not contain a window with an empty
     partition spec (the single-task funnel global_rank exists to
