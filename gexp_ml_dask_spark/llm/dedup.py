@@ -16,23 +16,26 @@ Exact pair measures (n-gram Jaccard, containment, TF-cosine) have one
 function per physical form, called by name: the inverted-index
 self-join, which every production query uses, and the lossless
 AllPairs prefix filter (Bayardo/Ma/Srikant, WWW'07), whose ``_prefix``
-queries are checked against the same oracles. Jaccard and containment
-run on one shingle-set core (:func:`_shingle_pairs`); each measure
-supplies only its ratio, output column and prefix candidate predicate.
-The one choice left at run time is TF-cosine's density probe
-(:func:`tf_cosine_pairs_auto`), made from the input.
+queries are checked against the same oracles. All three measures run
+on one core over weighted postings (:func:`_pair_core`); each measure
+(:class:`_PairMeasure`) supplies its postings, pair aggregate and
+score, prefix mass and keep bound, and prefix candidate predicate.
+TF-cosine also has a dense tiled-GEMM form; the one choice left at
+run time is its density probe (:func:`tf_cosine_pairs_auto`), made
+from the input.
 
 Persist lifecycle: the pair joins persist their postings
 (MEMORY_AND_DISK) because BOTH join sides consume them — without the
 persist each side re-runs the interpreted shingle / tokenize
-pipeline, measured 2x the whole join cost. Shingle postings are
-persisted in :func:`_shingle_pairs`, term postings in
-:func:`_tf_table`. The handles live inside the returned (lazy) plan,
-so the functions cannot unpersist eagerly; the release contract is
-the CALLER's: `df.unpersist()` on the consumed result's sources or
-`spark.catalog.clearCache()` when a batch of dedup queries completes
-(bench.py does the latter between queries). Long-lived pipelines that
-loop over corpora should scope each iteration with clearCache.
+pipeline, measured 2x the whole join cost. Sparse postings are
+persisted in :func:`_pair_core`, the dense form's term table in
+:func:`tf_cosine_pairs_dense`. The handles live inside the returned
+(lazy) plan, so the functions cannot unpersist eagerly; the release
+contract is the CALLER's: `df.unpersist()` on the consumed result's
+sources or `spark.catalog.clearCache()` when a batch of dedup queries
+completes (bench.py does the latter between queries). Long-lived
+pipelines that loop over corpora should scope each iteration with
+clearCache.
 """
 
 from __future__ import annotations
@@ -88,42 +91,135 @@ def shingles(text_col: str, n: int = 3, sep: str = " ") -> F.Column:
     return F.when(F.col(text_col).isNotNull(), F.array_distinct(grams))
 
 
-class _SetMeasure(NamedTuple):
-    """What a shingle-set similarity adds to :func:`_shingle_pairs`:
-    its output column, its score from (|A∩B|, |A|, |B|), and its
-    prefix-filter candidate predicate over (p.id, f.id, p.n, f.n,
-    slackened threshold), where ``p`` is a prefix posting and ``f`` is
-    a full posting when ``probe_full`` is set, else another prefix."""
+_Side = Callable[[str], Column]  # an aliased join side's columns
+
+
+class _PairMeasure(NamedTuple):
+    """What one exact pair similarity adds to :func:`_pair_core`.
+
+    - ``postings(docs, id_col, text_col, n, blk)``: the weighted
+      postings, one row per (``id_col``, token ``_sh``) with the doc's
+      norm ``_nsh`` and, for weighted measures, the token weight
+      ``_w`` (a set measure's weight is 1 and its norm is the set size);
+    - ``overlap(a, b)``: the aggregate over the postings a pair shares,
+      ``a``/``b`` giving each side's columns; ``ratio(ov, na, nb)``:
+      the score from that overlap and the two norms;
+    - ``mass()`` and ``keep(suf, nsh, tt)``: a posting's share of the
+      prefix mass, and whether the suffix mass from it on (rarest-first
+      order) can still reach the slackened threshold ``tt``;
+    - ``candidate(pid, fid, p, f, tt)``: the prefix candidate
+      predicate, where ``p`` is a prefix posting and ``f`` is a full
+      posting when ``probe_full`` is set, else another prefix."""
 
     out_col: str
+    postings: Callable[[DataFrame, str, str, int, list], DataFrame]
+    overlap: Callable[[_Side, _Side], Column]
     ratio: Callable[[Column, Column, Column], Column]
+    mass: Callable[[], Column]
+    keep: Callable[[Column, Column, float], Column]
     probe_full: bool
-    candidate: Callable[[Column, Column, Column, Column, float], Column]
+    candidate: Callable[[Column, Column, _Side, _Side, float], Column]
 
 
-_JACCARD = _SetMeasure(
+def _set_postings(
+    docs: DataFrame, id_col: str, text_col: str, n: int, blk: list
+) -> DataFrame:
+    """Shingle postings: (id, ``_nsh`` = set size, shingle ``_sh``).
+
+    The shingle array is materialized ONCE per document before the
+    explode. Writing size(shingles(..)) and explode(shingles(..)) in one
+    select plans the size() into a Project ABOVE the Generate,
+    re-evaluating the whole interpreted higher-order shingle expression
+    per exploded row — measured 31s -> <2s at sf0.01. The intermediate
+    projection pins the expensive expression below the Generate; size()
+    above it reads the materialized array attribute."""
+    shingled = docs.select(
+        F.col(id_col), shingles(text_col, n).alias("_shs"), *blk
+    )
+    return shingled.select(
+        F.col(id_col),
+        F.size("_shs").alias("_nsh"),
+        F.explode("_shs").alias("_sh"),
+        *blk,
+    )
+
+
+def _tf_table(
+    docs: DataFrame, id_col: str, text_col: str, blk: list
+) -> DataFrame:
+    """(id, term ``_sh``, term frequency ``_w``), empty tokens dropped."""
+    tok = docs.select(
+        F.col(id_col),
+        F.explode(F.split(F.col(text_col), " ")).alias("_sh"),
+        *blk,
+    )
+    return (
+        tok.filter(F.col("_sh") != "")
+        .groupBy(F.col(id_col), F.col("_sh"), *blk)
+        .agg(F.count(F.lit(1)).alias("_w"))
+    )
+
+
+_JACCARD = _PairMeasure(
     "jaccard",
+    _set_postings,
+    lambda a, b: F.count(F.lit(1)),
     lambda ni, na, nb: ni / (na + nb - ni),
+    lambda: F.lit(1),
+    # a doc keeps its rarest shingles while >= floor(t'n) remain from
+    # there on: the prefix of length n - floor(t'n) + 1
+    lambda suf, nsh, tt: suf >= F.floor(F.lit(tt) * nsh),
     False,
     # prefix x prefix, plus the size filter: J <= min(na,nb)/max(na,nb),
     # so qualifying pairs satisfy least >= (t - eps) * greatest
-    lambda pid, fid, pn, fn, tt: (pid < fid)
-    & (F.least(pn, fn) >= tt * F.greatest(pn, fn)),
+    lambda pid, fid, p, f, tt: (pid < fid)
+    & (
+        F.least(p("_nsh"), f("_nsh"))
+        >= tt * F.greatest(p("_nsh"), f("_nsh"))
+    ),
 )
 
-_CONTAINMENT = _SetMeasure(
-    "containment",
-    lambda ni, na, nb: ni / F.least(na, nb),
-    True,
+_CONTAINMENT = _JACCARD._replace(
+    out_col="containment",
+    ratio=lambda ni, na, nb: ni / F.least(na, nb),
+    probe_full=True,
     # the theorem speaks about the SMALLER doc's prefix, probed by the
     # full postings of every doc at least as large
-    lambda pid, fid, pn, fn, tt: (pid != fid) & (pn <= fn),
+    candidate=lambda pid, fid, p, f, tt: (pid != fid)
+    & (p("_nsh") <= f("_nsh")),
+)
+
+_COSINE = _PairMeasure(
+    "cosine",
+    # tf weights with the doc's L2 norm; integer tf products keep the
+    # dot exact, so only the final ratio needs rounding
+    lambda docs, id_col, text_col, n, blk: _tf_table(
+        docs, id_col, text_col, blk
+    ).withColumn(
+        "_nsh",
+        F.sqrt(
+            F.sum(F.col("_w") * F.col("_w")).over(Window.partitionBy(id_col))
+        ),
+    ),
+    lambda a, b: F.sum(a("_w") * b("_w")),
+    lambda dot, na, nb: dot / (na * nb),
+    lambda: (F.col("_w") / F.col("_nsh")) ** 2,
+    # L2 suffix bound; the squared slack also covers float accumulation
+    # in the window sum
+    lambda suf, nsh, tt: suf >= F.lit(tt * tt - 1.0e-9),
+    False,
+    # PPJoin-style positional bound: cos <= s_a(w) * s_b(w) at the FIRST
+    # shared term w, and a qualifying pair is always generated via that
+    # w, so edges whose product falls short are only candidate
+    # DUPLICATES, never a pair's sole surviving edge
+    lambda pid, fid, p, f, tt: (pid < fid)
+    & (p("_suf") * f("_suf") >= F.lit(tt * tt * tt * tt - 1.0e-9)),
 )
 
 
-def _shingle_pairs(
+def _pair_core(
     docs: DataFrame,
-    measure: _SetMeasure,
+    measure: _PairMeasure,
     threshold: float,
     n: int,
     id_col: str,
@@ -131,118 +227,85 @@ def _shingle_pairs(
     block_col: str | None,
     prefix: bool,
 ) -> DataFrame:
-    """The one shingle-set pair core behind Jaccard and containment:
-    shingle, size, explode, persist; then either the inverted-index
-    self-join counting |A∩B| per pair sharing a shingle
-    (``prefix=False``), or the AllPairs prefix filter — rarest-first
-    prefixes of length ``n_sh - floor((t - eps) * n_sh) + 1``, the
-    measure's candidate predicate, and one exact ``array_intersect``
-    verify per candidate (``prefix=True``). Both end in
+    """The one exact pair core behind Jaccard, containment and
+    TF-cosine: build the measure's weighted postings and persist them;
+    then either the inverted-index self-join over every pair sharing a
+    token (``prefix=False``), or the AllPairs prefix filter
+    (``prefix=True``): rank each doc's postings rarest-first, keep the
+    prefix whose suffix mass can still reach the slackened threshold,
+    join prefixes under the measure's candidate predicate, and verify
+    each candidate against both docs' full postings. Both forms
+    aggregate the measure's overlap per pair and end in
     ``round(ratio, 6) >= threshold`` on (id_a, id_b, out_col) with
     id_a < id_b. ``block_col`` additionally requires candidates to
-    agree on a blocking key."""
+    agree on a blocking key.
+
+    Precondition: ``id_col`` is unique. Postings are keyed by id, so
+    duplicate ids merge TF vectors and mix shingle sets."""
     blk = [F.col(block_col)] if block_col else []
 
-    def same(x: str, y: str, col: str) -> Column:
-        return F.col(f"{x}.{col}") == F.col(f"{y}.{col}")
+    def side(x: str) -> _Side:
+        return lambda c: F.col(f"{x}.{c}")
 
-    shingled = docs.select(
-        F.col(id_col), shingles(text_col, n).alias("_shs"), *blk
-    )
-    if prefix:
-        # The verify step re-reads each doc's whole set, so the SETS
-        # are the shared table; the postings explode from the cache.
-        table = shingled.withColumn("_nsh", F.size("_shs"))
-    else:
-        # Materialize the shingle array ONCE per document before the
-        # explode. Writing size(shingles(..)) and explode(shingles(..))
-        # in one select plans the size() into a Project ABOVE the
-        # Generate, re-evaluating the whole interpreted higher-order
-        # shingle expression per exploded row — measured 31s -> <2s at
-        # sf0.01. The intermediate projection pins the expensive
-        # expression below the Generate; size() above it reads the
-        # materialized array attribute.
-        table = shingled.select(
-            F.col(id_col),
-            F.size("_shs").alias("_nsh"),
-            F.explode("_shs").alias("_sh"),
-            *blk,
-        )
+    def same(x: str, y: str, col: str) -> Column:
+        return side(x)(col) == side(y)(col)
+
+    a, b = side("a"), side("b")
     # Both join sides read this table; MEMORY_AND_DISK spills rather
     # than OOMs (see the module docstring for the release contract).
-    table = table.persist(StorageLevel.MEMORY_AND_DISK)
-
+    table = measure.postings(docs, id_col, text_col, n, blk).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     if not prefix:
-        a, b = table.alias("a"), table.alias("b")
-        cond = same("a", "b", "_sh") & (
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-        )
+        cond = same("a", "b", "_sh") & (a(id_col) < b(id_col))
         if block_col:
             cond = cond & same("a", "b", block_col)
-        scored = (
-            a.join(b, cond)
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.col("a._nsh").alias("_na"),
-                F.col("b._nsh").alias("_nb"),
-            )
-            .agg(F.count(F.lit(1)).alias("_ni"))
-        )
-        ni = F.col("_ni")
+        joined = table.alias("a").join(table.alias("b"), cond)
     else:
-        eps = 1.0e-6  # round(score, 6) >= t admits score >= t - 5e-7
-        postings = table.select(
-            id_col, "_nsh", F.explode("_shs").alias("_sh"), *blk
+        tt = threshold - 1.0e-6  # round(score, 6) >= t admits t - 5e-7
+        freq = table.groupBy("_sh").agg(F.count(F.lit(1)).alias("_df"))
+        # Suffix mass from each posting on, rarest-first: a running sum
+        # in the reversed order (one pass, not a per-row re-sum).
+        w = (
+            Window.partitionBy(id_col)
+            .orderBy(F.desc("_df"), F.desc("_sh"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        freq = postings.groupBy("_sh").agg(F.count(F.lit(1)).alias("_df"))
-        # Rank each doc's shingles rarest-first; keep only the prefix
-        # that any qualifying partner must intersect. The bound uses
-        # the slackened threshold (t - eps), so it covers the
-        # round(., 6) semantics for documents of ANY size.
-        w = Window.partitionBy(id_col).orderBy("_df", "_sh")
         pre = (
-            postings.join(freq, "_sh")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(
-                F.col("_rn")
-                <= F.col("_nsh")
-                - F.floor((F.lit(threshold) - F.lit(eps)) * F.col("_nsh"))
-                + 1
-            )
-            .select(id_col, "_nsh", "_sh", *blk)
+            table.join(freq, "_sh")
+            .withColumn("_suf", F.sum(measure.mass()).over(w))
+            .filter(measure.keep(F.col("_suf"), F.col("_nsh"), tt))
+            .select(id_col, "_nsh", "_sh", "_suf", *blk)
         )
-        p = pre.alias("p")
-        f = (postings if measure.probe_full else pre).alias("f")
-        pid, fid = F.col(f"p.{id_col}"), F.col(f"f.{id_col}")
+        p, f = side("p"), side("f")
         cond = same("p", "f", "_sh") & measure.candidate(
-            pid, fid, F.col("p._nsh"), F.col("f._nsh"), threshold - eps
+            p(id_col), f(id_col), p, f, tt
         )
         if block_col:
             cond = cond & same("p", "f", block_col)
         cand = (
-            p.join(f, cond)
+            pre.alias("p")
+            .join((table if measure.probe_full else pre).alias("f"), cond)
             .select(
-                F.least(pid, fid).alias("id_a"),
-                F.greatest(pid, fid).alias("id_b"),
+                F.least(p(id_col), f(id_col)).alias("id_a"),
+                F.greatest(p(id_col), f(id_col)).alias("id_b"),
             )
             .distinct()
         )
-        sa, sb = (
-            table.select(
-                F.col(id_col).alias(f"id_{s}"),
-                F.col("_shs").alias(f"_shs_{s}"),
-                F.col("_nsh").alias(f"_n{s}"),
-            )
-            for s in "ab"
+        joined = cand.join(table.alias("a"), F.col("id_a") == a(id_col)).join(
+            table.alias("b"),
+            (F.col("id_b") == b(id_col)) & same("a", "b", "_sh"),
         )
-        scored = cand.join(sa, "id_a").join(sb, "id_b")
-        ni = F.size(F.array_intersect("_shs_a", "_shs_b"))
+    scored = joined.groupBy(
+        a(id_col).alias("id_a"),
+        b(id_col).alias("id_b"),
+        a("_nsh").alias("_na"),
+        b("_nsh").alias("_nb"),
+    ).agg(measure.overlap(a, b).alias("_ni"))  # |A∩B|, or the tf dot
     out = measure.out_col
+    score = measure.ratio(F.col("_ni"), F.col("_na"), F.col("_nb"))
     return (
-        scored.withColumn(
-            out, F.round(measure.ratio(ni, F.col("_na"), F.col("_nb")), 6)
-        )
+        scored.withColumn(out, F.round(score, 6))
         .filter(F.col(out) >= threshold)
         .select("id_a", "id_b", out)
     )
@@ -274,7 +337,7 @@ def ngram_jaccard_pairs(
     shuffle join stays in codegen, and that dominates the saved
     exchange.
     """
-    return _shingle_pairs(
+    return _pair_core(
         docs, _JACCARD, threshold, n, id_col, text_col, block_col, False
     )
 
@@ -299,8 +362,8 @@ def ngram_jaccard_pairs_prefix(
     shingle within each one's first ``n_sh - ceil(t*n_sh) + 1``
     shingles in that order. Only prefixes enter the index, so hot
     (most frequent) shingles land in the suffix and never join;
-    candidates are then verified with one exact ``array_intersect``
-    per pair against the full shingle arrays.
+    candidates are then verified exactly against both docs' full
+    postings.
 
     Guarantees recall 1.0 (it is a theorem, not an LSH probability),
     so this is safe to substitute anywhere the DuckDB oracle checks
@@ -322,13 +385,13 @@ def ngram_jaccard_pairs_prefix(
     shrinks the candidate space further.
 
     Cost: the extra global frequency pass is one partial-agg shuffle;
-    the verify joins are shuffles on doc_id (candidate-count sized,
-    not pair-fanout sized). On the bench corpus the inverted join is
-    faster on wall-clock (see BASELINE.md "prefix vs inverted
-    Jaccard" A/B) because it has no hot shingles; on a
+    the verify joins are shuffles on doc_id (sized by the candidates'
+    postings, not by the pair fan-out). On the bench corpus the
+    inverted join is faster on wall-clock (see BASELINE.md "prefix vs
+    inverted Jaccard" A/B) because it has no hot shingles; on a
     boilerplate-header corpus the prefix form wins (11.8 s vs 58 s).
     """
-    return _shingle_pairs(
+    return _pair_core(
         docs, _JACCARD, threshold, n, id_col, text_col, block_col, True
     )
 
@@ -348,7 +411,7 @@ def containment_pairs(
     containment 1.0. Identical inverted-index pair machinery to
     :func:`ngram_jaccard_pairs`; only the final ratio differs.
     """
-    return _shingle_pairs(
+    return _pair_core(
         docs, _CONTAINMENT, threshold, n, id_col, text_col, None, False
     )
 
@@ -372,14 +435,14 @@ def containment_pairs_prefix(
     contradiction. So the candidate index holds each doc's own-size
     prefix (rarest shingles first — hot shingles never enter), probed
     by FULL postings of docs at least as large; candidates are then
-    verified exactly with one array_intersect per pair. Identical
+    verified exactly against both docs' full postings. Identical
     pair parity vs the inverted form is pinned in
     tests/test_llm_ops.py::test_prefix_containment_identical_pairs.
 
     Same cost profile (and the same dense-corpus boundary) as
     :func:`tf_cosine_pairs_prefix` / :func:`ngram_jaccard_pairs_prefix`.
     """
-    return _shingle_pairs(
+    return _pair_core(
         docs, _CONTAINMENT, threshold, n, id_col, text_col, None, True
     )
 
@@ -773,72 +836,6 @@ def duplicate_ngram_spans(
     )
 
 
-def _tf_table(
-    docs: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """(doc, term, tf) postings with empty tokens dropped, persisted
-    (both the pair join and the norm pass consume it — see module
-    docstring for the release contract)."""
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
-    )
-    return (
-        tok.filter(F.col("term") != "")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-
-def _tf_cosine_finish(
-    dot: DataFrame, tf: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared tail for BOTH tf-cosine strategies: join per-doc norms
-    onto the integer (id_a, id_b, dot) table, round, filter. ONE
-    definition so the cross-strategy bit-parity the shared driver
-    oracle depends on is structural, not copy-paste. The norm table
-    is per-DOC (it scales with the corpus), so there is no static
-    broadcast hint — AQE picks broadcast-hash only while the side is
-    actually small (design rule: never force a broadcast on a side
-    that scales with the data)."""
-    nrm = tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("nrm")
-    )
-    na = nrm.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("_na"))
-    nb = nrm.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("_nb"))
-    return (
-        dot.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn(
-            "cosine", F.round(F.col("dot") / (F.col("_na") * F.col("_nb")), 6)
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def _tf_cosine_verify(
-    cand: DataFrame, tf: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact cosine for candidate (id_a, id_b) pairs: integer tf dot
-    over shared terms, then the shared :func:`_tf_cosine_finish`
-    tail — both strategies emit bit-identical rows by construction."""
-    ta = tf.select(
-        F.col("doc_id").alias("id_a"), "term", F.col("tf").alias("_tfa")
-    )
-    tb = tf.select(
-        F.col("doc_id").alias("id_b"), "term", F.col("tf").alias("_tfb")
-    )
-    dot = (
-        cand.join(ta, "id_a")
-        .join(tb, ["id_b", "term"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("_tfa") * F.col("_tfb")).alias("dot"))
-    )
-    return _tf_cosine_finish(dot, tf, threshold)
-
-
 def tf_cosine_pairs(
     docs: DataFrame,
     threshold: float = 0.9,
@@ -848,10 +845,10 @@ def tf_cosine_pairs(
     """OP-LLM-02 (TF cosine, inverted-index form): doc-doc cosine
     over sparse term-frequency vectors — the embedding-free IR
     similarity. The dot product only materializes for pairs SHARING a
-    term (inverted-index self-join on the tf postings); the per-doc
-    norm table (corpus-sized — one row per doc) joins back without a
-    static broadcast hint, AQE decides. Integer tf products keep the
-    dot exact, so only the final ratio needs rounding.
+    term (inverted-index self-join on the tf postings of the shared
+    :func:`_pair_core`); each posting carries its doc's L2 norm, so no
+    norm table joins back. Integer tf products keep the dot exact, so
+    only the final ratio needs rounding.
 
     Cost is sum over terms of df(term)^2 — on a small-vocabulary or
     boilerplate-heavy corpus every posting is hot and the join fans
@@ -859,20 +856,9 @@ def tf_cosine_pairs(
     on a default-heap session). :func:`tf_cosine_pairs_prefix` is the
     lossless hot-vocabulary form; :func:`tf_cosine_pairs_auto` routes
     dense corpora to :func:`tf_cosine_pairs_dense`."""
-    tf = _tf_table(docs, id_col, text_col)
-    a, b = tf.alias("a"), tf.alias("b")
-    dot = (
-        a.join(
-            b,
-            (F.col("a.term") == F.col("b.term"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.sum(F.col("a.tf") * F.col("b.tf")).alias("dot"))
+    return _pair_core(
+        docs, _COSINE, threshold, 0, id_col, text_col, None, False
     )
-    return _tf_cosine_finish(dot, tf, threshold)
 
 
 def tf_cosine_pairs_prefix(
@@ -935,54 +921,9 @@ def tf_cosine_pairs_prefix(
     tiled GEMM (:func:`tf_cosine_pairs_dense`), not exact sparse
     cosine — which is why :func:`tf_cosine_pairs_auto` never routes
     here; call this form by name."""
-    tt = threshold - 1.0e-6
-    tf = _tf_table(docs, id_col, text_col)
-    nrm = tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("_nrm")
+    return _pair_core(
+        docs, _COSINE, threshold, 0, id_col, text_col, None, True
     )
-    freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-    weighted = (
-        tf.join(nrm, "doc_id")
-        .join(freq, "term")
-        .withColumn("_w2", (F.col("tf") / F.col("_nrm")) ** 2)
-    )
-    wsuf = (
-        Window.partitionBy("doc_id")
-        .orderBy("_df", "term")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    prefix = (
-        weighted.withColumn("_suf_sq", F.sum("_w2").over(wsuf))
-        .filter(F.col("_suf_sq") >= F.lit(tt * tt - 1.0e-9))
-        .select("doc_id", "term", "_suf_sq")
-    )
-    # Two-sided prefix x prefix self-join (first-shared-term bound
-    # above): ordered pair direction comes free from doc_id <, and
-    # hot full-posting lists never enter either side. The extra
-    # suffix-product predicate is the PPJoin-style positional bound:
-    # cos <= s_a(w) * s_b(w) at the FIRST shared term w, and a
-    # qualifying pair is always (re)generated via that w — where the
-    # product must clear tt — so dropping edges whose product falls
-    # short prunes only candidate DUPLICATES, never a pair's sole
-    # surviving edge (slack mirrors the prefix filter's).
-    p, f = prefix.alias("p"), prefix.alias("f")
-    cand = (
-        p.join(
-            f,
-            (F.col("p.term") == F.col("f.term"))
-            & (F.col("p.doc_id") < F.col("f.doc_id"))
-            & (
-                F.col("p._suf_sq") * F.col("f._suf_sq")
-                >= F.lit(tt * tt * tt * tt - 1.0e-9)
-            ),
-        )
-        .select(
-            F.col("p.doc_id").alias("id_a"),
-            F.col("f.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    return _tf_cosine_verify(cand, tf, threshold)
 
 
 def tf_cosine_pairs_dense(
@@ -1032,8 +973,8 @@ def tf_cosine_pairs_dense(
     4. surviving tiles -> ``applyInPandas`` computing the integer tf
        dot as a float64 GEMM (exact below 2^53) with a slack
        prefilter ``dot/(|a||b|) >= t - 1e-6``;
-    5. the canonical :func:`_tf_cosine_finish` joins the SPARK-side
-       norms, rounds and filters — so admission rounding is
+    5. the SPARK-side norms join back and the sparse forms' own
+       cosine ratio rounds and filters — so admission rounding is
        bit-identical to the other strategies by construction (the
        UDF only ever emits a slack superset plus the exact integer
        dot).
@@ -1059,13 +1000,19 @@ def tf_cosine_pairs_dense(
     from gexp_ml_dask_spark.operators.sorts import global_rank
 
     spark = docs.sparkSession
-    tf = _tf_table(docs, id_col, text_col)
+    # Persisted: the size gate, the vocab collect and the vectors all
+    # read it.
+    tf = (
+        _tf_table(docs, id_col, text_col, [])
+        .toDF("doc_id", "term", "tf")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # Distributed size gate FIRST (nothing dim-sized touches the
     # driver until the max_vocab contract holds), then the bounded
     # vocab is sorted driver-side and re-broadcast as a literal dim —
     # not a partitionless row_number window (single-task sort +
-    # single-partition WARN). tf is persisted by _tf_table, so the
-    # second action re-reads the cached term table, not the corpus.
+    # single-partition WARN). tf is persisted, so the second action
+    # re-reads the cached term table, not the corpus.
     v_size = tf.select("term").distinct().count()
     if v_size > max_vocab:
         tf.unpersist()
@@ -1246,7 +1193,24 @@ def tf_cosine_pairs_dense(
     dot = data.groupBy("ci", "cj").applyInPandas(
         _tile, schema="id_a long, id_b long, dot double"
     )
-    return _tf_cosine_finish(dot, tf, threshold)
+    # The per-doc norms (docvec, persisted) scale with the corpus, so
+    # there is no static broadcast hint; AQE picks broadcast-hash only
+    # while they are actually small. The score is the sparse forms' own
+    # ratio.
+    na, nb = (
+        docvec.select(
+            F.col("doc_id").alias(f"id_{s}"), F.col("_nrm").alias(f"_n{s}")
+        )
+        for s in "ab"
+    )
+    cos = _COSINE.ratio(F.col("dot"), F.col("_na"), F.col("_nb"))
+    return (
+        dot.join(na, "id_a")
+        .join(nb, "id_b")
+        .withColumn("cosine", F.round(cos, 6))
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    )
 
 
 # Density-probe settings of tf_cosine_pairs_auto. Module constants

@@ -45,33 +45,6 @@ def r2_score(pred: DataFrame, label_col: str = "label", pred_col: str = "predict
     return r2_score_df(pred, label_col, pred_col).collect()[0]["r2"]
 
 
-def rmse_df(pred: DataFrame, label_col: str = "label", pred_col: str = "prediction") -> DataFrame:
-    """Root-mean-squared error as a one-row DataFrame (single
-    aggregate; the sqrt is driver-free column arithmetic)."""
-    err = F.col(label_col) - F.col(pred_col)
-    return pred.agg(F.round(F.sqrt(F.avg(err * err)), 6).alias("rmse"))
-
-
-def mae_df(pred: DataFrame, label_col: str = "label", pred_col: str = "prediction") -> DataFrame:
-    """Mean absolute error as a one-row DataFrame."""
-    err = F.abs(F.col(label_col) - F.col(pred_col))
-    return pred.agg(F.round(F.avg(err), 6).alias("mae"))
-
-
-def _round6_half_away(x: float) -> float:
-    """6dp HALF_UP rounding — the one rounding rule every contract
-    surface uses (Spark ``F.round`` / DuckDB ``round`` are both
-    half-away-from-zero). Python's built-in ``round`` is banker's
-    (half-even); an s/c block mean can never land on an exact 6dp
-    tie in binary floats, so the two only *theoretically* diverge —
-    but the PAVA UDFs must still state the same contract as the
-    relational surfaces. Decimal quantize over the shortest repr
-    matches Spark/DuckDB on every representable double."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
-
-
 def isotonic_calibrate(
     scored: DataFrame,
     group_col: str = "model",

@@ -1,54 +1,27 @@
 """Model wrappers (SURVEY.md §2.10, OP-ML-07/08/09).
 
 The reference trains XGBoost (functions/dask_pipeline.py:79-104) and
-LightGBM (cluster_default_benchmark.py:137-143); neither package is
-in this container, so the primary path is MLlib (RandomForest for
-multiclass — MLlib's GBTClassifier is binary-only — GBTRegressor for
-regression) with distributed XGBoost used automatically when
-``xgboost.spark`` is importable.
+LightGBM (cluster_default_benchmark.py:137-143). Both map onto MLlib
+here: RandomForest for multiclass classification (MLlib's
+GBTClassifier is binary-only), GBTRegressor for regression, and
+OneVsRest over GBTClassifier for the LightGBM variant.
+``CLASSIFIER_ENGINE`` and ``LIGHTGBM_ENGINE`` are the provenance
+literals OP-ML-07/08 stamp on their outputs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-try:  # gated: not in the v1 container, available on real clusters
-    from xgboost.spark import SparkXGBClassifier, SparkXGBRegressor
-
-    HAS_XGBOOST = True
-except Exception:  # pragma: no cover - absent dependency
-    SparkXGBClassifier = SparkXGBRegressor = None
-    HAS_XGBOOST = False
-
-
-def classifier_engine() -> str:
-    """Provenance literal for OP-ML-07 outputs: which backend the
-    gated import actually selected in this environment."""
-    return "xgboost.spark" if HAS_XGBOOST else "mllib.random_forest"
-
-
-def lightgbm_engine() -> str:
-    """Provenance literal for OP-ML-08 outputs."""
-    try:  # pragma: no cover - synapseml absent in this container
-        import synapse.ml.lightgbm  # noqa: F401
-
-        return "synapseml.lightgbm"
-    except Exception:
-        return "mllib.onevsrest_gbt"
+CLASSIFIER_ENGINE = "mllib.random_forest"
+LIGHTGBM_ENGINE = "mllib.onevsrest_gbt"
 
 
 def make_classifier(
     features_col: str = "features",
     label_col: str = "label_idx",
     seed: int = 42,
-    prefer_xgboost: bool = True,
 ):
-    """OP-ML-07 (classification): XGBClassifier twin. MLlib fallback
-    is RandomForest (multiclass-capable, GBDT-family)."""
-    if prefer_xgboost and HAS_XGBOOST:
-        return SparkXGBClassifier(
-            features_col=features_col, label_col=label_col, random_state=seed
-        )
+    """OP-ML-07 (classification): the XGBClassifier twin, MLlib's
+    RandomForest (multiclass-capable, GBDT-family)."""
     from pyspark.ml.classification import RandomForestClassifier
 
     return RandomForestClassifier(
@@ -60,13 +33,9 @@ def make_regressor(
     features_col: str = "features",
     label_col: str = "label",
     seed: int = 42,
-    prefer_xgboost: bool = True,
 ):
-    """OP-ML-07 (regression): XGBRegressor twin / MLlib GBTRegressor."""
-    if prefer_xgboost and HAS_XGBOOST:
-        return SparkXGBRegressor(
-            features_col=features_col, label_col=label_col, random_state=seed
-        )
+    """OP-ML-07 (regression): the XGBRegressor twin, MLlib's
+    GBTRegressor."""
     from pyspark.ml.regression import GBTRegressor
 
     return GBTRegressor(featuresCol=features_col, labelCol=label_col, seed=seed)
@@ -79,27 +48,19 @@ def make_lightgbm_classifier(
     max_iter: int = 10,
 ):
     """OP-ML-08 — LightGBM variant (`cluster_default_benchmark.py:
-    137-143,210-216` DaskLGBMClassifier/LGBMClassifier). SynapseML's
-    LightGBMClassifier when importable (real clusters); fallback is
-    OneVsRest over MLlib's binary GBTClassifier — a true gradient-
-    boosted-tree multiclass path, unlike the RandomForest stand-in
-    used for OP-ML-07."""
-    try:  # pragma: no cover - synapseml absent in this container
-        from synapse.ml.lightgbm import LightGBMClassifier
+    137-143,210-216` DaskLGBMClassifier/LGBMClassifier): OneVsRest
+    over MLlib's binary GBTClassifier — a true gradient-boosted-tree
+    multiclass path, unlike the RandomForest stand-in used for
+    OP-ML-07."""
+    from pyspark.ml.classification import GBTClassifier, OneVsRest
 
-        return LightGBMClassifier(featuresCol=features_col, labelCol=label_col)
-    except Exception:
-        from pyspark.ml.classification import GBTClassifier, OneVsRest
-
-        gbt = GBTClassifier(
-            featuresCol=features_col,
-            labelCol=label_col,
-            seed=seed,
-            maxIter=max_iter,
-        )
-        return OneVsRest(
-            classifier=gbt, featuresCol=features_col, labelCol=label_col
-        )
+    gbt = GBTClassifier(
+        featuresCol=features_col,
+        labelCol=label_col,
+        seed=seed,
+        maxIter=max_iter,
+    )
+    return OneVsRest(classifier=gbt, featuresCol=features_col, labelCol=label_col)
 
 
 def make_hpo_classifier(
@@ -152,20 +113,3 @@ def make_hpo_classifier(
         parallelism=parallelism,
         seed=seed,
     )
-
-
-def evaluate_accuracy(predictions: DataFrame, label_col: str = "label_idx") -> float:
-    """OP-ML-10 — MLlib evaluator path (SQL twin in metrics.py)."""
-    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
-
-    return MulticlassClassificationEvaluator(
-        labelCol=label_col, predictionCol="prediction", metricName="accuracy"
-    ).evaluate(predictions)
-
-
-def evaluate_r2(predictions: DataFrame, label_col: str = "label") -> float:
-    from pyspark.ml.evaluation import RegressionEvaluator
-
-    return RegressionEvaluator(
-        labelCol=label_col, predictionCol="prediction", metricName="r2"
-    ).evaluate(predictions)

@@ -391,28 +391,6 @@ def tmm_factors(
     )
 
 
-def tmm_transform(
-    gexp: DataFrame,
-    log_ratio_trim: float = 0.3,
-    abs_expr_trim: float = 0.05,
-    sample_col: str = "sample_id",
-    gene_col: str = "gene_id",
-    value_col: str = "value",
-    exact: bool = True,
-    cache: bool = True,
-) -> DataFrame:
-    """TMM fit_transform (fsn.py:114-115): values row-scaled by the
-    symmetrized TMM factor. Transform does NOT drop genes — the
-    reference's transform multiplies the input as-is."""
-    if cache:
-        gexp = fan_out(gexp)
-    factors = tmm_factors(
-        gexp, log_ratio_trim, abs_expr_trim, sample_col, gene_col, value_col,
-        exact, cache,
-    )
-    return scale_rows(gexp, factors, sample_col, value_col, "scaling_factor")
-
-
 def quantile_normalize(
     gexp: DataFrame,
     sample_col: str = "sample_id",

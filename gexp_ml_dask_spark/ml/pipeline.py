@@ -219,29 +219,6 @@ def fit_standard_scaler(
     ).fit(train)
 
 
-def standard_scale_long(
-    gexp: DataFrame,
-    stats: DataFrame | None = None,
-    sample_col: str = "sample_id",
-    gene_col: str = "gene_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """OP-ML-05 (long-form twin) — (x - μ_g) / σ_g per gene with the
-    sklearn σ=0 -> 1 guard; ``stats`` (per-gene mean/std from a
-    train split) may be precomputed to scale a held-out set."""
-    if stats is None:
-        from gexp_ml_dask_spark.operators.aggregates import per_gene_scaling_stats
-
-        stats = per_gene_scaling_stats(gexp, gene_col, value_col)
-    sd = F.col("std_value")
-    safe = F.when(sd.isNull() | (sd == 0), F.lit(1.0)).otherwise(sd)
-    return (
-        gexp.join(F.broadcast(stats), gene_col)
-        .withColumn(value_col, (F.col(value_col) - F.col("mean_value")) / safe)
-        .drop("mean_value", "std_value")
-    )
-
-
 def stratified_sample(
     df: DataFrame,
     n_per_total: int,

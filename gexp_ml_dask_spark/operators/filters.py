@@ -36,25 +36,6 @@ def drop_zero_genes(gexp: DataFrame, gene_col: str = "gene_id", value_col: str =
     return gexp.join(F.broadcast(keep), gene_col, "left_semi")
 
 
-def any_nonzero_genes(gexp: DataFrame, gene_col: str = "gene_id", value_col: str = "value") -> DataFrame:
-    """OP-FIL-01 (TMM variant) keep-list — genes with ANY nonzero
-    value (``(X != 0).any(axis=0)``, feature_selection_and_
-    normalization.py:73). Differs from the mean>0 form only when
-    values can be negative; both appear in the reference."""
-    return (
-        gexp.groupBy(gene_col)
-        .agg(F.max((F.col(value_col) != 0).cast("int")).alias("_nz"))
-        .filter(F.col("_nz") == 1)
-        .select(gene_col)
-    )
-
-
-def drop_never_nonzero_genes(gexp: DataFrame, gene_col: str = "gene_id", value_col: str = "value") -> DataFrame:
-    """OP-FIL-01 (TMM variant) — fact restricted to any-nonzero genes."""
-    keep = any_nonzero_genes(gexp, gene_col, value_col)
-    return gexp.join(F.broadcast(keep), gene_col, "left_semi")
-
-
 def stat_threshold_genes(
     gexp: DataFrame,
     q: float = 0.25,
@@ -105,19 +86,6 @@ def semi_join_members(df: DataFrame, other: DataFrame, on: str) -> DataFrame:
     return df.join(other.select(on), on, "left_semi")
 
 
-def keep_matching_genes(
-    gexp: DataFrame,
-    gene_list: DataFrame,
-    gene_col: str = "gene_id",
-) -> DataFrame:
-    """OP-FIL-05 — coding-gene selection. The reference builds a
-    60k-alternation regex (``'|'.join(ids)``, brca_data_prep.ipynb
-    cell-16) — pathological at scale; the engine uses a broadcast
-    semi-join against the id list, which is the same set semantics.
-    """
-    return gexp.join(F.broadcast(gene_list.select(gene_col)), gene_col, "left_semi")
-
-
 def drop_nulls(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """OP-FIL-07a — ``dropna()`` (lung_data_prep.ipynb cell-3)."""
     return df.na.drop(subset=cols)
@@ -128,17 +96,4 @@ def replace_zero_with_one(df: DataFrame, col: str) -> DataFrame:
     (feature_selection_and_normalization.py:24)."""
     return df.withColumn(
         col, F.when(F.col(col) == 0, F.lit(1.0)).otherwise(F.col(col))
-    )
-
-
-def inf_to_null(df: DataFrame, col: str) -> DataFrame:
-    """OP-FIL-07c — ``replace([inf,-inf], nan)``
-    (feature_selection_and_normalization.py:85-86). The engine
-    normalizes BOTH ±inf and NaN to null so downstream aggregates
-    skip them (Spark aggregates ignore null but propagate NaN —
-    SURVEY.md §1.1)."""
-    c = F.col(col)
-    return df.withColumn(
-        col,
-        F.when(c.isNull() | F.isnan(c) | (c == float("inf")) | (c == float("-inf")), F.lit(None)).otherwise(c),
     )

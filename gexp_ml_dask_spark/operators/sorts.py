@@ -1,4 +1,5 @@
-"""Sort / top-k operators (SURVEY.md §2.6, OP-SORT-01/02)."""
+"""Sort / top-k operators (SURVEY.md §2.6, OP-SORT-01; OP-SORT-02 is the
+registered ``op_sort_02_top_k_variance`` query)."""
 
 from __future__ import annotations
 
@@ -13,33 +14,6 @@ def sort_by_key(df: DataFrame, key: str = "sample_id", ascending: bool = True) -
     row order."""
     col = F.col(key).asc() if ascending else F.col(key).desc()
     return df.orderBy(col)
-
-
-def top_k_genes_by_variance(
-    gexp: DataFrame,
-    k: int,
-    gene_col: str = "gene_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """OP-SORT-02 keep-list — top-k features by variance
-    (data/brca_undersample.py:11-13: ``var(axis=0).sort_values(
-    ascending=False)`` then first k). Spark plans orderBy+limit as
-    TakeOrderedAndProject — per-partition heaps, no total sort.
-    Ties broken by gene_id for determinism (pandas keeps first
-    occurrence; any stable rule differs only inside exact ties)."""
-    return (
-        gexp.groupBy(gene_col)
-        .agg(F.var_samp(value_col).alias("var_value"))
-        .orderBy(F.col("var_value").desc(), F.col(gene_col).asc())
-        .limit(k)
-    )
-
-
-def select_top_k_variance(gexp: DataFrame, k: int, gene_col: str = "gene_id", value_col: str = "value") -> DataFrame:
-    """OP-SORT-02 — fact table restricted to the top-k-variance
-    keep-list (broadcast semi-join)."""
-    keep = top_k_genes_by_variance(gexp, k, gene_col, value_col).select(gene_col)
-    return gexp.join(F.broadcast(keep), gene_col, "left_semi")
 
 
 def global_rank(

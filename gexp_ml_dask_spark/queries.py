@@ -3094,12 +3094,12 @@ def op_ml_11_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("op_ml_07_gbdt_fit_predict")
 def op_ml_07(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-ML-07 (rows-only): GBDT-family fit + predict (MLlib
-    RandomForest multiclass / xgboost.spark when importable) —
+    RandomForest multiclass, the reference's XGBClassifier twin) —
     returns per-(label, prediction) counts, stamped with the backend
-    that actually trained (`engine` provenance column)."""
+    that trained (`engine` provenance column)."""
     from pyspark.ml.feature import VectorAssembler
 
-    from gexp_ml_dask_spark.ml.models import classifier_engine, make_classifier
+    from gexp_ml_dask_spark.ml.models import CLASSIFIER_ENGINE, make_classifier
     from gexp_ml_dask_spark.ml.pipeline import encode_labels, train_test_split
 
     data = _order_features(spark, sf_dir)
@@ -3116,21 +3116,20 @@ def op_ml_07(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("prediction").cast("long").alias("prediction"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("engine", F.lit(classifier_engine()))
+        .withColumn("engine", F.lit(CLASSIFIER_ENGINE))
     )
 
 
 @register("op_ml_08_lightgbm_variant")
 def op_ml_08(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-ML-08 (rows-only): the LightGBM benchmark variant
-    (cluster_default_benchmark.py:137-143) — SynapseML LightGBM when
-    present, else OneVsRest(GBTClassifier); returns per-(label,
-    prediction) counts like OP-ML-07, stamped with the backend that
-    actually trained (`engine` provenance column)."""
+    (cluster_default_benchmark.py:137-143) as OneVsRest(GBTClassifier);
+    returns per-(label, prediction) counts like OP-ML-07, stamped with
+    the backend that trained (`engine` provenance column)."""
     from pyspark.ml.feature import VectorAssembler
 
     from gexp_ml_dask_spark.ml.models import (
-        lightgbm_engine,
+        LIGHTGBM_ENGINE,
         make_lightgbm_classifier,
     )
     from gexp_ml_dask_spark.ml.pipeline import encode_labels, train_test_split
@@ -3149,7 +3148,7 @@ def op_ml_08(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("prediction").cast("long").alias("prediction"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("engine", F.lit(lightgbm_engine()))
+        .withColumn("engine", F.lit(LIGHTGBM_ENGINE))
     )
 
 
@@ -3832,7 +3831,7 @@ def op_llm_02_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench in SCALING.md §2e; op_llm_02_tf_cosine_inverted/_prefix keep
     the sparse forms value-checked against the SAME oracle. All forms
     emit identical rows by construction (integer-exact dot + one
-    shared finish), pinned in tests/test_llm_ops.py."""
+    shared cosine ratio), pinned in tests/test_llm_ops.py."""
     from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
 
     return tf_cosine_pairs_auto(load_docs(spark, sf_dir), threshold=0.9)

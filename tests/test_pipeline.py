@@ -450,42 +450,24 @@ def test_approx_distinct_error_bound(spark):
     assert merged == whole
 
 
-def test_model_backend_gate(spark, gexp_data):
-    """OP-ML-07 backend selection (VERDICT r3 #8): the provenance
-    gate must report the engine that make_classifier actually
-    returns, and — where the optional requirements-extra.txt
-    backend IS installed — the xgboost.spark estimator must train
-    end-to-end through the same pipeline surface the MLlib fallback
-    uses. In the shipped container (no xgboost) this pins the
-    fallback contract; with xgboost installed it exercises the real
-    distributed XGBoost path."""
+def test_model_backend_gate(spark):
+    """OP-ML-07/08 backends (VERDICT r3 #8): the provenance literal
+    each query stamps in its ``engine`` column must name the
+    estimator its factory returns — RandomForest for OP-ML-07,
+    OneVsRest over GBT for OP-ML-08."""
     from gexp_ml_dask_spark.ml.models import (
-        HAS_XGBOOST,
-        classifier_engine,
+        CLASSIFIER_ENGINE,
+        LIGHTGBM_ENGINE,
         make_classifier,
+        make_lightgbm_classifier,
     )
 
-    model_cls = type(make_classifier()).__name__
-    if HAS_XGBOOST:
-        assert classifier_engine() == "xgboost.spark"
-        assert model_cls == "SparkXGBClassifier"
-    else:
-        assert classifier_engine() == "mllib.random_forest"
-        assert model_cls == "RandomForestClassifier"
-
-    if not HAS_XGBOOST:
-        import pytest as _pytest
-
-        _pytest.skip("xgboost absent — fallback contract pinned above")
-
-    from gexp_ml_dask_spark.ml.pipeline import assemble_vectors, encode_labels
-
-    gexp, labels_cls, _ = gexp_data
-    data = assemble_vectors(gexp).join(labels_cls, "sample_id")
-    data, _ = encode_labels(data, "label", "label_idx")
-    model = make_classifier("features", "label_idx", seed=42).fit(data)
-    preds = model.transform(data)
-    assert preds.filter("prediction IS NULL").count() == 0
+    assert CLASSIFIER_ENGINE == "mllib.random_forest"
+    assert type(make_classifier()).__name__ == "RandomForestClassifier"
+    assert LIGHTGBM_ENGINE == "mllib.onevsrest_gbt"
+    lgbm = make_lightgbm_classifier()
+    assert type(lgbm).__name__ == "OneVsRest"
+    assert type(lgbm.getClassifier()).__name__ == "GBTClassifier"
 
 
 def test_mad_outlier_stats_golden(spark):

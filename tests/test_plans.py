@@ -806,3 +806,44 @@ def test_auc_and_calibration_no_global_window(spark, registry):
         # and the bucketed rank machinery is actually in the plan
         assert "_gr_k" in ptxt or "Window" not in ptxt, name
     spark.catalog.clearCache()
+
+
+def test_every_top_level_definition_is_referenced():
+    """Static guard, no Spark: every top-level function or class in
+    ``gexp_ml_dask_spark/`` is named somewhere besides its own
+    definition — in the package, ``tests/``, ``tools/``, ``bench.py``
+    or ``perfbench/``. Queries added through ``@register`` are reached
+    through the registry and are exempt. A helper nothing names is
+    dead code: delete it rather than keep it in step."""
+    import ast
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "gexp_ml_dask_spark"
+    files = [
+        *pkg.rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        root / "bench.py",
+        *(root / "perfbench").rglob("*.py"),
+    ]
+    texts = {f: f.read_text() for f in files}
+    unreferenced = []
+    for f in sorted(pkg.rglob("*.py")):
+        lines = texts[f].splitlines()
+        for node in ast.parse(texts[f]).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in node.decorator_list
+            ):
+                continue
+            word = re.compile(rf"\b{re.escape(node.name)}\b")
+            first = min([node.lineno, *(d.lineno for d in node.decorator_list)])
+            own = "\n".join(lines[first - 1 : node.end_lineno])
+            uses = sum(len(word.findall(t)) for t in texts.values())
+            if uses == len(word.findall(own)):
+                unreferenced.append(f"{f.relative_to(root)}:{node.name}")
+    assert not unreferenced, unreferenced

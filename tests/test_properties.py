@@ -696,9 +696,12 @@ def test_prefix_tf_cosine_lossless_property(spark, texts, threshold):
     and rounded cosine) as the inverted-index join on ANY corpus at
     ANY threshold — the Cauchy-Schwarz L2-prefix bound is a theorem,
     so a single counterexample is a bug. The tiny shared vocabulary
-    is the adversarial regime (every posting hot, long prefixes)."""
+    is the adversarial regime (every posting hot, long prefixes).
+    Both sparse forms run on the shared pair core, so the dense
+    tiled-GEMM form, which does not, is the third side."""
     from gexp_ml_dask_spark.llm.dedup import (
         tf_cosine_pairs,
+        tf_cosine_pairs_dense,
         tf_cosine_pairs_prefix,
     )
 
@@ -714,6 +717,11 @@ def test_prefix_tf_cosine_lossless_property(spark, texts, threshold):
         for r in tf_cosine_pairs_prefix(docs, threshold=threshold).collect()
     }
     assert inv == pre, (threshold, texts, inv ^ pre)
+    dense = {
+        (r["id_a"], r["id_b"], r["cosine"])
+        for r in tf_cosine_pairs_dense(docs, threshold=threshold).collect()
+    }
+    assert inv == dense, (threshold, texts, inv ^ dense)
 
 
 @settings(max_examples=10, deadline=None)
