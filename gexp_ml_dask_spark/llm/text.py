@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gexp_ml_dask_spark.operators.physical import local_table
+
 # Tiny per-language stopword profiles for the n-gram/stopword
 # language-ID heuristic. Real deployments swap in fastText/CLD3
 # models via a pandas UDF (OP-LLM-06); the operator contract —
@@ -484,7 +486,9 @@ def bpe_merges(
     (ties broken lexicographically), re-encode, repeat. Returns the
     learned merge table (merge_rank, left_sym, right_sym,
     pair_count) — integer counts only, so the oracle is EXACT (no
-    float rounding contract at all).
+    float rounding contract at all). Training stops early once no
+    word has two symbols left, so the table holds at most ``k``
+    rows; ``k=0`` or an empty corpus gives an empty table.
 
     Representation: each word is encoded as ``|s1||s2||...||sn|``.
     Plain (non-regex) string ``replace`` of ``|a||b|`` with
@@ -498,12 +502,8 @@ def bpe_merges(
     Scale shape — the reason BPE training is cheap at 100 TB: ONE
     corpus-sized shuffle builds the (word, count) vocabulary table;
     every merge round after that operates on the VOCAB dimension
-    (pair counting is a vocab-keyed hash agg; the argmax is a 1-row
-    aggregate attached by broadcast crossJoin — the lazy scalar
-    shape, no eager action; re-encoding is a row-local replace).
-    Rounds unroll lazily into one plan like the PageRank power
-    iteration; a long-horizon variant (k >> 10) should persist each
-    round's encoding."""
+    (pair counting is a vocab-keyed hash agg, the argmax is one
+    collected row, re-encoding is a row-local replace)."""
     merges, _ = _bpe_train(docs, k, text_col)
     return merges
 
@@ -516,9 +516,17 @@ def _bpe_symbols(enc_col) -> "F.Column":
 
 def _bpe_train(docs: DataFrame, k: int, text_col: str):
     """Shared BPE training loop: returns (merges_df, enc_final_df)
-    where enc_final carries (w, wc, enc) with ALL k merges applied —
-    the learned tokenizer's per-word segmentation, consumed by
-    :func:`bpe_token_counts`."""
+    where enc_final carries (w, wc, enc) with every learned merge
+    applied — the learned tokenizer's per-word segmentation,
+    consumed by :func:`bpe_token_counts`.
+
+    A fit, like MLlib's iterative estimators: the vocabulary table is
+    checkpointed once, and each round collects its 1-row argmax and
+    re-encodes with that pair as a literal. So each round's plan is
+    the checkpoint plus the earlier rounds' row-local replaces; no
+    round re-plans the pair counts or argmaxes of the rounds before
+    it (an argmax joined back in lazily would replay every earlier
+    round twice, and the plan would grow as 2^k)."""
     words = (
         docs.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
         .filter((F.col("w") != "") & (~F.col("w").contains("|")))
@@ -533,66 +541,46 @@ def _bpe_train(docs: DataFrame, k: int, text_col: str):
         spread.substr(F.lit(1), F.length(spread) - 2),
         F.lit("|"),
     )
-    # No persist on the encoding base: the word-frequency exchange is
-    # an identical subtree in every round's lineage, and Spark's
-    # ReuseExchange rule computes it once per action — a persist here
-    # only added materialization overhead (A/B: warm 3.9 s unpersisted
-    # vs 5.2 s persisted at sf0.1).
-    enc = words.select("w", "wc", enc0.alias("enc"))
+    enc = words.select("w", "wc", enc0.alias("enc")).localCheckpoint(
+        eager=True
+    )
 
-    merges = None
+    rows = []
+    s, n = F.col("s"), F.size("s")
     for r in range(1, k + 1):
-        syms = _bpe_symbols(F.col("enc"))
-        pairs = (
-            enc.select("wc", syms.alias("s"))
-            .filter(F.size("s") >= 2)
+        best = (
+            enc.select("wc", _bpe_symbols(F.col("enc")).alias("s"))
+            .filter(n >= 2)
             .select(
                 "wc",
-                F.explode(
-                    F.zip_with(
-                        F.slice("s", 1, F.size("s") - 1),
-                        F.slice("s", 2, F.size("s") - 1),
-                        lambda a, b: F.struct(
-                            a.alias("pa"), b.alias("pb")
-                        ),
+                F.inline(
+                    F.arrays_zip(
+                        F.slice(s, 1, n - 1).alias("pa"),
+                        F.slice(s, 2, n - 1).alias("pb"),
                     )
-                ).alias("p"),
+                ),
             )
-            .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
+            .groupBy("pa", "pb")
             .agg(F.sum("wc").alias("pair_count"))
+            .orderBy(F.desc("pair_count"), F.asc("pa"), F.asc("pb"))
+            .take(1)
         )
-        best = pairs.orderBy(
-            F.desc("pair_count"), F.asc("pa"), F.asc("pb")
-        ).limit(1)
-        row = best.select(
-            F.lit(r).cast("long").alias("merge_rank"),
-            F.col("pa").alias("left_sym"),
-            F.col("pb").alias("right_sym"),
-            F.col("pair_count"),
-        )
-        merges = row if merges is None else merges.unionByName(row)
-        # LEFT join on TRUE, not a crossJoin: a round with no pairs
-        # left (fully merged / single-char vocabulary) has an EMPTY
-        # argmax, and the encoding must pass through unchanged —
-        # replace() of a null pattern is null, coalesced back
-        # (hypothesis counterexample: corpus ['a'])
-        enc = enc.join(F.broadcast(best), F.lit(True), "left").select(
+        if not best:  # no word has two symbols left
+            break
+        pa, pb, pair_count = best[0]
+        rows.append((r, pa, pb, pair_count))
+        enc = enc.select(
             "w",
             "wc",
-            F.coalesce(
-                F.replace(
-                    F.col("enc"),
-                    F.concat(
-                        F.lit("|"), F.col("pa"), F.lit("||"),
-                        F.col("pb"), F.lit("|"),
-                    ),
-                    F.concat(
-                        F.lit("|"), F.col("pa"), F.col("pb"), F.lit("|")
-                    ),
-                ),
-                F.col("enc"),
+            F.replace(
+                F.col("enc"), F.lit(f"|{pa}||{pb}|"), F.lit(f"|{pa}{pb}|")
             ).alias("enc"),
         )
+    merges = local_table(
+        docs.sparkSession,
+        rows,
+        "merge_rank long, left_sym string, right_sym string, pair_count long",
+    )
     return merges, enc
 
 

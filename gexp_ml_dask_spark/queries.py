@@ -5198,8 +5198,7 @@ def op_llm_07_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_ctes(k: int = 5) -> str:
     """Shared CTE prefix for the BPE oracles — the k merge rounds
-    unrolled (the same fixed-k unrolling the Spark plan does;
-    integer counts only, so the compares are exact). The |s1||s2|
+    unrolled (integer counts only, so the compares are exact). The |s1||s2|
     delimiter encoding makes plain replace() the greedy leftmost
     BPE merge in both engines. Defines words, e1..e{k+1} (encodings;
     e{k+1} has all k merges applied), p1..pk (pair counts),
@@ -5224,8 +5223,8 @@ def _bpe_ctes(k: int = 5) -> str:
             f"b{r} AS (SELECT pa, pb, pair_count FROM p{r} "
             "ORDER BY pair_count DESC, pa, pb LIMIT 1), "
             # LEFT JOIN ON TRUE so an empty argmax (no pairs left)
-            # passes the encoding through unchanged, mirroring the
-            # Spark loop's coalesce
+            # passes the encoding through unchanged, as the Spark
+            # loop stops once no pair is left
             f"e{r + 1} AS (SELECT w, wc, coalesce(replace(enc, "
             "'|' || pa || '||' || pb || '|', "
             "'|' || pa || pb || '|'), enc) AS enc "
@@ -5285,8 +5284,9 @@ def op_llm_04_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-04 (BPE tokenizer training): learn the corpus's first
     5 byte-pair merges — one corpus shuffle builds the word-frequency
     table, then every round is vocab-dimension work (pair-count hash
-    agg, 1-row argmax broadcast, row-local re-encode). Integer-exact
-    value oracle; greedy-merge semantics pinned on planted fixtures."""
+    agg, 1-row argmax collected as a literal, row-local re-encode).
+    Integer-exact value oracle; greedy-merge semantics pinned on
+    planted fixtures."""
     from gexp_ml_dask_spark.llm.text import bpe_merges
 
     return bpe_merges(load_table(spark, sf_dir, "documents"), k=5)

@@ -148,6 +148,41 @@ def test_text_ops_empty(spark):
     assert_empty_frame(tfidf_top_terms(d))
 
 
+def test_bpe_empty_and_short_training(spark):
+    """BPE on an empty corpus, with k=0, and on a corpus fully merged
+    before round k: the merge table keeps its schema and holds only
+    the merges that exist; token counts fall back to characters when
+    nothing is merged."""
+    from gexp_ml_dask_spark.llm.text import bpe_merges, bpe_token_counts
+
+    cols = ["merge_rank", "left_sym", "right_sym", "pair_count"]
+    d = empty(spark, DOCS_SCHEMA)
+    m = bpe_merges(d, k=3)
+    assert m.columns == cols and m.count() == 0
+    assert_empty_frame(bpe_token_counts(d, k=3), min_cols=3)
+
+    texts = ["ab ab abc", "cab"]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    m0 = bpe_merges(docs, k=0)
+    assert m0.columns == cols and m0.count() == 0
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
+        for r in bpe_token_counts(docs, k=0).collect()
+    }
+    assert got == {0: (3, 7), 1: (1, 3)}
+
+    ab = spark.createDataFrame([(0, "ab ab")], "doc_id long, text string")
+    assert [tuple(r) for r in bpe_merges(ab, k=5).collect()] == [
+        (1, "a", "b", 2)
+    ]
+    assert [
+        (r["n_words"], r["n_bpe_tokens"])
+        for r in bpe_token_counts(ab, k=5).collect()
+    ] == [(2, 2)]
+
+
 def test_knn_empty_corpus_and_queries(spark):
     from gexp_ml_dask_spark.llm.similarity import knn_bruteforce
 

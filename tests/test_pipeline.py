@@ -278,11 +278,11 @@ def test_pipeline_releases_its_persists(spark, gexp_data, monkeypatch):
 
 def test_gexp_pipeline_and_ops_build_no_python_rdd(spark, gexp_data, monkeypatch):
     """Neither benchmark workload parallelizes a Python list: the
-    pipeline (dense assemble, no driver-built gene dim) and the two
-    ``ops`` queries whose driver-built tables go through
-    ``local_table`` (the union-find result behind
-    ``op_llm_02_dup_clusters``, the mixture weights behind
-    ``op_llm_08_curation_pipeline``)."""
+    pipeline (dense assemble, no driver-built gene dim) and the
+    queries whose driver-built tables go through ``local_table`` (the
+    union-find result behind ``op_llm_02_dup_clusters``, the mixture
+    weights behind ``op_llm_08_curation_pipeline``, the BPE merge
+    table behind both ``op_llm_04_bpe_*`` queries)."""
     from pyspark import SparkContext
 
     from gexp_ml_dask_spark.plans import gexp_pipeline
@@ -299,7 +299,12 @@ def test_gexp_pipeline_and_ops_build_no_python_rdd(spark, gexp_data, monkeypatch
         gexp, labels, "classification", k_folds=3, cv_parallelism=3
     )
     assert 0.0 <= mean_cv <= 1.0 and 0.0 <= eval_score <= 1.0
-    for name in ("op_llm_02_dup_clusters", "op_llm_08_curation_pipeline"):
+    for name in (
+        "op_llm_02_dup_clusters",
+        "op_llm_08_curation_pipeline",
+        "op_llm_04_bpe_tokenize",
+        "op_llm_04_bpe_merges",
+    ):
         assert QUERIES[name](spark, SF_ORACLE).count() > 0, name
 
 

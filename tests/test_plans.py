@@ -732,18 +732,15 @@ def test_pagerank_no_cartesian_no_python(spark):
 def test_new_training_ops_stay_jvm_side(spark, registry):
     """Round-3 training-pipeline additions: no CartesianProduct, no
     Python evaluation anywhere; the only nested-loop joins are the
-    documented 1-row scalar attaches (NB model scalars, BPE per-round
-    argmax). The NB scoring join and the k-means pos/assign joins are
-    keyed hash joins."""
+    documented 1-row scalar attaches (NB model scalars). The NB
+    scoring join and the k-means pos/assign joins are keyed hash
+    joins."""
     for name, max_bnlj in [
         ("op_llm_04_nb_quality", 3),  # llr x tot, priors x tot, docs x scalars
-        # the unrolled BPE plan replays each round's 1-row argmax
-        # subtree in every later round's lineage (no persist at
-        # fixed k — docstring states the k>>10 contract), so the
-        # TREE holds O(k^2) scalar-attach occurrences: measured 26
-        # and 31 at k=5, all 1-row builds
-        ("op_llm_04_bpe_merges", 26),
-        ("op_llm_04_bpe_tokenize", 31),
+        # BPE collects each round's argmax and re-encodes with it as
+        # a literal, so no round attaches a scalar by join
+        ("op_llm_04_bpe_merges", 0),
+        ("op_llm_04_bpe_tokenize", 0),
         ("op_llm_03_kmeans", 0),
         # the corpus-total attach is a documented 1-row broadcast
         # scalar (it replaced the partitionless total-sum window the
@@ -758,6 +755,29 @@ def test_new_training_ops_stay_jvm_side(spark, registry):
         n = tree.count("BroadcastNestedLoopJoin")
         assert n <= max_bnlj, (name, n)
     spark.catalog.clearCache()
+
+
+def test_bpe_plan_is_linear_in_rounds(spark):
+    """BPE training cuts its lineage at every round: the applied
+    tokenizer's plan is the vocabulary checkpoint plus one literal
+    replace() per learned merge, with no argmax joined back in (a
+    lazily joined argmax replays every earlier round twice, so the
+    plan grows as 2^k)."""
+    from gexp_ml_dask_spark.llm.text import bpe_merges, bpe_token_counts
+
+    texts = [
+        "low low low low low",
+        "lower lower newest newest newest",
+        "newest newest newest widest",
+        "widest widest aaaa aaaa banana",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    qe = bpe_token_counts(docs, k=8)._jdf.queryExecution()
+    assert "BroadcastNestedLoopJoin" not in qe.executedPlan().toString()
+    assert qe.optimizedPlan().toString().count("replace(") == 8
+    assert bpe_merges(docs, k=8).count() == 8  # the corpus has 8 merges
 
 
 def test_bloom_semi_plan_shape(spark, registry):

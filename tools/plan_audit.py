@@ -50,11 +50,6 @@ WHITELIST = {
     # priors) are 1-row aggregates crossJoined on — the same lazy
     # scalar shape; the token-scoring join is a keyed hash join
     "op_llm_04_nb_quality": {"BroadcastNestedLoopJoin"},
-    # each BPE round attaches the 1-row argmax pair by broadcast
-    # crossJoin (lazy scalar shape); pair counting itself is a
-    # vocab-keyed hash agg
-    "op_llm_04_bpe_merges": {"BroadcastNestedLoopJoin"},
-    "op_llm_04_bpe_tokenize": {"BroadcastNestedLoopJoin"},
     "op_llm_03_knn_bruteforce": {"BroadcastNestedLoopJoin"},
     # same scorer as knn_bruteforce (broadcast query set x candidates)
     # behind the metadata pre-filter semi-join
