@@ -34,18 +34,10 @@ class _LongFormParams(Params):
     valueCol = Param(
         Params._dummy(), "valueCol", "expression value column", TypeConverters.toString
     )
-    exact = Param(
-        Params._dummy(),
-        "exact",
-        "exact percentiles (True) or approx sketch for 100TB scale (False)",
-        TypeConverters.toBoolean,
-    )
 
     def __init__(self) -> None:
         super().__init__()
-        self._setDefault(
-            sampleCol="sample_id", geneCol="gene_id", valueCol="value", exact=True
-        )
+        self._setDefault(sampleCol="sample_id", geneCol="gene_id", valueCol="value")
 
 
 class _NormalizerModel(Model, _LongFormParams):
@@ -86,13 +78,10 @@ class UpperQuartileNormalizer(Estimator, _LongFormParams):
         sampleCol: str = "sample_id",
         geneCol: str = "gene_id",
         valueCol: str = "value",
-        exact: bool = True,
     ) -> None:
         super().__init__()
         self._setDefault(q=0.75)
-        self._set(
-            q=q, sampleCol=sampleCol, geneCol=geneCol, valueCol=valueCol, exact=exact
-        )
+        self._set(q=q, sampleCol=sampleCol, geneCol=geneCol, valueCol=valueCol)
 
     def _fit(self, dataset: DataFrame) -> UpperQuartileNormalizerModel:
         factors = upper_quartile_factors(
@@ -101,7 +90,6 @@ class UpperQuartileNormalizer(Estimator, _LongFormParams):
             sample_col=self.getOrDefault(self.sampleCol),
             gene_col=self.getOrDefault(self.geneCol),
             value_col=self.getOrDefault(self.valueCol),
-            exact=self.getOrDefault(self.exact),
         )
         model = UpperQuartileNormalizerModel(persist_df(factors))
         return self._copyValues(model)
@@ -132,7 +120,6 @@ class TMMNormalizer(Estimator, _LongFormParams):
         sampleCol: str = "sample_id",
         geneCol: str = "gene_id",
         valueCol: str = "value",
-        exact: bool = True,
     ) -> None:
         super().__init__()
         self._setDefault(logRatioTrim=0.3, absExprTrim=0.05)
@@ -142,7 +129,6 @@ class TMMNormalizer(Estimator, _LongFormParams):
             sampleCol=sampleCol,
             geneCol=geneCol,
             valueCol=valueCol,
-            exact=exact,
         )
 
     def _fit(self, dataset: DataFrame) -> TMMNormalizerModel:
@@ -153,7 +139,6 @@ class TMMNormalizer(Estimator, _LongFormParams):
             sample_col=self.getOrDefault(self.sampleCol),
             gene_col=self.getOrDefault(self.geneCol),
             value_col=self.getOrDefault(self.valueCol),
-            exact=self.getOrDefault(self.exact),
         )
         model = TMMNormalizerModel(persist_df(factors))
         return self._copyValues(model)

@@ -19,15 +19,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gexp_ml_dask_spark.operators.aggregates import (
+    collect_exact_quantiles,
     grouped_percentile,
-    percentile,
-    sorted_group_quantile,
+    per_sample_uq_factor,
     symmetrize_factors,
 )
-from gexp_ml_dask_spark.operators.filters import (
-    drop_zero_genes,
-    nonzero_genes,
-)
+from gexp_ml_dask_spark.operators.filters import drop_zero_genes
 from gexp_ml_dask_spark.operators.joins import scale_rows
 from gexp_ml_dask_spark.operators.physical import fan_out
 
@@ -38,7 +35,6 @@ def upper_quartile_factors(
     sample_col: str = "sample_id",
     gene_col: str = "gene_id",
     value_col: str = "value",
-    exact: bool = True,
     geomean_quantize: int | None = None,
 ) -> DataFrame:
     """UpperQuartile fit: (sample_id, norm_factor, scaling_factor).
@@ -46,51 +42,20 @@ def upper_quartile_factors(
     fit(X) = drop all-zero genes (fsn.py:21), per-sample
     quantile(q)/sum (fsn.py:28), geometric-mean symmetrization
     (fsn.py:24). Two shuffles total (per-gene keep-list agg,
-    per-sample factor shuffle-sort); symmetrization is a single-pass
-    window over the tiny factors table.
+    per-sample factor shuffle-sort); the geomean is collected from
+    the persisted factors table and inlined as a literal.
 
     ``geomean_quantize``: opt-in floor-bucketed log-mean (default
     None = reference parity) — see
     :func:`~gexp_ml_dask_spark.operators.aggregates.symmetrize_factors`.
     """
     kept = drop_zero_genes(gexp, gene_col, value_col)
-    factors = _uq_factor_agg(kept, q, sample_col, value_col, exact)
+    factors = per_sample_uq_factor(kept, q, sample_col, value_col)
     return symmetrize_factors(
         factors,
         "norm_factor",
         "scaling_factor",
         geomean_quantize=geomean_quantize,
-    )
-
-
-def _uq_factor_agg(
-    kept: DataFrame,
-    q: float,
-    sample_col: str,
-    value_col: str,
-    exact: bool,
-) -> DataFrame:
-    """Per-sample ``quantile(q)/sum`` (fsn.py:28) — the sort-based
-    many-groups form when exact (group count scales with samples;
-    see :func:`sorted_group_quantile` for why collect_list loses),
-    one hash aggregate on the sketch path."""
-    if not exact:
-        return kept.groupBy(sample_col).agg(
-            F.try_divide(
-                grouped_percentile(value_col, q, exact), F.sum(value_col)
-            ).alias("norm_factor")
-        )
-    qs = sorted_group_quantile(
-        kept.select(sample_col, value_col),
-        sample_col,
-        value_col,
-        q,
-        extra_aggs={"_total": F.sum(value_col)},
-        out_col="_q",
-    )
-    return qs.select(
-        sample_col,
-        F.try_divide(F.col("_q"), F.col("_total")).alias("norm_factor"),
     )
 
 
@@ -100,8 +65,6 @@ def upper_quartile_transform(
     sample_col: str = "sample_id",
     gene_col: str = "gene_id",
     value_col: str = "value",
-    exact: bool = True,
-    cache: bool = True,
     geomean_quantize: int | None = None,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
@@ -111,13 +74,13 @@ def upper_quartile_transform(
 
     The filtered fact table ``kept`` feeds TWO plan branches (the
     factor agg and the output join); Catalyst recomputes shared
-    subplans per branch, so with ``cache=True`` it is persisted at
-    exactly the point the reference persists (fsn.py:47-48 /
-    dask_pipeline.py:32) — MEMORY_AND_DISK, so it spills rather than
-    OOMs at scale. The input is first widened to cluster parallelism
-    (guarded no-op when the scan already has enough splits): the
-    zero-gene semi-join is broadcast, so without it every downstream
-    stage inherits the scan's partitioning.
+    subplans per branch, so it is persisted at exactly the point the
+    reference persists (fsn.py:47-48 / dask_pipeline.py:32) —
+    MEMORY_AND_DISK, so it spills rather than OOMs at scale. The
+    input is first widened to cluster parallelism (guarded no-op
+    when the scan already has enough splits): the zero-gene
+    semi-join is broadcast, so without it every downstream stage
+    inherits the scan's partitioning.
 
     The returned plan reads the persisted frames (``kept`` and the
     symmetrized factors), so they cannot be released here. Pass a
@@ -127,20 +90,15 @@ def upper_quartile_transform(
     """
     from pyspark.storagelevel import StorageLevel
 
-    if cache:
-        gexp = fan_out(gexp)
-    keep = nonzero_genes(gexp, gene_col, value_col)
-    kept = gexp.join(F.broadcast(keep), gene_col, "left_semi")
-    if cache:
-        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted is not None:
-            persisted.append(kept)
-    factors = _uq_factor_agg(kept, q, sample_col, value_col, exact)
+    kept = drop_zero_genes(fan_out(gexp), gene_col, value_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    if persisted is not None:
+        persisted.append(kept)
     factors = symmetrize_factors(
-        factors,
+        per_sample_uq_factor(kept, q, sample_col, value_col),
         "norm_factor",
         "scaling_factor",
-        eager=cache,
         geomean_quantize=geomean_quantize,
         persisted=persisted,
     )
@@ -154,8 +112,6 @@ def tmm_factors(
     sample_col: str = "sample_id",
     gene_col: str = "gene_id",
     value_col: str = "value",
-    exact: bool = True,
-    cache: bool = True,
     trim_quantize: int | None = None,
 ) -> DataFrame:
     """TMM fit: (sample_id, norm_factor, scaling_factor).
@@ -186,15 +142,13 @@ def tmm_factors(
     quantile scalars; ±inf/NaN are scrubbed to null so Spark
     aggregates skip them exactly like the nan-functions do.
 
-    ``cache=True`` persists (a) the tiny keep-list/pseudoref tables
-    that feed two branches each, and (b) the per-cell kernel matrix
-    ``mat``, which the global trim-bounds aggregate AND the trim pass
-    both consume — without it Catalyst recomputes the full
-    scan+join+kernel pipeline for each branch. ``mat`` is
-    fact-table-sized, so this is MEMORY_AND_DISK (spills, never
-    OOMs) — the same placement the reference persists at
-    (fsn.py:83-86). Set ``cache=False`` to keep the plan fully lazy
-    and recompute instead, e.g. when the input is already cached.
+    It persists (a) the tiny keep-list/pseudoref tables that feed
+    two branches each, and (b) the per-cell kernel matrix ``mat``,
+    which the global trim-bounds fit AND the trim pass both consume —
+    without it Catalyst recomputes the full scan+join+kernel pipeline
+    for each branch. ``mat`` is fact-table-sized, so this is
+    MEMORY_AND_DISK (spills, never OOMs) — the same placement the
+    reference persists at (fsn.py:83-86).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -207,8 +161,7 @@ def tmm_factors(
     # fact table for free by the inner broadcast join against
     # ``pseudoref`` (which only contains kept genes) — no separate
     # keep-list aggregate + semi-join pass over the input.
-    if cache:
-        gexp = fan_out(gexp)
+    gexp = fan_out(gexp)
 
     # :74 pseudoref — PER-GENE (pandas axis=0 == per column):
     # quantile(0.75 of positive values) / sum(all values). The GENE
@@ -217,12 +170,12 @@ def tmm_factors(
     # here — measured 44.6s vs 77-102s for the shuffle-sort form at
     # 30M rows / 20k genes. Per-SAMPLE aggs are the opposite case
     # (cardinality scales with data, tiny groups) and use
-    # :func:`sorted_group_quantile`; see _uq_factor_agg.
+    # :func:`sorted_group_quantile`; see per_sample_uq_factor.
     pseudoref = (
         gexp.groupBy(gene_col)
         .agg(
             F.try_divide(
-                grouped_percentile(F.when(v > 0, v), 0.75, exact), F.sum(v)
+                grouped_percentile(F.when(v > 0, v), 0.75), F.sum(v)
             ).alias("ref_value"),
             F.max(F.when(v != 0, F.lit(1)).otherwise(F.lit(0))).alias(
                 "_any_nz"
@@ -231,16 +184,15 @@ def tmm_factors(
         .where(F.col("_any_nz") == 1)
         .drop("_any_nz")
     )
-    if cache:
-        # pseudoref feeds the broadcast join and ref_total.
-        pseudoref = pseudoref.persist()
+    # pseudoref feeds the broadcast join and ref_total.
+    pseudoref = pseudoref.persist()
 
     # The kept fact table: inner join ≡ the zero-gene drop. It feeds
     # the sample-totals agg AND the kernel projection; one cached
     # copy replaces two scan+join passes.
-    g = gexp.join(F.broadcast(pseudoref), gene_col)
-    if cache:
-        g = g.persist(StorageLevel.MEMORY_AND_DISK)
+    g = gexp.join(F.broadcast(pseudoref), gene_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     # Per-sample library size (:98 sample_total_counts). The row sum
     # equals the sum over the (s>0 | ref>0) mask because masked-out
@@ -293,67 +245,38 @@ def tmm_factors(
             F.lit(None).cast("double"),
         ).otherwise(c)
 
+    # mat feeds the global bounds fit AND the trim pass; without a
+    # persist the whole scan+join+kernel pipeline runs twice.
     mat = joined.select(
         sample_col,
         gene_col,
         _definite(log_ratio).alias("log_ratio"),
         _definite(abs_expr).alias("abs_expr"),
-    )
-    if cache:
-        # mat feeds the global bounds agg AND the trim pass; without
-        # a persist the whole scan+join+kernel pipeline runs twice.
-        mat = mat.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     # :88-92 global (matrix-wide) nanquantile trim bounds. The trim
     # values are high-cardinality doubles, the worst case for Spark's
-    # exact Percentile (value->count map per partial); one aggregate
-    # with TWO array-percentiles builds one map per column instead of
-    # two. When ``mat`` is cached this is an estimator-fit scalar:
-    # collect the four bounds once and inline them as literals —
-    # otherwise the uncached broadcast subquery recomputes the whole
-    # percentile pass for every downstream consumer (trim pass,
-    # transform join), tripling the most expensive stage. MLlib fits
-    # do exactly this (fit collects scalars, transform embeds them).
+    # exact Percentile (value->count map on one reducer), so this is
+    # an estimator-fit scalar: collect the four bounds once by rank
+    # bracketing and inline them as literals. MLlib fits do exactly
+    # this (fit collects scalars, transform embeds them).
+    b = collect_exact_quantiles(
+        mat,
+        {
+            "log_ratio": [log_ratio_trim, 1 - log_ratio_trim],
+            "abs_expr": [abs_expr_trim, 1 - abs_expr_trim],
+        },
+    )
+    # The bounds pass materialized ``mat``; everything upstream of it
+    # (the kept fact table and the pseudoref dim) is dead weight from
+    # here on — release it so the executor store holds ONE fact-sized
+    # dataset, not three.
+    g.unpersist()
+    pseudoref.unpersist()
     lr = F.col("log_ratio")
     ae = F.col("abs_expr")
-    if cache:
-        from gexp_ml_dask_spark.operators.aggregates import (
-            collect_exact_quantiles,
-        )
-
-        b = collect_exact_quantiles(
-            mat,
-            {
-                "log_ratio": [log_ratio_trim, 1 - log_ratio_trim],
-                "abs_expr": [abs_expr_trim, 1 - abs_expr_trim],
-            },
-        )
-        # The bounds pass materialized ``mat``; everything upstream
-        # of it (the kept fact table and the pseudoref dim) is dead
-        # weight from here on — release it so the executor store
-        # holds ONE fact-sized dataset, not three.
-        g.unpersist()
-        pseudoref.unpersist()
-        lr_lo, lr_hi = F.lit(b["log_ratio"][0]), F.lit(b["log_ratio"][1])
-        ae_lo, ae_hi = F.lit(b["abs_expr"][0]), F.lit(b["abs_expr"][1])
-        trimmed_src = mat
-    else:
-        bounds = mat.agg(
-            percentile(
-                lr, [log_ratio_trim, 1 - log_ratio_trim], exact
-            ).alias("lr_b"),
-            percentile(
-                ae, [abs_expr_trim, 1 - abs_expr_trim], exact
-            ).alias("ae_b"),
-        ).select(
-            F.col("lr_b")[0].alias("lr_lo"),
-            F.col("lr_b")[1].alias("lr_hi"),
-            F.col("ae_b")[0].alias("ae_lo"),
-            F.col("ae_b")[1].alias("ae_hi"),
-        )
-        lr_lo, lr_hi = F.col("lr_lo"), F.col("lr_hi")
-        ae_lo, ae_hi = F.col("ae_lo"), F.col("ae_hi")
-        trimmed_src = mat.crossJoin(F.broadcast(bounds))
+    lr_lo, lr_hi = F.lit(b["log_ratio"][0]), F.lit(b["log_ratio"][1])
+    ae_lo, ae_hi = F.lit(b["abs_expr"][0]), F.lit(b["abs_expr"][1])
 
     if trim_quantize is not None:
         # floor-bucket, NOT F.round: floor(x * 10^N) is one IEEE
@@ -370,7 +293,7 @@ def tmm_factors(
     else:
         c_lr, c_lr_lo, c_lr_hi = lr, lr_lo, lr_hi
         c_ae, c_ae_lo, c_ae_hi = ae, ae_lo, ae_hi
-    trimmed = trimmed_src.select(
+    trimmed = mat.select(
         sample_col,
         F.when((c_lr > c_lr_lo) & (c_lr < c_lr_hi), lr).alias("t_lr"),
         F.when((c_ae > c_ae_lo) & (c_ae < c_ae_hi), ae).alias("t_ae"),
@@ -384,11 +307,8 @@ def tmm_factors(
         F.avg(F.when(F.col("t_lr").isNotNull(), F.col("t_ae"))).alias("norm_factor")
     )
 
-    # :78 symmetrize (eager on the fit path — no single-partition
-    # window over the per-sample factors table).
-    return symmetrize_factors(
-        factors, "norm_factor", "scaling_factor", eager=cache
-    )
+    # :78 symmetrize.
+    return symmetrize_factors(factors, "norm_factor", "scaling_factor")
 
 
 def quantile_normalize(
@@ -396,7 +316,6 @@ def quantile_normalize(
     sample_col: str = "sample_id",
     gene_col: str = "gene_id",
     value_col: str = "value",
-    cache: bool = True,
 ) -> DataFrame:
     """Quantile normalization (Bolstad et al. 2003) — the third
     classic gexp normalizer beside UQ/TMM (no reference analogue;
@@ -413,18 +332,17 @@ def quantile_normalize(
     and a broadcast join back. The fact table shuffles once.
     """
     from pyspark.sql import Window
+    from pyspark.storagelevel import StorageLevel
 
     w = Window.partitionBy(sample_col).orderBy(value_col, gene_col)
-    ranked = gexp.select(
-        F.col(sample_col), F.col(gene_col), F.col(value_col)
-    ).withColumn("_r", F.row_number().over(w).cast("long"))
-    if cache:
-        # The ranked table feeds BOTH the reference-distribution agg
-        # and the output join; without a persist each side re-runs
-        # the scan + rank window (two fact shuffles instead of one).
-        from pyspark.storagelevel import StorageLevel
-
-        ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
+    # The ranked table feeds BOTH the reference-distribution agg and
+    # the output join; without a persist each side re-runs the scan +
+    # rank window (two fact shuffles instead of one).
+    ranked = (
+        gexp.select(F.col(sample_col), F.col(gene_col), F.col(value_col))
+        .withColumn("_r", F.row_number().over(w).cast("long"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     ref = ranked.groupBy("_r").agg(F.avg(value_col).alias("_ref"))
     return (
         ranked.join(F.broadcast(ref), "_r")

@@ -224,28 +224,22 @@ def stratified_sample(
     n_per_total: int,
     label_col: str = "label",
     seed: int = 42,
-    exact: bool = True,
     hash_col: str | None = None,
 ) -> DataFrame:
     """OP-ML-11 — stratified subsample preserving label proportions
     (``train_test_split(..., stratify=labels)``, data/brca_
     undersample.py:29-36).
 
-    ``exact=True`` carves exactly floor(n*p_label + 0.5) rows per
-    label via a per-label window (fine when labels are few); False
-    uses ``sampleBy`` (single pass, approximate sizes — the 100 TB
-    path). ``hash_col`` switches the within-label order from
-    ``rand(seed)`` to the seeded md5 of that key column —
-    partition-layout-independent membership (see
+    Carves exactly floor(n*p_label + 0.5) rows per label via a
+    per-label window (labels are few). ``hash_col`` switches the
+    within-label order from ``rand(seed)`` to the seeded md5 of that
+    key column — partition-layout-independent membership (see
     :func:`hash_bucket`), reproducible across engines.
     """
     import math
 
     total = df.count()
     frac = min(1.0, n_per_total / total)
-    if not exact:
-        labels = [r[0] for r in df.select(label_col).distinct().collect()]
-        return df.sampleBy(label_col, {l: frac for l in labels}, seed=seed)
     counts = {r[0]: r[1] for r in df.groupBy(label_col).count().collect()}
     # floor(x + 0.5): half-up, matching SQL semantics (Python round()
     # is banker's and would diverge from an oracle on exact halves).

@@ -2,11 +2,10 @@
 
 Every reference aggregation is an axis-wise matrix reduction; on the
 long form each is a single shuffle-once hash aggregate with map-side
-partial aggregation (free from Spark). Exact percentiles use
-``percentile`` (linear interpolation — matches pandas
-``Series.quantile`` and DuckDB ``quantile_cont``); at 100 TB switch
-``exact=False`` to use ``percentile_approx`` (single-pass sketch, no
-per-group sort).
+partial aggregation (free from Spark). Every quantile is exact
+(linear interpolation — matches pandas ``Series.quantile`` and DuckDB
+``quantile_cont``); the ``percentile_approx`` sketch runs only inside
+:func:`collect_exact_quantiles`, where it brackets the exact ranks.
 """
 
 from __future__ import annotations
@@ -19,26 +18,20 @@ from gexp_ml_dask_spark.operators.physical import local_table
 APPROX_ACCURACY = 10_000
 
 
-def percentile(
-    col: str | Column, q: float | list[float], exact: bool = True
-) -> Column:
-    """Exact linear-interpolation quantile (pandas/DuckDB semantics),
-    or the scale-path sketch when ``exact`` is False. A list ``q``
-    returns an array column from ONE pass — Percentile builds its
-    per-partition value map once per call, so batching quantiles of
-    the same column halves the cost vs two scalar calls."""
+def percentile(col: str | Column, q: float | list[float]) -> Column:
+    """Exact linear-interpolation quantile (pandas/DuckDB semantics).
+    A list ``q`` returns an array column from ONE pass — Percentile
+    builds its per-partition value map once per call, so batching
+    quantiles of the same column halves the cost vs two scalar
+    calls."""
     c = F.col(col) if isinstance(col, str) else col
     qlit = (
         F.array(*[F.lit(x) for x in q]) if isinstance(q, list) else F.lit(q)
     )
-    if exact:
-        return F.percentile(c, qlit)
-    return F.percentile_approx(c, qlit, F.lit(APPROX_ACCURACY))
+    return F.percentile(c, qlit)
 
 
-def grouped_percentile(
-    col: str | Column, q: float, exact: bool = True
-) -> Column:
+def grouped_percentile(col: str | Column, q: float) -> Column:
     """Exact per-GROUP quantile for aggregations with many groups.
 
     Spark's ``Percentile`` keeps a value->count OpenHashMap per group
@@ -53,13 +46,8 @@ def grouped_percentile(
     in one aggregation buffer — true for per-sample/per-gene rows
     (bounded by #genes / #samples respectively), NOT for global
     quantiles (use :func:`collect_exact_quantiles`).
-
-    ``exact=False`` delegates to the sketch path like
-    :func:`percentile`.
     """
     c = F.col(col) if isinstance(col, str) else col
-    if not exact:
-        return F.percentile_approx(c, F.lit(q), F.lit(APPROX_ACCURACY))
     a = F.sort_array(F.collect_list(c))
     n = F.size(a)
     k = (n.cast("double") - F.lit(1.0)) * F.lit(q)
@@ -202,7 +190,7 @@ def collect_exact_quantiles(
         if counts[c] == 0:
             out[c] = [None] * len(qs)
         elif c in fallback_cols:
-            row = df.agg(percentile(F.col(c), list(qs), exact=True).alias("p")).collect()[0]
+            row = df.agg(percentile(F.col(c), list(qs)).alias("p")).collect()[0]
             out[c] = list(row["p"])
         else:
             out[c] = [picked[f"{c}__{i}"] for i in range(len(qs))]
@@ -231,11 +219,11 @@ def per_gene_stats(gexp: DataFrame, gene_col: str = "gene_id", value_col: str = 
     )
 
 
-def scalar_quantile(stats: DataFrame, col: str, q: float, exact: bool = True) -> DataFrame:
+def scalar_quantile(stats: DataFrame, col: str, q: float) -> DataFrame:
     """OP-AGG-03 — scalar quantile of a per-group statistic
     (``mean.quantile(0.25)``, dask_pipeline.py:39-40). Returns a
     1-row DataFrame suitable for a broadcast cross join."""
-    return stats.agg(percentile(col, q, exact).alias(f"{col}_q"))
+    return stats.agg(percentile(col, q).alias(f"{col}_q"))
 
 
 def sorted_group_quantile(
@@ -318,20 +306,13 @@ def per_sample_uq_factor(
     q: float = 0.75,
     sample_col: str = "sample_id",
     value_col: str = "value",
-    exact: bool = True,
 ) -> DataFrame:
     """OP-AGG-04 — the upper-quartile norm factor: per-sample
     ``quantile(q) / sum`` (feature_selection_and_normalization.py:28).
-    One shuffle; both statistics share it. Exact path uses the
-    sort-based many-groups form (:func:`sorted_group_quantile`) —
-    group count scales with samples; the sketch path stays a single
-    hash aggregate."""
-    if not exact:
-        return gexp.groupBy(sample_col).agg(
-            (
-                grouped_percentile(value_col, q, exact) / F.sum(value_col)
-            ).alias("norm_factor")
-        )
+    One shuffle; both statistics share it in the sort-based
+    many-groups form (:func:`sorted_group_quantile`) — group count
+    scales with samples. A sample whose values sum to 0 gets a NULL
+    factor (``try_divide``), never a division error under ANSI."""
     qs = sorted_group_quantile(
         gexp.select(sample_col, value_col),
         sample_col,
@@ -341,7 +322,8 @@ def per_sample_uq_factor(
         out_col="_q",
     )
     return qs.select(
-        sample_col, (F.col("_q") / F.col("_total")).alias("norm_factor")
+        sample_col,
+        F.try_divide(F.col("_q"), F.col("_total")).alias("norm_factor"),
     )
 
 
@@ -349,7 +331,6 @@ def symmetrize_factors(
     factors: DataFrame,
     factor_col: str = "norm_factor",
     out_col: str = "scaling_factor",
-    eager: bool = False,
     geomean_quantize: int | None = None,
     persisted: list[DataFrame] | None = None,
 ) -> DataFrame:
@@ -357,23 +338,15 @@ def symmetrize_factors(
     ``factor / exp(mean(log(factor.replace(0,1))))``
     (feature_selection_and_normalization.py:24).
 
-    Lazy form (default): persist the factors subplan and attach the
-    geomean as a 1-row broadcast scalar (partial+final aggregate +
-    crossJoin). History: this used to be an empty-frame window to
-    dodge Catalyst's lack of common-subplan dedup (the cross-join
-    form evaluates factors once for the geomean and once for the
-    probe side) — but the per-sample factors table is DATA-scaled,
-    so the window's single-partition funnel was the round-8 plan
-    audit's last real flag; the persist closes the double-evaluation
-    objection instead. Release is the caller's (unpersist /
-    clearCache), the same contract as global_rank: pass a
-    ``persisted`` list and the persisted factors frame is appended
-    to it, so the caller can unpersist it once its consumers ran.
-
-    ``eager=True`` (the estimator-fit path): persist factors, run the
-    geomean as a partial+final aggregate, COLLECT the scalar and
-    inline it as a literal — same plan shape, but the lineage is
-    truncated for multi-round consumers.
+    An estimator-style fit: persist the factors, run the geomean as a
+    partial+final aggregate, COLLECT the scalar and inline it as a
+    literal, so consumers read the persisted factors with no scalar
+    join and no lineage back to the geomean aggregate. NULL factors
+    (an all-zero sample) are skipped by the mean and stay NULL.
+    Release is the caller's (unpersist / clearCache), the same
+    contract as global_rank: pass a ``persisted`` list and the
+    persisted factors frame is appended to it, so the caller can
+    unpersist it once its consumers ran.
 
     ``geomean_quantize`` (opt-in, default None = reference parity):
     floor-bucket the LOG-mean at ``10^-d`` before exponentiating —
@@ -387,39 +360,25 @@ def symmetrize_factors(
     observed vs 1e-6 buckets), making replica runs digest-exact. The
     floor-bucket form (one IEEE multiply + exact floor) is
     rounding-mode-free across engines, same rationale as TMM's
-    ``trim_quantize`` (ml/normalization.py:130). Relative
+    ``trim_quantize`` (ml/normalization.tmm_factors). Relative
     perturbation of the geomean at d=6 is <= 10^-6/|log gm| in log
     space, i.e. ~5e-7 on the factor scale — uniform over all rows.
     """
-    logs = F.log(
-        F.when(F.col(factor_col) == 0, F.lit(1.0)).otherwise(F.col(factor_col))
+    avg_log = F.avg(
+        F.log(
+            F.when(F.col(factor_col) == 0, F.lit(1.0)).otherwise(
+                F.col(factor_col)
+            )
+        )
     )
-
-    def _geo(avg_log: F.Column) -> F.Column:
-        if geomean_quantize is not None:
-            scale = F.lit(float(10**geomean_quantize))
-            avg_log = F.floor(avg_log * scale) / scale
-        return F.exp(avg_log)
-
-    from pyspark.storagelevel import StorageLevel
-
-    factors = (
-        factors.persist()
-        if eager
-        else factors.persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    if geomean_quantize is not None:
+        scale = F.lit(float(10**geomean_quantize))
+        avg_log = F.floor(avg_log * scale) / scale
+    factors = factors.persist()
     if persisted is not None:
         persisted.append(factors)
-    if eager:
-        gm = factors.agg(_geo(F.avg(logs))).collect()[0][0]
-        return factors.withColumn(out_col, F.col(factor_col) / F.lit(gm))
-
-    gm_df = factors.agg(_geo(F.avg(logs)).alias("_gm"))
-    return (
-        factors.crossJoin(F.broadcast(gm_df))
-        .withColumn(out_col, F.col(factor_col) / F.col("_gm"))
-        .drop("_gm")
-    )
+    gm = factors.agg(F.exp(avg_log)).collect()[0][0]
+    return factors.withColumn(out_col, F.col(factor_col) / F.lit(gm))
 
 
 def per_sample_sum(gexp: DataFrame, sample_col: str = "sample_id", value_col: str = "value") -> DataFrame:
@@ -429,14 +388,14 @@ def per_sample_sum(gexp: DataFrame, sample_col: str = "sample_id", value_col: st
 
 
 def nan_ignoring_quantile(
-    df: DataFrame, col: str, q: float, exact: bool = True, out: str | None = None
+    df: DataFrame, col: str, q: float, out: str | None = None
 ) -> DataFrame:
     """OP-AGG-07 — ``np.nanquantile`` equivalent: drop null AND NaN
     before the exact quantile (feature_selection_and_normalization.py:
     88-92). Spark keeps NaN distinct from null, so both predicates
     are required (SURVEY.md §1.1)."""
     clean = df.filter(F.col(col).isNotNull() & ~F.isnan(F.col(col)))
-    return clean.agg(percentile(col, q, exact).alias(out or f"{col}_q"))
+    return clean.agg(percentile(col, q).alias(out or f"{col}_q"))
 
 
 def distinct_sorted_codes(labels: DataFrame, label_col: str = "label") -> DataFrame:
@@ -601,9 +560,7 @@ def mad_outlier_stats(
     Plan: two key-hash aggs of exact group percentiles
     (grouped_percentile — group size bounded by the co-dimension,
     e.g. #samples per gene) with the key-dim stats broadcast back
-    onto the fact for the counting pass. At 100 TB the exact group
-    medians swap for the sketch path exactly like OP-AGG-03/04
-    (grouped_percentile(exact=False)).
+    onto the fact for the counting pass.
     """
     med = df.groupBy(key_col).agg(
         grouped_percentile(value_col, 0.5).alias("med")

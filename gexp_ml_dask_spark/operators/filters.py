@@ -41,7 +41,6 @@ def stat_threshold_genes(
     q: float = 0.25,
     gene_col: str = "gene_id",
     value_col: str = "value",
-    exact: bool = True,
 ) -> DataFrame:
     """OP-FIL-02 keep-list — genes with mean > q25(means) AND
     var > q25(vars) (functions/dask_pipeline.py:39-41). One hash agg
@@ -49,8 +48,8 @@ def stat_threshold_genes(
     agg broadcast-cross-joined back."""
     stats = per_gene_stats(gexp, gene_col, value_col)
     thresholds = stats.agg(
-        percentile("mean_value", q, exact).alias("_mean_thr"),
-        percentile("var_value", q, exact).alias("_var_thr"),
+        percentile("mean_value", q).alias("_mean_thr"),
+        percentile("var_value", q).alias("_var_thr"),
     )
     return (
         stats.crossJoin(F.broadcast(thresholds))
@@ -64,11 +63,10 @@ def stat_threshold_filter(
     q: float = 0.25,
     gene_col: str = "gene_id",
     value_col: str = "value",
-    exact: bool = True,
 ) -> DataFrame:
     """OP-FIL-02 — fact table restricted to the stat-threshold
     keep-list (broadcast semi-join)."""
-    keep = stat_threshold_genes(gexp, q, gene_col, value_col, exact)
+    keep = stat_threshold_genes(gexp, q, gene_col, value_col)
     return gexp.join(F.broadcast(keep), gene_col, "left_semi")
 
 

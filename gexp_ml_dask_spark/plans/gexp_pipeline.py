@@ -56,9 +56,7 @@ from gexp_ml_dask_spark.operators.scalars import log2_plus_one
 
 
 def feature_preprocessing(
-    gexp: DataFrame,
-    exact: bool = True,
-    persisted: list[DataFrame] | None = None,
+    gexp: DataFrame, persisted: list[DataFrame] | None = None
 ) -> DataFrame:
     """UQ normalize -> mean/var quantile threshold -> log2(x+1)
     (functions/dask_pipeline.py:30-45), one lazy long-form plan.
@@ -67,8 +65,8 @@ def feature_preprocessing(
     list receives them (see :func:`~gexp_ml_dask_spark.ml.
     normalization.upper_quartile_transform`) so the caller can
     release them once the plan has been materialized."""
-    normalized = upper_quartile_transform(gexp, exact=exact, persisted=persisted)
-    filtered = stat_threshold_filter(normalized, q=0.25, exact=exact)
+    normalized = upper_quartile_transform(gexp, persisted=persisted)
+    filtered = stat_threshold_filter(normalized, q=0.25)
     return log2_plus_one(filtered, "value")
 
 
@@ -95,7 +93,6 @@ def gexp_pipeline(
     task: str = "classification",
     k_folds: int = 10,
     seed: int = 42,
-    exact: bool = True,
     cv_parallelism: int = 4,
     fit_partitions: int | None = None,
 ) -> tuple[float, float, float]:
@@ -124,9 +121,7 @@ def gexp_pipeline(
 
     uq_persisted: list[DataFrame] = []
     try:
-        preprocessed = feature_preprocessing(
-            gexp, exact=exact, persisted=uq_persisted
-        )
+        preprocessed = feature_preprocessing(gexp, persisted=uq_persisted)
         data = labeled_samples(preprocessed, labels)
     finally:
         for df in uq_persisted:

@@ -685,20 +685,8 @@ def op_agg_03(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def op_agg_04(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-AGG-04: the UpperQuartile norm factor — per-sample
-    q0.75/sum in ONE hash aggregate."""
-    g = gexp(spark, sf_dir)
-    qs = agg.sorted_group_quantile(
-        g.select("sample_id", "value"),
-        "sample_id",
-        "value",
-        0.75,
-        extra_aggs={"_total": F.sum("value")},
-        out_col="_q",
-    )
-    factors = qs.select(
-        "sample_id",
-        F.try_divide(F.col("_q"), F.col("_total")).alias("norm_factor"),
-    )
+    q0.75/sum over ONE shuffle."""
+    factors = agg.per_sample_uq_factor(gexp(spark, sf_dir))
     return factors.withColumn("norm_factor", r6("norm_factor"))
 
 
@@ -1067,10 +1055,9 @@ def op_agg_13_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone maps store), vs the equal-width twin's fixed edges. ONE
     key-shuffle window (ntile over the deterministic (value,
     event_id) order — the tie-break makes bin membership
-    engine-portable) whose partitioning the groupBy reuses; at
-    100 TB swap ntile for approx_percentile edges exactly like the
-    other exact-percentile paths (the quantile-sketch twin
-    op_agg_12_quantile_sketch is that path's contract)."""
+    engine-portable) whose partitioning the groupBy reuses. The
+    approximate-edges form is the quantile-sketch twin
+    op_agg_12_quantile_sketch."""
     ev = load_events(spark, sf_dir)
     # NULLS LAST pinned on BOTH sides: Spark defaults to NULLS FIRST
     # ascending, DuckDB to NULLS LAST — without the pin the bin
@@ -1850,8 +1837,8 @@ def op_agg_12_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-AGG-12 (quantile-sketch twin): per-event-type approximate
     p95 via approx_percentile (Greenwald-Khanna, accuracy 10000 →
     rank error ≤ 1e-4) — the O(sketch)-state complement to the exact
-    per-group percentile ops (OP-AGG-03/04), and the path the 100 TB
-    config flag swaps in where a full per-group sort is too dear.
+    per-group percentile ops (OP-AGG-03/04), for where a full
+    per-group sort is too dear; the exact ops have no sketch switch.
     The oracle pins the rank-band contract: the sketch's p95 must
     sit inside the exact [p90, p99], plus the engine-independent
     exact p95 itself."""

@@ -369,3 +369,31 @@ def test_watermark_dedup_epoch_zero_contract(spark):
     # the epoch-0 sentinel is out of contract on BOTH sides; the rest
     # deduplicate exactly once
     assert sorted(r["event_id"] for r in got) == [2, 3]
+
+
+# ---------------------------------------------------------------- UQ factors
+def test_all_zero_sample_gets_null_uq_factor(spark):
+    """A sample whose values are all 0 has quantile/sum = 0/0: its
+    norm and scaling factors are NULL (the oracles' ``nullif(sum, 0)``),
+    not an ANSI DIVIDE_BY_ZERO, and the geomean skips it, so every
+    other sample's factors are the ones computed without it."""
+    from gexp_ml_dask_spark.operators.aggregates import (
+        per_sample_uq_factor,
+        symmetrize_factors,
+    )
+
+    rows = [
+        (s, g, float((s * 7 + g * 3) % 11 + 1)) for s in (1, 2, 3) for g in range(8)
+    ]
+    zero = [(4, g, 0.0) for g in range(8)]
+    schema = "sample_id long, gene_id long, value double"
+
+    def factors(data):
+        gexp = spark.createDataFrame(data, schema)
+        sym = symmetrize_factors(per_sample_uq_factor(gexp)).collect()
+        return {r["sample_id"]: (r["norm_factor"], r["scaling_factor"]) for r in sym}
+
+    base = factors(rows)
+    got = factors(rows + zero)
+    assert got[4] == (None, None)
+    assert {s: got[s] for s in base} == base

@@ -72,7 +72,7 @@ def test_stratified_sample_exact(spark, gexp_data):
     _, labels, _ = gexp_data
     counts = {r["label"]: r["count"] for r in labels.groupBy("label").count().collect()}
     n = 40
-    sampled = stratified_sample(labels, n, "label", seed=42, exact=True)
+    sampled = stratified_sample(labels, n, "label", seed=42)
     got = {r["label"]: r["count"] for r in sampled.groupBy("label").count().collect()}
     total = sum(counts.values())
     for label, c in counts.items():

@@ -642,10 +642,7 @@ out = {{}}
 
 def jobs_for(tag, fn):
     sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
+    fn()
     return len(sc.statusTracker().getJobIdsForGroup(tag))
 
 def measured(tag, fn, ceiling):

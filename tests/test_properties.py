@@ -102,21 +102,6 @@ def test_log2_plus_one_nonnegative(spark, xs):
     assert all(r["value"] >= 0.0 for r in out)
 
 
-def test_approx_percentile_close_to_exact(spark):
-    """The exact=False scale path must stay within sketch tolerance
-    of the exact percentile (the 100 TB flag, SURVEY.md §4)."""
-    from gexp_ml_dask_spark.operators.aggregates import percentile
-
-    df = spark.range(0, 100_000).select(
-        (F.col("id") % 1000).cast("double").alias("value")
-    )
-    exact, approx = df.agg(
-        percentile("value", 0.75, exact=True).alias("e"),
-        percentile("value", 0.75, exact=False).alias("a"),
-    ).collect()[0]
-    assert abs(exact - approx) / exact < 0.01
-
-
 @given(
     st.lists(
         st.floats(-1e9, 1e9, allow_nan=False, allow_infinity=False),
@@ -138,7 +123,7 @@ def test_bracketed_quantiles_match_percentile(spark, xs, qs):
     df = spark.createDataFrame([(float(x),) for x in xs], "v double")
     got = collect_exact_quantiles(df, {"v": qs})["v"]
     want = list(
-        df.agg(percentile("v", list(qs), exact=True).alias("p")).collect()[0]["p"]
+        df.agg(percentile("v", list(qs)).alias("p")).collect()[0]["p"]
     )
     assert got == want
 

@@ -64,9 +64,6 @@ WHITELIST = {
     "op_ml_10_auc": {"BroadcastNestedLoopJoin"},
     "op_ml_10_calibration": {"BroadcastNestedLoopJoin"},
     "op_llm_07_balanced_shards": {"BroadcastNestedLoopJoin"},
-    # geomean 1-row scalar attach (normalize_by_geomean lazy path —
-    # the round-8 replacement for its empty-frame window)
-    "op_agg_05_symmetrize_factors": {"BroadcastNestedLoopJoin"},
     # round-9: corpus-N 1-row scalar attach onto the vocab-sized idf
     # table (the lazy replacement for tfidf's eager n_docs collect)
     "op_llm_04_tfidf": {"BroadcastNestedLoopJoin"},
