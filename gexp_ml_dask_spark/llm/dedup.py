@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from gexp_ml_dask_spark.llm.similarity import cosine_expr
+from gexp_ml_dask_spark.llm.text import token_ngrams
 from gexp_ml_dask_spark.operators.physical import local_table
 
 
@@ -60,16 +61,32 @@ def exact_dedup_groups(
     )
 
 
+def keep_first_rank(id_col: str = "doc_id", text_col: str = "text") -> Column:
+    """A document's rank among the copies of its exact text: 1 for the
+    smallest ``id_col`` of each sha256(text) group."""
+    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(id_col)
+    return F.row_number().over(w)
+
+
 def exact_dedup(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """OP-LLM-01 — the deduplicated table (keep-first semantics)."""
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(id_col)
     return (
-        docs.withColumn("_rn", F.row_number().over(w))
+        docs.withColumn("_rn", keep_first_rank(id_col, text_col))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def _positional_ngrams(
+    docs: DataFrame, n: int, id_col: str, text_col: str
+) -> DataFrame:
+    """(``id_col``, ``pos``, ``gram``): every token ``n``-gram of every
+    document, ``pos`` its 1-based start token as a BIGINT."""
+    return docs.select(
+        F.col(id_col), F.posexplode(token_ngrams(text_col, n)).alias("_p", "gram")
+    ).select(id_col, (F.col("_p") + 1).cast("long").alias("pos"), "gram")
 
 
 def shingles(text_col: str, n: int = 3, sep: str = " ") -> F.Column:
@@ -753,8 +770,8 @@ def duplicate_ngram_spans(
     (doc_id, n_tokens, n_dup_ngrams, n_dup_tokens, dup_token_ratio).
 
     Plan shape (three shuffles, all on well-spread keys):
-      1. row-local positional n-grams via one posexplode (no
-         self-join to build grams — transform over sequence);
+      1. row-local positional n-grams via one posexplode of
+         ``text.token_ngrams`` (no self-join to build grams);
       2. cross-document duplication flag via min/max(doc_id) window
          over the gram — ONE shuffle on the gram string, no distinct
          count, no second scan of the postings;
@@ -767,36 +784,18 @@ def duplicate_ngram_spans(
     A fixed-width variant would shuffle xxhash64(gram) instead of the
     string — kept exact here so the SQL oracle replays it verbatim.
     """
-    toks = F.split(F.col(text_col), " ")
     base = docs.select(
         F.col(id_col),
-        toks.alias("_t"),
-        F.size(toks).cast("long").alias("n_tokens"),
+        F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_tokens"),
     )
-    gram_positions = F.when(
-        F.col("n_tokens") >= n,
-        F.sequence(F.lit(1), (F.col("n_tokens") - (n - 1)).cast("int")),
-    ).otherwise(F.array().cast("array<int>"))
-    grams = base.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        F.explode(
-            F.transform(
-                gram_positions,
-                lambda i: F.struct(
-                    i.cast("long").alias("pos"),
-                    F.concat_ws(" ", F.slice("_t", i, n)).alias("gram"),
-                ),
-            )
-        ).alias("_g"),
-    ).select(id_col, "n_tokens", "_g.pos", "_g.gram")
+    grams = _positional_ngrams(docs, n, id_col, text_col)
 
     wg = Window.partitionBy("gram")
     dup = (
         grams.withColumn("_mn", F.min(id_col).over(wg))
         .withColumn("_mx", F.max(id_col).over(wg))
         .filter(F.col("_mn") != F.col("_mx"))
-        .select(id_col, "n_tokens", "pos", (F.col("pos") + (n - 1)).alias("_end"))
+        .select(id_col, "pos", (F.col("pos") + (n - 1)).alias("_end"))
     )
 
     ws = (
@@ -814,14 +813,13 @@ def duplicate_ngram_spans(
             ),
         ),
     )
-    per_doc = swept.groupBy(id_col, "n_tokens").agg(
+    per_doc = swept.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_dup_ngrams"),
         F.sum("_covered").alias("n_dup_tokens"),
     )
 
     return (
-        base.select(id_col, "n_tokens")
-        .join(per_doc.drop("n_tokens"), id_col, "left")
+        base.join(per_doc, id_col, "left")
         .select(
             F.col(id_col),
             F.col("n_tokens"),
@@ -1357,22 +1355,7 @@ def remove_duplicate_spans(
         toks.alias("_t"),
         F.size(toks).cast("long").alias("n_tokens"),
     )
-    gram_positions = F.when(
-        F.col("n_tokens") >= n,
-        F.sequence(F.lit(1), (F.col("n_tokens") - (n - 1)).cast("int")),
-    ).otherwise(F.array().cast("array<int>"))
-    grams = base.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                gram_positions,
-                lambda i: F.struct(
-                    i.cast("long").alias("pos"),
-                    F.concat_ws(" ", F.slice("_t", i, n)).alias("gram"),
-                ),
-            )
-        ).alias("_g"),
-    ).select(id_col, "_g.pos", "_g.gram")
+    grams = _positional_ngrams(docs, n, id_col, text_col)
 
     wg = Window.partitionBy("gram")
     removal = (
@@ -1428,7 +1411,6 @@ def decontaminate(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """OP-LLM-02 (benchmark decontamination) — flag training documents
     that share any token ``n``-gram with a held-out evaluation set
@@ -1442,12 +1424,9 @@ def decontaminate(
     at 100 TB the eval set is benchmark-sized (MBs), so its distinct
     gram table broadcasts and the training side is ONE scan + explode
     + broadcast semi-probe + per-doc hash agg; no shuffle ever
-    carries the training grams. ``broadcast_eval=True`` (default)
-    FORCES the broadcast with an explicit hint — Catalyst honors the
-    hint regardless of size, so for an unusually large eval corpus
-    pass ``broadcast_eval=False`` to let the planner pick (it falls
-    back to a shuffled hash join on the gram key — same semantics,
-    still one pass over training).
+    carries the training grams. The broadcast is an explicit hint,
+    which Catalyst honors regardless of size, so the eval set must
+    fit in driver and executor memory.
 
     Consumers that only need the CONTAMINATED ids (the curation
     plans' anti-join probe) should call :func:`contamination_hits`
@@ -1456,9 +1435,7 @@ def decontaminate(
     whole training id column per run just to produce rows a
     downstream ``filter(is_contaminated)`` dropped again).
     """
-    hits = contamination_hits(
-        docs, eval_docs, n, id_col, text_col, broadcast_eval
-    )
+    hits = contamination_hits(docs, eval_docs, n, id_col, text_col)
     return (
         docs.select(id_col)
         .join(hits, id_col, "left")
@@ -1480,45 +1457,28 @@ def contamination_hits(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """The contaminated subset only: (doc_id, n_contaminated_ngrams)
     for every training document sharing >= 1 token n-gram with the
     eval set — :func:`decontaminate` without the zero-hit re-attach
     join (every returned row has a positive count by construction).
-    Same plan shape: eval reduces to distinct grams (broadcast by
-    default), training pays one scan + explode + probe + per-doc
-    agg.
+    Same plan shape: eval reduces to distinct grams (always
+    broadcast), training pays one scan + explode + probe + per-doc
+    agg. Grams are :func:`~gexp_ml_dask_spark.llm.text.token_ngrams`.
 
     Precondition: ``id_col`` is unique in ``docs``. The result has one
     row per contaminated id, with the hits of every row sharing that
     id summed; ``decontaminate(...).filter("is_contaminated")`` keeps
     one row per input row, so the two agree only on unique ids (true
     after ``exact_dedup``)."""
-    def doc_grams(df: DataFrame, keep_pos: bool) -> DataFrame:
-        toks = F.split(F.col(text_col), " ")
-        base = df.select(
-            F.col(id_col), toks.alias("_t"), F.size(toks).alias("_nt")
-        )
-        positions = F.when(
-            F.col("_nt") >= n, F.sequence(F.lit(1), F.col("_nt") - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        gram = base.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    positions, lambda i: F.concat_ws(" ", F.slice("_t", i, n))
-                )
-            ).alias("gram"),
-        )
-        return gram if keep_pos else gram.select("gram").distinct()
-
-    eval_grams = doc_grams(eval_docs, keep_pos=False)
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
+    eval_grams = eval_docs.select(
+        F.explode(token_ngrams(text_col, n)).alias("gram")
+    ).distinct()
     return (
-        doc_grams(docs, keep_pos=True)
-        .join(eval_grams, "gram")
+        docs.select(
+            F.col(id_col), F.explode(token_ngrams(text_col, n)).alias("gram")
+        )
+        .join(F.broadcast(eval_grams), "gram")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_contaminated_ngrams"))
     )

@@ -20,6 +20,18 @@ from gexp_ml_dask_spark.operators.physical import local_table
 RESOLUTION = 100_000
 
 
+def rate_table(
+    spark, weights: dict[str, float], source_col: str = "source"
+) -> DataFrame:
+    """(``source_col``, ``_cut``): each weighted source's rate as an
+    integer count of 1/RESOLUTION steps, one row per source."""
+    return local_table(
+        spark,
+        [(s, int(round(w * RESOLUTION))) for s, w in sorted(weights.items())],
+        f"{source_col} string, _cut long",
+    )
+
+
 def sample_mixture(
     docs: DataFrame,
     weights: dict[str, float],
@@ -34,16 +46,10 @@ def sample_mixture(
     filter; the fact side is never shuffled."""
     from gexp_ml_dask_spark.ml.pipeline import hash_bucket
 
-    spark = docs.sparkSession
-    wdf = local_table(
-        spark,
-        [(s, int(round(w * RESOLUTION))) for s, w in sorted(weights.items())],
-        f"{source_col} string, _cut long",
-    )
-    b = hash_bucket(id_col, seed, RESOLUTION)
+    wdf = rate_table(docs.sparkSession, weights, source_col)
     return (
         docs.join(F.broadcast(wdf), source_col)
-        .filter(b < F.col("_cut"))
+        .filter(hash_bucket(id_col, seed, RESOLUTION) < F.col("_cut"))
         .drop("_cut")
     )
 
@@ -65,15 +71,10 @@ def upsample_mixture(
     row-local (no shuffle)."""
     from gexp_ml_dask_spark.ml.pipeline import hash_bucket
 
-    spark = docs.sparkSession
-    wdf = local_table(
-        spark,
-        [(s, int(round(w * RESOLUTION))) for s, w in sorted(weights.items())],
-        f"{source_col} string, _base long",
-    )
+    wdf = rate_table(docs.sparkSession, weights, source_col)
     b = hash_bucket(id_col, seed, RESOLUTION)
-    n_copies = (F.col("_base") / F.lit(RESOLUTION)).cast("long") + F.when(
-        b < F.col("_base") % F.lit(RESOLUTION), F.lit(1)
+    n_copies = (F.col("_cut") / F.lit(RESOLUTION)).cast("long") + F.when(
+        b < F.col("_cut") % F.lit(RESOLUTION), F.lit(1)
     ).otherwise(F.lit(0))
     return (
         docs.join(F.broadcast(wdf), source_col)
@@ -83,7 +84,7 @@ def upsample_mixture(
             "copy_id",
             F.explode(F.sequence(F.lit(1).cast("long"), F.col("_n"))),
         )
-        .drop("_base", "_n")
+        .drop("_cut", "_n")
     )
 
 

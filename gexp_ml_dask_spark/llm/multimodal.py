@@ -26,7 +26,6 @@ modalities too.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -400,15 +399,6 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     return encode_ppm(arr[rows][:, cols])
 
 
-def _fake_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic fake 'decoded features': dim floats derived
-    from the payload digest. Stands in for decode+embed so the
-    distributed path (Arrow batches, schema, partitioning) is tested
-    with real data movement."""
-    digest = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in digest[:dim]]
-
-
 def media_from_documents(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -429,16 +419,13 @@ def media_from_documents(
     )
 
 
-def extract_features(
-    media: DataFrame,
-    dim: int = 8,
-    fake: bool = True,
-) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """Decode + feature-extract over media payloads via mapInPandas
     (Arrow batches of whole rows; one Python roundtrip per batch,
-    never per row). ``fake=False`` routes to the real decoders and
-    raises in this container — the flag is the clearly-marked stub
-    boundary, not a hidden fallback.
+    never per row). The features are a deterministic stand-in for
+    decode + embed: ``dim`` floats in [0, 1], the first ``dim`` bytes
+    of the payload's sha256 digest over 255, so the distributed path
+    (Arrow batches, schema, partitioning) moves real data.
 
     NULL payloads are excluded BEFORE the Python boundary (there is
     nothing to decode; a NULL previously reached sha256()/len() in
@@ -467,16 +454,10 @@ def extract_features(
             for lo in range(0, len(pdf), batch_rows):
                 chunk = pdf.iloc[lo : lo + batch_rows]
                 payloads = chunk["payload"]
-                if fake:
-                    feats = [
-                        [b / 255.0 for b in _hashlib.sha256(p).digest()[:dim]]
-                        for p in payloads
-                    ]
-                else:  # pragma: no cover - codecs absent in container
-                    raise NotImplementedError(
-                        "real decode requires Pillow/torchaudio/ffmpeg; "
-                        "see decode_image/decode_audio/sample_video_frames"
-                    )
+                feats = [
+                    [b / 255.0 for b in _hashlib.sha256(p).digest()[:dim]]
+                    for p in payloads
+                ]
                 yield pd.DataFrame(
                     {
                         "asset_id": chunk["asset_id"],
@@ -497,7 +478,6 @@ def transform_payloads(
     width: int = 64,
     height: int = 64,
     frame_every_n: int = 30,
-    fake: bool = True,
 ) -> DataFrame:
     """Binary→binary media transform over mapInPandas — the
     resize / frame-sample half of the multimodal surface (the
@@ -507,12 +487,10 @@ def transform_payloads(
     an opaque payload column plus in/out byte counts, so transforms
     chain (resize -> extract) without leaving Spark.
 
-    ``fake=True`` (this container) replaces the codec calls with a
-    deterministic surrogate — the payload cycled/truncated to
-    width*height bytes (images) or every ``frame_every_n``-th byte
-    (videos) — keeping the data movement, Arrow batch shape, and
-    memory profile of a real transcode; ``fake=False`` routes to the
-    stubbed decoders and raises."""
+    The codec calls are a deterministic surrogate — the payload
+    cycled/truncated to width*height bytes (images) or every
+    ``frame_every_n``-th byte (videos) — keeping the data movement,
+    Arrow batch shape, and memory profile of a real transcode."""
     # NULL payloads: nothing to transform — excluded before the
     # Python boundary (see extract_features)
     media = media.filter(F.col("payload").isNotNull())
@@ -531,12 +509,6 @@ def transform_payloads(
                 for payload, modality in zip(
                     chunk["payload"], chunk["modality"]
                 ):
-                    if not fake:  # pragma: no cover - codecs absent
-                        raise NotImplementedError(
-                            "real resize/frame-sample requires "
-                            "Pillow/ffmpeg; see resize_image/"
-                            "sample_video_frames"
-                        )
                     b = bytes(payload)
                     if modality == "image":
                         reps = b * (target // max(len(b), 1) + 1)

@@ -3,6 +3,13 @@
 All pure column expressions — the hot path of a 100 TB text pipeline
 must stay inside whole-stage codegen; nothing here touches Python at
 runtime.
+
+Three text rules have one definition here, shared by the dedup
+operators and the curation plans: :func:`token_ngrams` (the token
+n-grams of a text), :func:`repetition_ratio` (the share of those
+grams that repeat) and :func:`pii_scrubbed` (the ``PII_RULES``
+replacement chain). ``dedup.shingles`` is not one of them: it is a
+distinct-gram set with its own short- and NULL-text contract.
 """
 
 from __future__ import annotations
@@ -28,6 +35,39 @@ LANG_PROFILES: dict[str, list[str]] = {
 def tokens(text_col: str | Column, sep: str = " ") -> Column:
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.split(c, sep)
+
+
+def token_ngrams(text_col: str | Column, n: int) -> Column:
+    """The token ``n``-grams of a text, in order and with repeats:
+    gram i joins tokens i..i+n-1 with one space, for i in
+    1..n_tokens-n+1. A text with fewer than ``n`` tokens, and a NULL
+    text, has none (an empty array). Tokens split on single spaces,
+    so a doubled space yields an empty token inside its grams.
+
+    The grams zip ``n`` shifted slices of the token array, so the
+    text is split a fixed number of times per row; a lambda that
+    sliced the split text at every offset would re-split it once per
+    gram (quadratic in the document's length)."""
+    toks = tokens(text_col)
+    m = F.size(toks) - (n - 1)
+    shifted = [F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(n)]
+    return F.when(
+        m >= 1,
+        F.transform(
+            F.arrays_zip(*shifted),
+            lambda g: F.concat_ws(" ", *[g[f"t{j}"] for j in range(n)]),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def repetition_ratio(text_col: str | Column, n: int) -> Column:
+    """Share of a text's token ``n``-grams that repeat an earlier gram
+    of the same text; NULL when it has no ``n``-gram."""
+    grams = token_ngrams(text_col, n)
+    return F.try_divide(
+        (F.size(grams) - F.size(F.array_distinct(grams))).cast("double"),
+        F.size(grams).cast("double"),
+    )
 
 
 def stopword_count(text_col: str | Column, words: list[str]) -> Column:
@@ -292,20 +332,12 @@ def bigram_counts(
     text_col: str = "text",
 ) -> DataFrame:
     """OP-LLM-04 (bigram LM counts, [mandate]) — adjacent-token
-    pairs via zip_with over two row-local slices of the token array
-    (no self-join, no positional explode+rejoin), then wordcount's
+    pairs as the row-local :func:`token_ngrams` of order 2 (no
+    self-join, no positional explode+rejoin), then wordcount's
     agg + top-N. The n-gram tables that seed tokenizer/LM training
     are exactly this shape."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n - 1),
-        F.slice(toks, 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
     return (
-        docs.filter(n >= 2)
-        .select(F.explode(bigrams).alias("bigram"))
+        docs.select(F.explode(token_ngrams(text_col, 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
@@ -379,6 +411,15 @@ PII_RULES: list[tuple[str, str, str]] = [
 ]
 
 
+def pii_scrubbed(text_col: str) -> Column:
+    """The text with every :data:`PII_RULES` match replaced by its
+    placeholder, the rules applied in order."""
+    clean = F.col(text_col)
+    for _, pat, repl in PII_RULES:
+        clean = F.regexp_replace(clean, pat, repl)
+    return clean
+
+
 def scrub_pii(
     docs: DataFrame,
     text_col: str = "text",
@@ -395,11 +436,8 @@ def scrub_pii(
         .alias(f"n_{name}")
         for name, pat, _ in PII_RULES
     ]
-    clean = F.col(text_col)
-    for _, pat, repl in PII_RULES:
-        clean = F.regexp_replace(clean, pat, repl)
     return docs.select(
-        F.col(id_col), clean.alias("clean_text"), *counts
+        F.col(id_col), pii_scrubbed(text_col).alias("clean_text"), *counts
     )
 
 
@@ -437,15 +475,8 @@ def bigram_lm_scores(
     corpus (round 9; output-identical by construction).
     """
     def doc_bigram_rows(df: DataFrame) -> DataFrame:
-        toks = tokens(text_col)
-        n = F.size(toks)
-        bigrams = F.zip_with(
-            F.slice(toks, 1, n - 1),
-            F.slice(toks, 2, n - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-        return df.filter(n >= 2).select(
-            F.col(id_col), F.explode(bigrams).alias("bigram")
+        return df.select(
+            F.col(id_col), F.explode(token_ngrams(text_col, 2)).alias("bigram")
         )
 
     doc_bigrams = doc_bigram_rows(docs)
@@ -763,26 +794,12 @@ def self_repetition(
 
     Returns (doc_id, n_ngrams, n_distinct_ngrams, repetition_ratio).
     """
-    toks = F.split(F.col(text_col), " ")
-    nt = F.size(toks)
-    grams = F.when(
-        nt >= n,
-        F.transform(
-            F.sequence(F.lit(1), nt - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = token_ngrams(text_col, n)
     return docs.select(
         F.col(id_col),
         F.size(grams).cast("long").alias("n_ngrams"),
         F.size(F.array_distinct(grams)).cast("long").alias("n_distinct_ngrams"),
-        F.round(
-            F.try_divide(
-                (F.size(grams) - F.size(F.array_distinct(grams))).cast("double"),
-                F.size(grams).cast("double"),
-            ),
-            6,
-        ).alias("repetition_ratio"),
+        F.round(repetition_ratio(text_col, n), 6).alias("repetition_ratio"),
     )
 
 

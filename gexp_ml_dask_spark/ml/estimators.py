@@ -5,9 +5,11 @@ The reference implements UpperQuartile/TMM as sklearn
 and_normalization.py:8,34,61); the direct Spark idiom is an
 ``Estimator`` whose ``_fit`` learns the per-sample factor table and
 returns a ``Model`` whose ``transform`` applies the broadcast
-scaling join. The factor table is persisted on fit — it is reused by
-every downstream transform, mirroring the reference's
-``.persist()`` on fit products (fsn.py:47-48).
+scaling join. The factor table is persisted on fit (by
+``symmetrize_factors``, which collects its geomean from it) — it is
+reused by every downstream transform, mirroring the reference's
+``.persist()`` on fit products (fsn.py:47-48). A fit leaves nothing
+else cached.
 """
 
 from __future__ import annotations
@@ -21,7 +23,6 @@ from gexp_ml_dask_spark.ml.normalization import (
     upper_quartile_factors,
 )
 from gexp_ml_dask_spark.operators.joins import scale_rows
-from gexp_ml_dask_spark.operators.physical import persist_df
 
 
 class _LongFormParams(Params):
@@ -91,7 +92,7 @@ class UpperQuartileNormalizer(Estimator, _LongFormParams):
             gene_col=self.getOrDefault(self.geneCol),
             value_col=self.getOrDefault(self.valueCol),
         )
-        model = UpperQuartileNormalizerModel(persist_df(factors))
+        model = UpperQuartileNormalizerModel(factors)
         return self._copyValues(model)
 
 
@@ -140,5 +141,5 @@ class TMMNormalizer(Estimator, _LongFormParams):
             gene_col=self.getOrDefault(self.geneCol),
             value_col=self.getOrDefault(self.valueCol),
         )
-        model = TMMNormalizerModel(persist_df(factors))
+        model = TMMNormalizerModel(factors)
         return self._copyValues(model)

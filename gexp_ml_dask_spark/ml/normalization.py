@@ -148,7 +148,8 @@ def tmm_factors(
     without it Catalyst recomputes the full scan+join+kernel pipeline
     for each branch. ``mat`` is fact-table-sized, so this is
     MEMORY_AND_DISK (spills, never OOMs) — the same placement the
-    reference persists at (fsn.py:83-86).
+    reference persists at (fsn.py:83-86). Each is unpersisted once
+    its consumers ran; only the symmetrized factors stay cached.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -307,8 +308,11 @@ def tmm_factors(
         F.avg(F.when(F.col("t_lr").isNotNull(), F.col("t_ae"))).alias("norm_factor")
     )
 
-    # :78 symmetrize.
-    return symmetrize_factors(factors, "norm_factor", "scaling_factor")
+    # :78 symmetrize. Its geomean collect materializes the persisted
+    # factors, so nothing reads ``mat`` after it returns.
+    out = symmetrize_factors(factors, "norm_factor", "scaling_factor")
+    mat.unpersist()
+    return out
 
 
 def quantile_normalize(

@@ -53,7 +53,6 @@ def assemble_vectors(
     value_col: str = "value",
     out_col: str = "features",
     dense: bool = True,
-    combine_duplicates: bool = True,
 ) -> DataFrame:
     """OP-PHY-03 — long form -> one ML feature Vector per sample
     (replaces the reference's to_dask_array + rechunk,
@@ -62,12 +61,11 @@ def assemble_vectors(
     Two rules hold on both paths:
 
     - rows with a NULL gene id are dropped (they have no position);
-    - ``combine_duplicates`` (default True) sums repeated
-      (sample, gene) pairs first — scipy's COO->CSR contract; without
-      it a duplicate pair corrupts the dense layout and throws in
-      SparseVector. The extra shuffle partial-aggregates map-side and
-      feeds the narrower per-sample shuffle; set False only when
-      uniqueness is guaranteed upstream.
+    - repeated (sample, gene) pairs are summed first — scipy's
+      COO->CSR contract; without it a duplicate pair corrupts the
+      dense layout and throws in SparseVector. The extra shuffle
+      partial-aggregates map-side and feeds the narrower per-sample
+      shuffle.
 
     ``dense=True`` (the canonical gexp case: every kept gene present
     for every sample, zeros explicit) is one lazy plan with no driver
@@ -88,10 +86,9 @@ def assemble_vectors(
     — the plan shows ArrowEvalPython, never BatchEvalPython (pinned
     in tests/test_plans.py).
     """
-    if combine_duplicates:
-        gexp = gexp.groupBy(sample_col, gene_col).agg(
-            F.sum(value_col).alias(value_col)
-        )
+    gexp = gexp.groupBy(sample_col, gene_col).agg(
+        F.sum(value_col).alias(value_col)
+    )
 
     if dense:
         keyed, key = gexp.filter(F.col(gene_col).isNotNull()), gene_col

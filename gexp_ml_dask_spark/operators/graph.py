@@ -251,7 +251,6 @@ def pagerank(
     dst: str = "id_b",
     damping: float = 0.85,
     n_iter: int = 3,
-    persist_edges: bool = True,
 ) -> DataFrame:
     """Power-iteration PageRank over an undirected edge list (edges
     given once as src < dst; both directions are materialized here).
@@ -280,14 +279,14 @@ def pagerank(
     node has out-degree >= 1, so the leaked-mass term is identically
     zero and both engines compute the same closed form.
 
-    ``persist_edges`` (default True, VERDICT r7 item 4): every
-    unrolled round's contrib join references the (edge ⋈ outdeg) and
-    node tables, and WITHOUT a persist each round's lineage re-runs
-    the whole upstream edge derivation (for the near-dup pair graph
-    that is the full shingle/join pipeline — re-executed per round).
-    ``persist()`` is lazy, so plan construction still schedules no
-    job; release is the caller's (unpersist / clearCache), the same
-    contract as global_rank and the dedup pair operators.
+    The (edge ⋈ outdeg) and node tables are persisted (VERDICT r7
+    item 4): every unrolled round's contrib join references them, and
+    without a persist each round's lineage re-runs the whole upstream
+    edge derivation (for the near-dup pair graph that is the full
+    shingle/join pipeline — re-executed per round). ``persist()`` is
+    lazy, so plan construction still schedules no job; release is the
+    caller's (unpersist / clearCache), the same contract as
+    global_rank and the dedup pair operators.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -299,10 +298,8 @@ def pagerank(
     nodes = e.select(F.col("src").alias("node")).distinct()
     n_df = nodes.agg(F.count(F.lit(1)).cast("double").alias("n_nodes"))
     nodes = nodes.crossJoin(F.broadcast(n_df))
-    ed = e.join(deg, "src")
-    if persist_edges:
-        ed = ed.persist(StorageLevel.MEMORY_AND_DISK)
-        nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    ed = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
     ranks = nodes.select(
         "node", (F.lit(1.0) / F.col("n_nodes")).alias("r")
     )

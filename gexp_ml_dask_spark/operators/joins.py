@@ -229,21 +229,16 @@ def fuzzy_join(
     text_col: str,
     max_distance: int = 2,
     id_col: str = "p_partkey",
-    block_fn=None,
-    self_join: bool = True,
 ) -> DataFrame:
     """OP-JOIN-07 `[mandate]` — approximate string join: pairs whose
     ``text_col`` values are within ``max_distance`` Levenshtein
     edits. Classic entity-resolution kernel.
 
-    ``self_join=True`` (the default) treats ``left`` and ``right``
-    as the same table and keeps each unordered pair once
-    (``id_a < id_b``). For a genuine TWO-TABLE join pass
-    ``self_join=False`` — every cross-table match is kept, whatever
-    the id order (ids may even collide across tables).
+    ``left`` and ``right`` are treated as the same table (a dedup
+    self-join): each unordered pair is kept once, as ``id_a < id_b``.
 
     Never an all-pairs cross join: candidates are generated by a
-    hash equi-join on a BLOCKING key (default: first token of the
+    hash equi-join on a BLOCKING key (the first token of the
     string) plus a length-difference prefilter — |a.len - b.len| >
     d implies distance > d, so the cheap codegen filter runs before
     the O(len^2) edit-distance kernel. At 100 TB the blocking key is
@@ -253,7 +248,7 @@ def fuzzy_join(
     """
     from gexp_ml_dask_spark.operators.physical import fan_out
 
-    blk = block_fn or (lambda c: F.split(c, " ").getItem(0))
+    blk = F.split(F.col(text_col), " ").getItem(0).alias("_blk")
     # Widen the probe side to cluster parallelism BEFORE the join:
     # the build side is dim-sized and broadcasts, so the verify
     # stage (candidate fanout x Levenshtein) inherits the probe
@@ -264,19 +259,19 @@ def fuzzy_join(
     a = fan_out(left).select(
         F.col(id_col).alias("id_a"),
         F.col(text_col).alias("_ta"),
-        blk(F.col(text_col)).alias("_blk"),
+        blk,
         F.length(text_col).alias("_la"),
     )
     b = right.select(
         F.col(id_col).alias("id_b"),
         F.col(text_col).alias("_tb"),
-        blk(F.col(text_col)).alias("_blk"),
+        blk,
         F.length(text_col).alias("_lb"),
     )
-    cond = F.abs(F.col("_la") - F.col("_lb")) <= max_distance
-    if self_join:
-        cond = cond & (F.col("id_a") < F.col("id_b"))
-    cand = a.join(b, "_blk").filter(cond)
+    cand = a.join(b, "_blk").filter(
+        (F.abs(F.col("_la") - F.col("_lb")) <= max_distance)
+        & (F.col("id_a") < F.col("id_b"))
+    )
     return (
         cand.withColumn(
             "edit_distance",

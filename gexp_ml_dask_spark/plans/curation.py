@@ -6,17 +6,43 @@ mixture sampling — as ONE lazy DataFrame plan. Catalyst fuses the
 quality scalars into the post-dedup projection and the mixture
 filter under the broadcast join, so the fact table is shuffled
 exactly once (the dedup window) end-to-end.
+
+The plans and the funnel take every rule from the operator modules
+rather than restating it: the PII scrub (``text.pii_scrubbed``), the
+repetition ratio (``text.repetition_ratio``), the keep-first rank
+(``dedup.keep_first_rank``), the decontamination grams
+(``dedup.contamination_hits``) and the mixture rate table
+(``mixture.rate_table``). The eval/train split is
+:func:`_eval_train_split`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from gexp_ml_dask_spark.llm.dedup import exact_dedup
-from gexp_ml_dask_spark.llm.mixture import sample_mixture
-from gexp_ml_dask_spark.llm.text import quality_expr
-from gexp_ml_dask_spark.operators.physical import local_table
+from gexp_ml_dask_spark.llm.dedup import (
+    contamination_hits,
+    exact_dedup,
+    keep_first_rank,
+)
+from gexp_ml_dask_spark.llm.mixture import RESOLUTION, rate_table, sample_mixture
+from gexp_ml_dask_spark.llm.text import (
+    bigram_lm_scores,
+    pii_scrubbed,
+    quality_expr,
+    repetition_ratio,
+)
+
+
+def _eval_train_split(
+    docs: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(eval, train): the held-out decontamination set is every
+    document whose id is a multiple of 20, the training set the rest."""
+    held_out = F.col(id_col) % 20 == 0
+    return docs.filter(held_out), docs.filter(~held_out)
 
 
 def curate_documents(
@@ -74,14 +100,7 @@ def curate_documents_full(
     is fitted exactly so the DuckDB oracle can replay the whole plan
     row-for-row.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    from gexp_ml_dask_spark.llm.text import PII_RULES, bigram_lm_scores
-
-    clean = F.col(text_col)
-    for _, pat, repl in PII_RULES:
-        clean = F.regexp_replace(clean, pat, repl)
-    scrubbed = docs.withColumn(text_col, clean)
+    scrubbed = docs.withColumn(text_col, pii_scrubbed(text_col))
     # The deduped corpus feeds the LM fit AND the gate projection;
     # without a persist each consumer re-runs the scrub + dedup
     # window (measured 2x the whole composite at sf0.1).
@@ -132,17 +151,8 @@ def curate_documents_max(
     gate projection and the decontamination probe broadcasts the
     eval gram table, so neither adds a fact shuffle.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    from gexp_ml_dask_spark.llm.dedup import contamination_hits
-    from gexp_ml_dask_spark.llm.text import PII_RULES, bigram_lm_scores
-
-    clean = F.col(text_col)
-    for _, pat, repl in PII_RULES:
-        clean = F.regexp_replace(clean, pat, repl)
-    scrubbed = docs.withColumn(text_col, clean)
-    eval_docs = scrubbed.filter(F.col(id_col) % 20 == 0)
-    train = scrubbed.filter(F.col(id_col) % 20 != 0)
+    scrubbed = docs.withColumn(text_col, pii_scrubbed(text_col))
+    eval_docs, train = _eval_train_split(scrubbed, id_col)
 
     # Three consumers (LM fit, gates, decontamination grams) read the
     # deduped corpus; persisting it stops each from re-running the
@@ -151,22 +161,7 @@ def curate_documents_max(
         StorageLevel.MEMORY_AND_DISK
     )
 
-    toks = F.split(F.col(text_col), " ")
-    nt = F.size(toks)
-    grams3 = F.when(
-        nt >= 3,
-        F.transform(
-            F.sequence(F.lit(1), nt - 2),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    rep = F.coalesce(
-        F.try_divide(
-            (F.size(grams3) - F.size(F.array_distinct(grams3))).cast("double"),
-            F.size(grams3).cast("double"),
-        ),
-        F.lit(0.0),
-    )
+    rep = F.coalesce(repetition_ratio(text_col, 3), F.lit(0.0))
 
     # hits-only probe: the anti-join needs just the contaminated ids;
     # the full decontaminate() operator would left-join every deduped
@@ -236,23 +231,12 @@ def curation_funnel(
     the LM passes are the fact shuffles; stage attribution is one
     projection over flags the plan already computes.
     """
-    from pyspark.storagelevel import StorageLevel
-    from pyspark.sql import Window
-
-    from gexp_ml_dask_spark.llm.dedup import contamination_hits
-    from gexp_ml_dask_spark.llm.mixture import RESOLUTION
-    from gexp_ml_dask_spark.llm.text import PII_RULES, bigram_lm_scores
     from gexp_ml_dask_spark.ml.pipeline import hash_bucket
 
-    clean = F.col(text_col)
-    for _, pat, repl in PII_RULES:
-        clean = F.regexp_replace(clean, pat, repl)
-    scrubbed = docs.withColumn(text_col, clean)
-    eval_docs = scrubbed.filter(F.col(id_col) % 20 == 0)
-    train = scrubbed.filter(F.col(id_col) % 20 != 0)
+    scrubbed = docs.withColumn(text_col, pii_scrubbed(text_col))
+    eval_docs, train = _eval_train_split(scrubbed, id_col)
 
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(id_col)
-    flagged = train.withColumn("_rn", F.row_number().over(w))
+    flagged = train.withColumn("_rn", keep_first_rank(id_col, text_col))
     deduped = flagged.filter(F.col("_rn") == 1).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -263,29 +247,8 @@ def curation_funnel(
         deduped, eval_docs, decontam_n, id_col, text_col
     ).select(F.col(id_col), F.lit(True).alias("_cont"))
 
-    toks = F.split(F.col(text_col), " ")
-    nt = F.size(toks)
-    grams3 = F.when(
-        nt >= 3,
-        F.transform(
-            F.sequence(F.lit(1), nt - 2),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    rep = F.coalesce(
-        F.try_divide(
-            (F.size(grams3) - F.size(F.array_distinct(grams3))).cast("double"),
-            F.size(grams3).cast("double"),
-        ),
-        F.lit(0.0),
-    )
-
-    spark = docs.sparkSession
-    wdf = local_table(
-        spark,
-        [(s, int(round(x * RESOLUTION))) for s, x in sorted(weights.items())],
-        f"{source_col} string, _cut long",
-    )
+    rep = F.coalesce(repetition_ratio(text_col, 3), F.lit(0.0))
+    wdf = rate_table(docs.sparkSession, weights, source_col)
     staged = (
         flagged.withColumn("_q", F.round(quality_expr(text_col), 6))
         .withColumn("_rep", F.round(rep, 6))

@@ -4728,8 +4728,8 @@ def op_llm_04_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "GROUP BY bigram ORDER BY n DESC, bigram ASC LIMIT 100",
 )
 def op_llm_04_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OP-LLM-04 (bigram LM counts): adjacent-pair zip_with over two
-    row-local token-array slices — no self-join — then wordcount agg
+    """OP-LLM-04 (bigram LM counts): the row-local token 2-grams
+    (``text.token_ngrams``) — no self-join — then wordcount agg
     + deterministic top-100."""
     from gexp_ml_dask_spark.llm.text import bigram_counts
 
@@ -6551,8 +6551,8 @@ def op_llm_05_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "op_llm_06_multimodal_features",
-    # Full value oracle: the stubbed "decode" derives features from
-    # the payload's sha256 digest (multimodal._fake_features), and
+    # Full value oracle: the stand-in "decode" derives features from
+    # the payload's sha256 digest (multimodal.extract_features), and
     # DuckDB's sha256(VARCHAR) hashes the same UTF-8 bytes Spark's
     # encode(text,'UTF-8') produces — so f0 = digest[0]/255.0 is
     # reproducible bit-for-bit in SQL (hex pair -> byte via strpos).
@@ -6581,7 +6581,7 @@ def op_llm_06(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
-    feats = extract_features(media, dim=8, fake=True)
+    feats = extract_features(media, dim=8)
     return feats.groupBy("modality").agg(
         F.count(F.lit(1)).alias("n_assets"),
         F.sum("n_bytes").alias("total_bytes"),

@@ -133,6 +133,39 @@ def test_null_text_excluded_from_token_ops(spark):
         assert ids == {1}, fn.__name__
 
 
+def _ref_token_ngrams(text, n):
+    """Pure-Python token n-grams: split on single spaces, join every
+    run of n consecutive tokens; none for NULL or < n tokens."""
+    toks = [] if text is None else text.split(" ")
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_token_ngrams_matches_python_reference(spark, n):
+    """``text.token_ngrams`` (the one n-gram rule of the text, dedup
+    and curation operators) equals the Python reference on NULL,
+    empty, one-token, exactly-n-token, doubled-space and long texts."""
+    from gexp_ml_dask_spark.llm.text import token_ngrams
+
+    long_text = " ".join(f"w{i % 7}" for i in range(200))
+    texts = [
+        None,
+        "",
+        "one",
+        " ".join(f"t{i}" for i in range(n)),
+        "a  b c   d e",
+        " lead and trail ",
+        long_text,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = {
+        r["id"]: r["g"]
+        for r in df.select("id", token_ngrams("text", n).alias("g")).collect()
+    }
+    for i, text in enumerate(texts):
+        assert got[i] == _ref_token_ngrams(text, n), (n, text)
+
+
 # --------------------------------------------------------- vector validity
 def _mk_emb(spark):
     rows = [

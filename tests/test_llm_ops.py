@@ -191,7 +191,7 @@ def test_multimodal_plumbing(spark, docs):
 
     media = media_from_documents(docs)
     assert set(media.columns) == {"asset_id", "modality", "payload", "mime_type", "meta"}
-    feats = extract_features(media, dim=8, fake=True).collect()
+    feats = extract_features(media, dim=8).collect()
     assert len(feats) == docs.count()
     assert all(len(r["features"]) == 8 for r in feats)
     assert all(0.0 <= v <= 1.0 for r in feats for v in r["features"])

@@ -192,6 +192,33 @@ def test_estimator_api(spark, long_df):
         assert got[s] == pytest.approx(want[s], abs=1e-10)
 
 
+@pytest.mark.parametrize("estimator", ["UpperQuartileNormalizer", "TMMNormalizer"])
+def test_estimator_fit_leaves_only_its_factors_cached(
+    spark, long_df, monkeypatch, estimator
+):
+    """Of every frame a fit persists, only the factor table the model
+    reads stays cached; intermediates (TMM's kernel matrix ``mat``)
+    and second copies of the factors are not left behind."""
+    from gexp_ml_dask_spark.ml import estimators
+
+    frame_cls = type(long_df)
+    handles = []
+    persist = frame_cls.persist
+
+    def record(self, *args, **kwargs):
+        handles.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", record)
+    model = getattr(estimators, estimator)().fit(long_df)
+    assert model.transform(long_df).count() == 24
+
+    cached = [h for h in handles if h.is_cached]
+    assert len(cached) == 1, [h.columns for h in cached]
+    assert set(cached[0].columns) <= set(model.factors.columns)
+    cached[0].unpersist()
+
+
 def test_random_matrices_uq_property(spark):
     """Property: for strictly-positive matrices, UQ factors multiply
     to 1 and transform preserves per-gene value ordering."""

@@ -827,13 +827,15 @@ def test_auc_and_calibration_no_global_window(spark, registry):
 
 def test_every_top_level_definition_is_referenced():
     """Static guard, no Spark: every top-level function or class in
-    ``gexp_ml_dask_spark/`` is named somewhere besides its own
-    definition — in the package, ``tests/``, ``tools/``, ``bench.py``
-    or ``perfbench/``. Queries added through ``@register`` are reached
-    through the registry and are exempt. A helper nothing names is
-    dead code: delete it rather than keep it in step."""
+    ``gexp_ml_dask_spark/`` is referenced by code somewhere besides its
+    own definition — in the package, ``tests/``, ``tools/``,
+    ``bench.py`` or ``perfbench/``. A reference is a name, an attribute
+    or an imported name; a mention in a comment, docstring or string
+    does not count. Queries added through ``@register`` are reached
+    through the registry and are exempt. A helper nothing references
+    is dead code: delete it rather than keep it in step."""
     import ast
-    import re
+    from collections import defaultdict
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
@@ -845,11 +847,19 @@ def test_every_top_level_definition_is_referenced():
         root / "bench.py",
         *(root / "perfbench").rglob("*.py"),
     ]
-    texts = {f: f.read_text() for f in files}
+    trees = {f: ast.parse(f.read_text()) for f in files}
+    refs = defaultdict(list)  # name -> [(file, line)]
+    for f, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs[node.id].append((f, node.lineno))
+            elif isinstance(node, ast.Attribute):
+                refs[node.attr].append((f, node.lineno))
+            elif isinstance(node, ast.alias):
+                refs[node.name.rsplit(".", 1)[-1]].append((f, node.lineno))
     unreferenced = []
     for f in sorted(pkg.rglob("*.py")):
-        lines = texts[f].splitlines()
-        for node in ast.parse(texts[f]).body:
+        for node in trees[f].body:
             if not isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ) or any(
@@ -857,10 +867,10 @@ def test_every_top_level_definition_is_referenced():
                 for d in node.decorator_list
             ):
                 continue
-            word = re.compile(rf"\b{re.escape(node.name)}\b")
             first = min([node.lineno, *(d.lineno for d in node.decorator_list)])
-            own = "\n".join(lines[first - 1 : node.end_lineno])
-            uses = sum(len(word.findall(t)) for t in texts.values())
-            if uses == len(word.findall(own)):
+            if not any(
+                rf != f or not first <= line <= node.end_lineno
+                for rf, line in refs[node.name]
+            ):
                 unreferenced.append(f"{f.relative_to(root)}:{node.name}")
     assert not unreferenced, unreferenced

@@ -1,21 +1,24 @@
-"""Dump ``explain('formatted')`` output for named registry queries.
+"""Dump ``explain(mode="formatted")`` output for named registry queries.
 
 The optimization rounds commit before/after physical plans under
 ``plans/r{N}/<query>_{before,after}.txt`` so plan-shape claims in
 OPTIMIZATION_r{N}.md are checkable without running Spark. "Before"
-files come from running this same tool inside a ``git worktree`` at
-the pre-round commit.
+files come from running this same tool in a checkout of the
+pre-round commit. The cache is cleared before each query, so no
+plan shows a frame an earlier query cached. Exits 1 if any query is
+unknown or fails to plan.
 
 Usage::
 
     python tools/dump_plans.py --out plans/r08 --suffix after \
         op_ml_10_auc op_ml_10_calibration ...
-    python tools/dump_plans.py --out plans/r08 --suffix after --all-touched
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
 import sys
 from pathlib import Path
@@ -41,28 +44,29 @@ def main() -> int:
     spark = get_spark(
         app_name="dump_plans", master="local[4]", shuffle_partitions=8
     )
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     rc = 0
     for name in args.queries:
         if name not in QUERIES:
             print(f"ERR unknown query {name}", file=sys.stderr)
             rc = 1
             continue
+        spark.catalog.clearCache()
+        buf = io.StringIO()
         try:
             df = QUERIES[name](spark, args.sf_dir)
-            text = df._jdf.queryExecution().explainString(mode)
+            with contextlib.redirect_stdout(buf):
+                df.explain(mode="formatted")
         except Exception as ex:
             print(f"ERR {name}: {type(ex).__name__}: {ex}", file=sys.stderr)
             rc = 1
             continue
+        text = buf.getvalue()
         path = out_dir / f"{name}_{args.suffix}.txt"
-        path.write_text(text + "\n")
+        path.write_text(text)
         print(f"wrote {path} ({len(text.splitlines())} plan lines)")
     spark.stop()
     return rc
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
