@@ -20,22 +20,18 @@ queries are checked against the same oracles. All three measures run
 on one core over weighted postings (:func:`_pair_core`); each measure
 (:class:`_PairMeasure`) supplies its postings, pair aggregate and
 score, prefix mass and keep bound, and prefix candidate predicate.
-TF-cosine also has a dense tiled-GEMM form; the one choice left at
-run time is its density probe (:func:`tf_cosine_pairs_auto`), made
-from the input.
+No form is chosen at run time.
 
 Persist lifecycle: the pair joins persist their postings
-(MEMORY_AND_DISK) because BOTH join sides consume them — without the
-persist each side re-runs the interpreted shingle / tokenize
-pipeline, measured 2x the whole join cost. Sparse postings are
-persisted in :func:`_pair_core`, the dense form's term table in
-:func:`tf_cosine_pairs_dense`. The handles live inside the returned
-(lazy) plan, so the functions cannot unpersist eagerly; the release
-contract is the CALLER's: `df.unpersist()` on the consumed result's
-sources or `spark.catalog.clearCache()` when a batch of dedup queries
-completes (bench.py does the latter between queries). Long-lived
-pipelines that loop over corpora should scope each iteration with
-clearCache.
+(MEMORY_AND_DISK) in :func:`_pair_core`, because BOTH join sides
+consume them — without the persist each side re-runs the interpreted
+shingle / tokenize pipeline, measured 2x the whole join cost. The
+handles live inside the returned (lazy) plan, so the functions cannot
+unpersist eagerly; the release contract is the CALLER's:
+`df.unpersist()` on the consumed result's sources or
+`spark.catalog.clearCache()` when a batch of dedup queries completes
+(bench.py does the latter between queries). Long-lived pipelines that
+loop over corpora should scope each iteration with clearCache.
 """
 
 from __future__ import annotations
@@ -46,9 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from gexp_ml_dask_spark.llm.similarity import cosine_expr
-from gexp_ml_dask_spark.llm.text import token_ngrams
-from gexp_ml_dask_spark.operators.physical import local_table
+from gexp_ml_dask_spark.llm.text import token_ngrams, tokens, zipped_ngrams
 
 
 def exact_dedup_groups(
@@ -89,21 +83,27 @@ def _positional_ngrams(
     ).select(id_col, (F.col("_p") + 1).cast("long").alias("pos"), "gram")
 
 
-def shingles(text_col: str, n: int = 3, sep: str = " ") -> F.Column:
-    """Distinct word n-gram shingles of a text column — pure column
-    expression (no UDF): slice a token array at every offset.
+def shingles(text_col: str, n: int = 3) -> F.Column:
+    """Distinct word n-gram shingles of a text column, in first-seen
+    order — a pure column expression (no UDF) over the zipped slices
+    that :func:`~gexp_ml_dask_spark.llm.text.token_ngrams` also uses,
+    so the text is split a fixed number of times per row.
+
+    Short-text contract: a text with fewer than ``n`` tokens is one
+    shingle made of all its tokens (the text itself), so ``""`` gives
+    ``[""]``.
 
     NULL-safe: NULL text yields a NULL array (explode drops the doc
     from every inverted index), matching SQL ``unnest(NULL)``
-    semantics. Before the guard, split(NULL) fell through
-    greatest()/concat_ws() null-swallowing into the shingle set
-    {''} — which inverted-joined NULL-text docs against EMPTY-text
-    docs as jaccard-1.0 pairs on Spark only (round-7 edge sweep,
-    ghost pair found by tools/edge_fixture.py)."""
-    toks = F.split(F.col(text_col), sep)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.concat_ws(sep, F.slice(toks, i + 1, n)),
+    semantics. Without the guard a NULL text would become the
+    shingle set {''} and inverted-join against EMPTY-text docs as
+    jaccard-1.0 pairs on Spark only (round-7 edge sweep, ghost pair
+    found by tools/edge_fixture.py)."""
+    toks = tokens(text_col)
+    # concat_ws keeps the whole-text shingle a NOT NULL element, like
+    # the zipped grams, so no join on the shingles adds a null filter
+    grams = F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
+        zipped_ngrams(toks, n)
     )
     return F.when(F.col(text_col).isNotNull(), F.array_distinct(grams))
 
@@ -852,8 +852,7 @@ def tf_cosine_pairs(
     boilerplate-heavy corpus every posting is hot and the join fans
     out quadratically (observed: GC death at 5k docs x 31-term vocab
     on a default-heap session). :func:`tf_cosine_pairs_prefix` is the
-    lossless hot-vocabulary form; :func:`tf_cosine_pairs_auto` routes
-    dense corpora to :func:`tf_cosine_pairs_dense`."""
+    lossless hot-vocabulary form."""
     return _pair_core(
         docs, _COSINE, threshold, 0, id_col, text_col, None, False
     )
@@ -915,403 +914,11 @@ def tf_cosine_pairs_prefix(
     distinct + verify overhead isn't repaid), and executors need
     memory sized for the pair partial-agg maps either way. For that
     regime the right tool is the sign-LSH blocked embedding path
-    (embedding_neardup_pairs with hyperplane buckets) or the dense
-    tiled GEMM (:func:`tf_cosine_pairs_dense`), not exact sparse
-    cosine — which is why :func:`tf_cosine_pairs_auto` never routes
-    here; call this form by name."""
+    (embedding_neardup_pairs with hyperplane buckets), not exact
+    sparse cosine; call this form by name."""
     return _pair_core(
         docs, _COSINE, threshold, 0, id_col, text_col, None, True
     )
-
-
-def tf_cosine_pairs_dense(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_size: int = 2048,
-    max_vocab: int = 4096,
-) -> DataFrame:
-    """OP-LLM-02 (TF cosine, dense block-GEMM) — the EXACT same pair
-    set as :func:`tf_cosine_pairs`, computed as a tiled dense matrix
-    product for the DENSE-corpus regime where every sparse filter
-    degenerates (BASELINE.md dense-corpus note: a tiny shared
-    vocabulary makes candidates ~quadratic for ANY lossless sparse
-    filter — prefix included).
-
-    Why not the sign-LSH route the round-6 advice suggested: measured
-    on the real dense bench corpus (5k docs, 31-term vocab, all-
-    positive tf vectors), hyperplane LSH needs ~25% of ALL pairs as
-    candidates to reach 95% recall (p=12/t=16; p=16/t=16 gives 10.8%
-    for only 86%) — the bulk of the corpus sits at cosine ~0.62 and
-    the collision S-curve between 0.62 and 0.9 is too flat on the
-    positive orthant. A lossless tiled GEMM does the SAME quadratic
-    pair count at BLAS constants instead of SQL-join constants and
-    keeps recall exactly 1.0, so the dense route stays value-oracled
-    (the shared _TF_COSINE_ORACLE drives it like every other
-    strategy).
-
-    Plan shape:
-
-    1. postings -> bounded vocab index (``max_vocab`` guards the
-       densify memory; exceeding it raises — that corpus is sparse
-       and belongs to the prefix route);
-    2. per-doc sparse vector rows (tid/tf arrays + Spark-computed
-       norm), chunked into contiguous doc_id ranges via the
-       distributed :func:`~...operators.sorts.global_rank` (never an
-       empty-partition window);
-    3. IVF-style EXACT tile pruning by two intersected bounds: the
-       spherical triangle inequality (a chunk pair survives only if
-       cos(theta_ij - r_i - r_j) >= threshold, lossless because
-       angle(a,b) >= angle(c_i,c_j) - r_i - r_j for a in chunk i, b
-       in chunk j) AND the nonnegativity bound
-       cos(a,b) <= sum_t maxw_it*maxw_jt, which prunes
-       vocabulary-disjoint tiles wide radii let through. Chunk stats
-       are chunk-dim x vocab-dim — a driver-sized table (k x V);
-    4. surviving tiles -> ``applyInPandas`` computing the integer tf
-       dot as a float64 GEMM (exact below 2^53) with a slack
-       prefilter ``dot/(|a||b|) >= t - 1e-6``;
-    5. the SPARK-side norms join back and the sparse forms' own
-       cosine ratio rounds and filters — so admission rounding is
-       bit-identical to the other strategies by construction (the
-       UDF only ever emits a slack superset plus the exact integer
-       dot).
-
-    Scale posture: exact dense similarity is O(n^2 V) WORK no matter
-    the engine; this form moves it from a shuffle-heavy SQL join to
-    embarrassingly-parallel vectorized tiles (no shuffle after the
-    chunk assignment, tile fan-out = data duplication bounded by
-    surviving-tile count) and prunes tiles whose geometry cannot
-    reach the threshold (measured sf1 numbers: BASELINE.md
-    §Round-7 — cross-block tiles all pruned by the nonnegativity
-    bound because doc_id-contiguous chunks stay block-pure). For
-    corpora where k = n/chunk_size makes
-    the k x k driver tile matrix unwieldy (>~10^4 chunks), raise
-    ``chunk_size`` toward the task-memory bound (chunk x V doubles);
-    past that, dense exact pairs at 100 TB are the wrong ask — the
-    quadratic is intrinsic, and the honest tools are the approximate
-    family (embedding LSH/IVF with published recall).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from gexp_ml_dask_spark.operators.sorts import global_rank
-
-    spark = docs.sparkSession
-    # Persisted: the size gate, the vocab collect and the vectors all
-    # read it.
-    tf = (
-        _tf_table(docs, id_col, text_col, [])
-        .toDF("doc_id", "term", "tf")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Distributed size gate FIRST (nothing dim-sized touches the
-    # driver until the max_vocab contract holds), then the bounded
-    # vocab is sorted driver-side and re-broadcast as a literal dim —
-    # not a partitionless row_number window (single-task sort +
-    # single-partition WARN). tf is persisted, so the second action
-    # re-reads the cached term table, not the corpus.
-    v_size = tf.select("term").distinct().count()
-    if v_size > max_vocab:
-        tf.unpersist()
-        raise ValueError(
-            f"tf_cosine_pairs_dense: vocabulary {v_size} exceeds "
-            f"max_vocab={max_vocab}; this corpus is sparse — use "
-            "tf_cosine_pairs or tf_cosine_pairs_prefix"
-        )
-    terms = sorted(
-        (r[0] for r in tf.select("term").distinct().collect()),
-        key=lambda v: (v is not None, v),
-    )
-    vocab = local_table(
-        spark, [(t, i) for i, t in enumerate(terms)], "term string, tid int"
-    )
-    tfj = tf.join(F.broadcast(vocab), "term")
-    docvec = (
-        tfj.groupBy("doc_id")
-        .agg(
-            F.collect_list(F.struct("tid", "tf")).alias("_p"),
-            F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("_nrm"),
-        )
-        .select(
-            "doc_id",
-            F.col("_p.tid").alias("tids"),
-            F.col("_p.tf").alias("tfs"),
-            "_nrm",
-        )
-    )
-    ranked = global_rank(docvec, "doc_id", "doc_id", out_col="_rank")
-    docvec = ranked.withColumn(
-        "chunk_id", F.floor((F.col("_rank") - 1) / chunk_size).cast("int")
-    ).drop("_rank")
-    docvec = docvec.persist()
-
-    # Chunk geometry for the exact tile bound: unit-weight centroid
-    # sums per (chunk, tid), plus each chunk's min cosine to its own
-    # centroid (= max angular radius). Both are chunk x vocab /
-    # chunk-dim tables — driver-sized by the max_vocab guard.
-    unit = (
-        tfj.join(docvec.select("doc_id", "_nrm", "chunk_id"), "doc_id")
-        .select(
-            "doc_id",
-            "chunk_id",
-            "tid",
-            (F.col("tf") / F.col("_nrm")).alias("_w"),
-        )
-        # two collect jobs consume this (chunk sums, then min-cosines
-        # against the centroids derived from the first) — persist so
-        # the tfj join + weight projection runs once
-        .persist()
-    )
-    csum = (
-        unit.groupBy("chunk_id", "tid")
-        .agg(F.sum("_w").alias("_s"), F.max("_w").alias("_mx"))
-    )
-    cpdf = csum.toPandas()
-    k = int(cpdf["chunk_id"].max()) + 1 if len(cpdf) else 0
-    C = np.zeros((k, v_size))
-    C[cpdf["chunk_id"].to_numpy(), cpdf["tid"].to_numpy()] = cpdf[
-        "_s"
-    ].to_numpy()
-    Mx = np.zeros((k, v_size))
-    Mx[cpdf["chunk_id"].to_numpy(), cpdf["tid"].to_numpy()] = cpdf[
-        "_mx"
-    ].to_numpy()
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0] = 1.0
-    Cu = C / cn[:, None]
-    # per-doc cosine to its chunk centroid -> per-chunk min.
-    cen = local_table(
-        spark,
-        list(
-            zip(
-                cpdf["chunk_id"].tolist(),
-                cpdf["tid"].tolist(),
-                (cpdf["_s"] / cn[cpdf["chunk_id"].to_numpy()]).tolist(),
-            )
-        ),
-        "chunk_id int, tid int, _c double",
-    )
-    mincos = (
-        unit.join(cen, ["chunk_id", "tid"])
-        .groupBy("doc_id", "chunk_id")
-        .agg(F.sum(F.col("_w") * F.col("_c")).alias("_cos"))
-        .groupBy("chunk_id")
-        .agg(F.min("_cos").alias("_min_cos"))
-        .toPandas()
-    )
-    unit.unpersist()
-    radius = np.zeros(k)
-    mc = np.clip(mincos["_min_cos"].to_numpy(), -1.0, 1.0)
-    radius[mincos["chunk_id"].to_numpy()] = np.arccos(mc)
-
-    # Lossless tile admission, two exact bounds intersected:
-    # (1) spherical triangle inequality — best possible pair angle
-    #     between chunks i,j is max(0, theta_ij - r_i - r_j);
-    # (2) nonnegativity bound — tf weights are >= 0, so
-    #     cos(a,b) = sum_t w_at*w_bt <= sum_t maxw_it*maxw_jt; this
-    #     is what kills vocabulary-disjoint tiles (shared terms = 0
-    #     => bound = 0) that wide chunk radii let through (1).
-    theta = np.arccos(np.clip(Cu @ Cu.T, -1.0, 1.0))
-    best = np.cos(np.maximum(0.0, theta - radius[:, None] - radius[None, :]))
-    best = np.minimum(best, Mx @ Mx.T)
-    tt = threshold - 1.0e-6
-    ii, jj = np.where(np.triu(best >= tt))
-    tiles = [(int(a), int(b)) for a, b in zip(ii, jj)]
-    tiles_df = local_table(spark, tiles, "ci int, cj int")
-
-    a_side = tiles_df.join(
-        docvec, docvec["chunk_id"] == tiles_df["ci"]
-    ).select("ci", "cj", F.lit("a").alias("role"), "doc_id", "tids", "tfs", "_nrm")
-    b_side = (
-        tiles_df.filter(F.col("ci") != F.col("cj"))
-        .join(docvec, docvec["chunk_id"] == tiles_df["cj"])
-        .select("ci", "cj", F.lit("b").alias("role"), "doc_id", "tids", "tfs", "_nrm")
-    )
-    data = a_side.unionByName(b_side)
-    V = v_size
-
-    def _tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        def flatten(part: pd.DataFrame):
-            nnz = np.fromiter(
-                (len(t) for t in part["tids"]), dtype=np.int64
-            )
-            rows = np.repeat(np.arange(len(part)), nnz)
-            tids = (
-                np.concatenate([np.asarray(t) for t in part["tids"]])
-                if len(part)
-                else np.empty(0, dtype=np.int64)
-            ).astype(np.int64)
-            tfs = (
-                np.concatenate([np.asarray(t) for t in part["tfs"]])
-                if len(part)
-                else np.empty(0, dtype=np.int64)
-            ).astype(np.float64)
-            return rows, tids, tfs
-
-        diag = bool((pdf["ci"] == pdf["cj"]).iloc[0])
-        a = pdf[pdf["role"] == "a"]
-        b = a if diag else pdf[pdf["role"] == "b"]
-        ra_, ta_, fa_ = flatten(a)
-        rb_, tb_, fb_ = (ra_, ta_, fa_) if diag else flatten(b)
-        if not len(a) or not len(b):
-            return pd.DataFrame({"id_a": [], "id_b": [], "dot": []})
-        # Densify over the tile's OWN vocabulary, not the global one:
-        # a block-pure tile touches only its block's terms, so the
-        # GEMM inner dimension shrinks from V to |terms in tile|
-        # (10x at sf1: 31 of 310).
-        local, inv = np.unique(np.concatenate([ta_, tb_]), return_inverse=True)
-        la, lb = inv[: len(ta_)], inv[len(ta_):]
-        ida, na = a["doc_id"].to_numpy(), a["_nrm"].to_numpy()
-        idb, nb = b["doc_id"].to_numpy(), b["_nrm"].to_numpy()
-        # float32 GEMM when Cauchy-Schwarz bounds every integer dot
-        # below 2^24 (all intermediates are integers, so the sgemm is
-        # exact there); float64 otherwise — exact below 2^53.
-        dt = (
-            np.float32
-            if float(na.max()) * float(nb.max()) < 2**24
-            else np.float64
-        )
-        A = np.zeros((len(a), len(local)), dtype=dt)
-        A[ra_, la] = fa_
-        if diag:
-            B = A
-        else:
-            B = np.zeros((len(b), len(local)), dtype=dt)
-            B[rb_, lb] = fb_
-        D = (A @ B.T).astype(np.float64)
-        mask = D / np.outer(na, nb) >= tt
-        if diag:
-            mask &= ida[:, None] < idb[None, :]
-        ri, rj = np.where(mask)
-        lo = np.minimum(ida[ri], idb[rj])
-        hi = np.maximum(ida[ri], idb[rj])
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "dot": D[ri, rj]})
-
-    dot = data.groupBy("ci", "cj").applyInPandas(
-        _tile, schema="id_a long, id_b long, dot double"
-    )
-    # The per-doc norms (docvec, persisted) scale with the corpus, so
-    # there is no static broadcast hint; AQE picks broadcast-hash only
-    # while they are actually small. The score is the sparse forms' own
-    # ratio.
-    na, nb = (
-        docvec.select(
-            F.col("doc_id").alias(f"id_{s}"), F.col("_nrm").alias(f"_n{s}")
-        )
-        for s in "ab"
-    )
-    cos = _COSINE.ratio(F.col("dot"), F.col("_na"), F.col("_nb"))
-    return (
-        dot.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn("cosine", F.round(cos, 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-# Density-probe settings of tf_cosine_pairs_auto. Module constants
-# rather than arguments: each has one value in use.
-PROBE_DOCS = 10_000  # contiguous-id sample the density probe reads
-PROBE_MIN_DOCS = 20_000  # below this many docs, skip the probe
-DENSE_MAX_VOCAB = 4096  # densify bound handed to the dense form
-DENSE_MIN_DENSITY = 0.2  # posting fill that routes to the dense form
-
-
-def tf_density_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """Vocabulary-density probe for the dense-route gate: over the
-    ``PROBE_DOCS`` smallest-id documents, measure n_docs, vocab size
-    and the posting fill fraction ``density = postings / (vocab *
-    n_docs)`` — the fraction of the doc x term matrix that is
-    nonzero. One bounded job: the ordered take compiles to
-    TakeOrderedAndProject (per-partition heaps, no global sort), so
-    the probe costs one scan at any corpus scale.
-
-    The sample is a CONTIGUOUS id range, not an arbitrary LIMIT:
-    density is a NEIGHBORHOOD property, and an arbitrary partition
-    sample of a multi-source corpus mixes disjoint vocabularies,
-    diluting the stat by the source count (measured on the sf1
-    fixture: 10 vocabulary-disjoint dense blocks probe at 0.075
-    under LIMIT but 0.37 under an id-contiguous sample — the former
-    misroutes a corpus whose every block is dense at 0.75). Id
-    contiguity is the same locality proxy the dense route's chunking
-    uses. Zipf text probes at ~1e-3 or less either way; a misrouted
-    gate is a performance miss, never a correctness one (every
-    form emits identical rows)."""
-    tok = (
-        docs.select(id_col, text_col)
-        .orderBy(id_col)
-        .limit(PROBE_DOCS)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("term"),
-        )
-        .filter(F.col("term") != "")
-    )
-    row = tok.agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.countDistinct("term").alias("vocab"),
-        F.countDistinct("doc_id", "term").alias("postings"),
-    ).collect()[0]
-    n, v, p = row["n_docs"], row["vocab"], row["postings"]
-    return {
-        "n_docs": n,
-        "vocab": v,
-        "postings": p,
-        "density": (p / (v * n)) if n and v else 0.0,
-    }
-
-
-def tf_cosine_pairs_auto(
-    docs: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """OP-LLM-02 — exact TF-cosine pairs, routed by the input between
-    the dense tiled-GEMM form and the inverted-index form. Both emit
-    the IDENTICAL rows (pinned in tests/test_llm_ops.py::
-    test_dense_tf_cosine_identical_pairs), so the route only changes
-    cost.
-
-    1. Small-corpus cheap-out: a BOUNDED
-       ``limit(PROBE_MIN_DOCS).count()`` (ids only — column-pruned,
-       stops at the limit). Under ``PROBE_MIN_DOCS`` docs the inverted
-       index finishes in seconds regardless of density, and the probe
-       itself was the dominant cost at oracle scale (27 s vs the
-       inverted form's 9 s in the round-7 oracle sweep), so small
-       corpora go straight to :func:`tf_cosine_pairs`.
-    2. Density probe: ONE bounded stats job over ``PROBE_DOCS`` docs
-       (:func:`tf_density_stats`) routes to :func:`tf_cosine_pairs_dense`
-       when vocab <= ``DENSE_MAX_VOCAB`` AND posting density >=
-       ``DENSE_MIN_DENSITY``. Measured endpoints: the dense bench
-       corpus probes at density 0.97 / vocab 31, where dense wins
-       285 s -> <60 s at sf1; Zipf text probes at density ~1e-3.
-    3. Everything else runs :func:`tf_cosine_pairs`."""
-    if docs.select(id_col).limit(PROBE_MIN_DOCS).count() >= PROBE_MIN_DOCS:
-        stats = tf_density_stats(docs, id_col, text_col)
-        if (
-            stats["vocab"] <= DENSE_MAX_VOCAB
-            and stats["density"] >= DENSE_MIN_DENSITY
-        ):
-            try:
-                return tf_cosine_pairs_dense(
-                    docs, threshold, id_col, text_col, max_vocab=DENSE_MAX_VOCAB
-                )
-            except ValueError:
-                # The probe samples a contiguous id range; a
-                # heterogeneous corpus can probe dense yet carry a
-                # global vocabulary past the densify bound (the dense
-                # route checks the FULL vocab and refuses). Fall back
-                # so a misrouted probe stays a performance miss, never
-                # a crash.
-                pass
-    return tf_cosine_pairs(docs, threshold, id_col, text_col)
 
 
 def remove_duplicate_spans(

@@ -442,6 +442,15 @@ def knn_lsh(
     )
 
 
+def _replant(df: DataFrame, schema: str) -> DataFrame:
+    """The round loops' lineage cut: collect a small, already-rounded
+    table to the driver and re-plant it as a broadcast literal
+    (:func:`local_table`) in ``schema``'s column order. It moves
+    values and computes none, so the next round reads the identical
+    doubles; NULLs stay NULL."""
+    return F.broadcast(local_table(df.sparkSession, df.collect(), schema))
+
+
 def kmeans_lloyd(
     embeddings: DataFrame,
     k: int = 8,
@@ -511,17 +520,6 @@ def kmeans_lloyd(
     # shuffle, so each round is ONE exchange (the k*dim centroid agg)
     # instead of three.
     dims = dims.repartition(id_col).persist(StorageLevel.MEMORY_AND_DISK)
-
-    def _replant(cent_df: DataFrame) -> DataFrame:
-        # k*dim rounded rows -> driver -> literal DataFrame: lineage
-        # truncation, NOT computation (everything is pre-rounded)
-        rows = [
-            (int(r["cluster"]), int(r["pos"]), float(r["c"]))
-            for r in cent_df.collect()
-        ]
-        return F.broadcast(
-            local_table(spark, rows, "cluster long, pos int, c double")
-        )
 
     # Seed centroids: the k lowest-id vectors, numbered 0..k-1 in id
     # order. One TakeOrderedAndProject collect straight off the
@@ -600,7 +598,8 @@ def kmeans_lloyd(
             cent = _replant(
                 dims.join(assign.select(id_col, "cluster"), id_col)
                 .groupBy("cluster", "pos")
-                .agg(F.round(F.avg("x"), 6).alias("c"))
+                .agg(F.round(F.avg("x"), 6).alias("c")),
+                "cluster long, pos int, c double",
             )
     dims.unpersist()
     return assign
@@ -664,19 +663,7 @@ def pca_power_top_component(
     )
     from pyspark.sql import Window
 
-    spark = embeddings.sparkSession
-
-    def _replant(v_df: DataFrame) -> DataFrame:
-        # dim rows of pre-rounded doubles -> driver -> literal:
-        # truncates the per-round lineage (see kmeans_lloyd). A zero
-        # norm (C @ v == 0, e.g. a constant first dim) leaves v NULL.
-        rows = [
-            (int(r["pos"]), None if r["v"] is None else float(r["v"]))
-            for r in v_df.collect()
-        ]
-        return F.broadcast(local_table(spark, rows, "pos int, v double"))
-
-    v = _replant(v)
+    v = _replant(v, "pos int, v double")
     for _ in range(n_iter):
         w = (
             cov.join(v.select(F.col("pos").alias("j"), "v"), "j")
@@ -688,11 +675,14 @@ def pca_power_top_component(
         nrm = F.round(
             F.sqrt(F.sum(F.col("w") * F.col("w")).over(Window.partitionBy())), 6
         )
+        # A zero norm (C @ v == 0, e.g. a constant first dim) leaves v
+        # NULL; the replant carries it through as NULL.
         v = _replant(
             w.select(
                 F.col("i").alias("pos"),
                 F.round(F.try_divide(F.col("w"), nrm), 6).alias("v"),
-            )
+            ),
+            "pos int, v double",
         )
     out = v.select(
         F.col("pos").cast("long").alias("pos"),

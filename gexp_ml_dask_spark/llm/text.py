@@ -8,8 +8,9 @@ Three text rules have one definition here, shared by the dedup
 operators and the curation plans: :func:`token_ngrams` (the token
 n-grams of a text), :func:`repetition_ratio` (the share of those
 grams that repeat) and :func:`pii_scrubbed` (the ``PII_RULES``
-replacement chain). ``dedup.shingles`` is not one of them: it is a
-distinct-gram set with its own short- and NULL-text contract.
+replacement chain). ``dedup.shingles`` shares the gram builder of
+:func:`token_ngrams` (:func:`zipped_ngrams`) and adds its own
+distinct-gram, short- and NULL-text contract.
 """
 
 from __future__ import annotations
@@ -32,9 +33,9 @@ LANG_PROFILES: dict[str, list[str]] = {
 }
 
 
-def tokens(text_col: str | Column, sep: str = " ") -> Column:
+def tokens(text_col: str | Column) -> Column:
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(c, sep)
+    return F.split(c, " ")
 
 
 def token_ngrams(text_col: str | Column, n: int) -> Column:
@@ -49,15 +50,21 @@ def token_ngrams(text_col: str | Column, n: int) -> Column:
     sliced the split text at every offset would re-split it once per
     gram (quadratic in the document's length)."""
     toks = tokens(text_col)
+    return F.when(
+        F.size(toks) - (n - 1) >= 1, zipped_ngrams(toks, n)
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def zipped_ngrams(toks: Column, n: int) -> Column:
+    """The ``n``-grams of a token array that holds at least ``n``
+    tokens: zip ``n`` shifted slices and join each tuple with one
+    space. The grams are NOT NULL strings."""
     m = F.size(toks) - (n - 1)
     shifted = [F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(n)]
-    return F.when(
-        m >= 1,
-        F.transform(
-            F.arrays_zip(*shifted),
-            lambda g: F.concat_ws(" ", *[g[f"t{j}"] for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return F.transform(
+        F.arrays_zip(*shifted),
+        lambda g: F.concat_ws(" ", *[g[f"t{j}"] for j in range(n)]),
+    )
 
 
 def repetition_ratio(text_col: str | Column, n: int) -> Column:

@@ -65,8 +65,10 @@ def salted_join(
     lands in ``salt`` tasks instead of one. Row-identical to the
     plain join for inner/left joins on unique dim keys.
 
-    When to salt (measured, tools/skew_ab.py, 50M rows / one key
-    owning 20% / 10k-key long tail / broadcast disabled, min-of-3):
+    When to salt (measured by the skew A/B tool that commit c406849
+    is the last to hold, BASELINE.md "planted-Zipf skew join": 50M
+    rows / one key owning 20% / 10k-key long tail / broadcast
+    disabled, min-of-3):
 
     ==================  ======  =============================
     strategy            wall s  note

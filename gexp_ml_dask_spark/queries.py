@@ -3780,9 +3780,9 @@ def op_llm_02_containment_prefix(
 
 # Sparse term-frequency cosine between documents — the classic IR
 # doc-doc similarity, no embeddings: dot = sum(tfa*tfb) over SHARED
-# terms, norms prejoined per doc. ONE oracle for every physical form
-# (inverted-index join / lossless L2 prefix filter / dense GEMM) — the
-# oracle check covers their equivalence.
+# terms, norms prejoined per doc. ONE oracle for both physical forms
+# (inverted-index join / lossless L2 prefix filter) — the oracle check
+# covers their equivalence.
 _TF_COSINE_ORACLE = (
     "WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term "
     "FROM documents), "
@@ -3801,37 +3801,13 @@ _TF_COSINE_ORACLE = (
 
 @register("op_llm_02_tf_cosine", _TF_COSINE_ORACLE)
 def op_llm_02_tf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OP-LLM-02 (TF cosine): doc-doc cosine over sparse term-
-    frequency vectors — the embedding-free IR similarity, routed by
-    the input (``tf_cosine_pairs_auto``): one bounded stats job
-    measures posting density over the 10k smallest-id docs and routes
-    dense corpora (vocab <= 4k, density >= 0.2) to the exact
-    tiled-GEMM form, everything else to the inverted-index form. The
-    probe is gated by a small-corpus cheap-out: under 20k documents
-    the inverted index finishes in seconds regardless of density and
-    the probe itself was the dominant cost, so small corpora —
-    including the oracle fixtures (500–5,000 docs) — go straight to
-    the inverted form and this entry times the PRODUCTION small-input
-    path. The dense tiled-GEMM route keeps value evidence via
-    tests/test_llm_ops.py::test_dense_tf_cosine_identical_pairs (row
-    parity vs inverted on the probe-dense fixture) and the sf1 dense
-    bench in SCALING.md §2e; op_llm_02_tf_cosine_inverted/_prefix keep
-    the sparse forms value-checked against the SAME oracle. All forms
-    emit identical rows by construction (integer-exact dot + one
-    shared cosine ratio), pinned in tests/test_llm_ops.py."""
-    from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs_auto
-
-    return tf_cosine_pairs_auto(load_docs(spark, sf_dir), threshold=0.9)
-
-
-@register("op_llm_02_tf_cosine_inverted", _TF_COSINE_ORACLE)
-def op_llm_02_tf_cosine_inverted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """OP-LLM-02 (TF cosine, inverted-index form): the posting
-    self-join registered against the same oracle, so the classic
-    sparse form keeps oracle evidence of its own whichever way
-    op_llm_02_tf_cosine's density probe routes."""
+    """OP-LLM-02 (TF cosine, inverted-index form): doc-doc cosine over
+    sparse term-frequency vectors — the embedding-free IR similarity,
+    as the posting self-join of ``tf_cosine_pairs``. Its twin
+    op_llm_02_tf_cosine_prefix runs the lossless L2 prefix filter
+    against the SAME oracle; both forms emit identical rows by
+    construction (integer-exact dot + one shared cosine ratio), pinned
+    in tests/test_llm_ops.py."""
     from gexp_ml_dask_spark.llm.dedup import tf_cosine_pairs
 
     return tf_cosine_pairs(load_docs(spark, sf_dir), threshold=0.9)

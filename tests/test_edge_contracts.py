@@ -140,6 +140,31 @@ def _ref_token_ngrams(text, n):
     return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
+def _ref_shingles(text, n):
+    """Pure-Python shingles: the distinct token n-grams in first-seen
+    order; a text with fewer than n tokens is one shingle of all its
+    tokens; NULL for a NULL text."""
+    if text is None:
+        return None
+    toks = text.split(" ")
+    grams = [" ".join(toks[i : i + n]) for i in range(max(len(toks) - n, 0) + 1)]
+    return list(dict.fromkeys(grams))
+
+
+def _ngram_texts(n):
+    """NULL, empty, one-token, exactly-n-token, doubled-space,
+    leading/trailing-space and long (repeating) texts."""
+    return [
+        None,
+        "",
+        "one",
+        " ".join(f"t{i}" for i in range(n)),
+        "a  b c   d e",
+        " lead and trail ",
+        " ".join(f"w{i % 7}" for i in range(200)),
+    ]
+
+
 @pytest.mark.parametrize("n", [2, 3, 5])
 def test_token_ngrams_matches_python_reference(spark, n):
     """``text.token_ngrams`` (the one n-gram rule of the text, dedup
@@ -147,16 +172,7 @@ def test_token_ngrams_matches_python_reference(spark, n):
     empty, one-token, exactly-n-token, doubled-space and long texts."""
     from gexp_ml_dask_spark.llm.text import token_ngrams
 
-    long_text = " ".join(f"w{i % 7}" for i in range(200))
-    texts = [
-        None,
-        "",
-        "one",
-        " ".join(f"t{i}" for i in range(n)),
-        "a  b c   d e",
-        " lead and trail ",
-        long_text,
-    ]
+    texts = _ngram_texts(n)
     df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
     got = {
         r["id"]: r["g"]
@@ -164,6 +180,23 @@ def test_token_ngrams_matches_python_reference(spark, n):
     }
     for i, text in enumerate(texts):
         assert got[i] == _ref_token_ngrams(text, n), (n, text)
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_shingles_matches_python_reference(spark, n):
+    """``dedup.shingles`` keeps its own contract on top of the shared
+    n-gram rule: distinct grams in first-seen order, one whole-text
+    shingle below n tokens (so ``""`` gives ``[""]``), NULL for NULL."""
+    from gexp_ml_dask_spark.llm.dedup import shingles
+
+    texts = _ngram_texts(n)
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got = {
+        r["id"]: r["g"]
+        for r in df.select("id", shingles("text", n).alias("g")).collect()
+    }
+    for i, text in enumerate(texts):
+        assert got[i] == _ref_shingles(text, n), (n, text)
 
 
 # --------------------------------------------------------- vector validity

@@ -135,8 +135,6 @@ def test_dedup_empty(spark):
         "containment_pairs_prefix",
         "tf_cosine_pairs",
         "tf_cosine_pairs_prefix",
-        "tf_cosine_pairs_dense",
-        "tf_cosine_pairs_auto",
     ):
         assert_empty_frame(getattr(dedup, form)(d), min_cols=3)
 

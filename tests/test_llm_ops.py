@@ -1223,112 +1223,6 @@ def test_prefix_tf_cosine_hot_vocab_lossless(spark, hot_shingle_docs):
     assert inv == pre and inv
 
 
-def test_dense_tf_cosine_identical_pairs(spark, docs):
-    """The tiled dense-GEMM TF cosine (the dense-corpus route, r7)
-    must produce the IDENTICAL row set as the inverted-index join at
-    two thresholds — the centroid-radius tile bound is the spherical
-    triangle inequality (lossless) and the dot is integer-exact, so
-    this is exact set equality. chunk_size=64 forces many tiles
-    (diagonal + off-diagonal + pruned)."""
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_dense,
-    )
-
-    for t in (0.9, 0.7):
-        inv = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs(docs, threshold=t).collect()
-        }
-        den = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs_dense(
-                docs, threshold=t, chunk_size=64
-            ).collect()
-        }
-        assert inv == den, (t, inv ^ den)
-    assert inv  # non-trivial at 0.7 on the planted-dup corpus
-
-
-def test_tf_cosine_auto_gate_boundary(
-    spark, docs, hot_shingle_docs, monkeypatch
-):
-    """The density-probed auto gate: the two fixtures straddle the
-    measured DENSE_MIN_DENSITY threshold (documents probe DENSE, the
-    Zipf hot-vocab corpus probes SPARSE), and on BOTH sides of the
-    boundary the probed route emits the exact inverted-join pair set
-    — flipping the gate never changes results (VERDICT r6 item 4)."""
-    from gexp_ml_dask_spark.llm import dedup
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_auto,
-        tf_density_stats,
-    )
-
-    # PROBE_MIN_DOCS=0 defeats the small-corpus cheap-out (r8) so this
-    # test still exercises the probe itself
-    monkeypatch.setattr(dedup, "PROBE_MIN_DOCS", 0)
-    dense_stats = tf_density_stats(docs)
-    sparse_stats = tf_density_stats(hot_shingle_docs)
-    # the fixtures actually sit on opposite sides of the gate
-    assert dense_stats["density"] >= 0.2 and dense_stats["vocab"] <= 4096
-    assert sparse_stats["density"] < 0.2
-
-    for corpus, t in ((docs, 0.7), (hot_shingle_docs, 0.8)):
-        inv = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs(corpus, threshold=t).collect()
-        }
-        auto = {
-            (r["id_a"], r["id_b"], r["cosine"])
-            for r in tf_cosine_pairs_auto(corpus, threshold=t).collect()
-        }
-        assert inv == auto and inv
-
-
-def test_tf_cosine_probed_dense_falls_back_on_big_vocab(spark, monkeypatch):
-    """A heterogeneous corpus can PROBE dense (its low-id head is
-    template text) while its global vocabulary exceeds the densify
-    bound — the dense route then refuses, and the gate must fall back
-    to a sparse strategy instead of crashing (a misrouted gate is a
-    performance miss, never a correctness one)."""
-    from gexp_ml_dask_spark.llm import dedup
-    from gexp_ml_dask_spark.llm.dedup import (
-        tf_cosine_pairs,
-        tf_cosine_pairs_auto,
-        tf_cosine_pairs_dense,
-    )
-
-    monkeypatch.setattr(dedup, "PROBE_DOCS", 20)  # sees only the dense head
-    monkeypatch.setattr(dedup, "PROBE_MIN_DOCS", 0)  # defeat the cheap-out (r8)
-    monkeypatch.setattr(dedup, "DENSE_MAX_VOCAB", 50)
-
-    head = [
-        (i, "alpha beta gamma delta " + ("alpha beta " * (i % 3)))
-        for i in range(20)
-    ]
-    tail = [
-        (1000 + i, " ".join(f"uniq{i}_{j}" for j in range(8)))
-        for i in range(100)
-    ]
-    corpus = spark.createDataFrame(head + tail, ["doc_id", "text"])
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):  # the dense route itself refuses
-        tf_cosine_pairs_dense(corpus, max_vocab=50).collect()
-
-    inv = {
-        tuple(r)
-        for r in tf_cosine_pairs(corpus, threshold=0.9).collect()
-    }
-    auto = {
-        tuple(r)
-        for r in tf_cosine_pairs_auto(corpus, threshold=0.9).collect()
-    }
-    assert auto == inv and inv  # fell back, identical results
-
-
 def test_prefix_containment_identical_pairs(spark, docs, hot_shingle_docs):
     """The size-oriented prefix-filtered containment must produce the
     IDENTICAL pair set (ids AND rounded containment) as the

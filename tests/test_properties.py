@@ -674,6 +674,33 @@ def test_prefix_jaccard_lossless_property(spark, texts, threshold):
     assert inv == pre, (threshold, texts, inv ^ pre)
 
 
+def py_tf_cosine_pairs(texts, threshold):
+    """Pure-Python TF-cosine pairs of ``enumerate(texts)`` under the
+    engine's admission rule: term frequencies over single-space
+    tokens (empty tokens dropped), cosine = dot / (|a| * |b|), kept
+    when round(cosine, 6) >= threshold. Rounding is half-up on the
+    shortest decimal form of the double, as Spark's ``round`` does."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    tfs = [Counter(t for t in text.split(" ") if t) for text in texts]
+    norms = [math.sqrt(sum(w * w for w in tf.values())) for tf in tfs]
+    out = set()
+    for i in range(len(texts)):
+        for j in range(i + 1, len(texts)):
+            dot = sum(w * tfs[j][t] for t, w in tfs[i].items() if t in tfs[j])
+            if not dot:
+                continue
+            cos = float(
+                Decimal(repr(dot / (norms[i] * norms[j]))).quantize(
+                    Decimal("1e-6"), ROUND_HALF_UP
+                )
+            )
+            if cos >= threshold:
+                out.add((i, j, cos))
+    return out
+
+
 @settings(max_examples=10, deadline=None)
 @given(corpus_strategy(), st.sampled_from([0.5, 0.7, 0.9]))
 def test_prefix_tf_cosine_lossless_property(spark, texts, threshold):
@@ -682,11 +709,10 @@ def test_prefix_tf_cosine_lossless_property(spark, texts, threshold):
     ANY threshold — the Cauchy-Schwarz L2-prefix bound is a theorem,
     so a single counterexample is a bug. The tiny shared vocabulary
     is the adversarial regime (every posting hot, long prefixes).
-    Both sparse forms run on the shared pair core, so the dense
-    tiled-GEMM form, which does not, is the third side."""
+    Both sparse forms run on the shared pair core, so a pure-Python
+    reference (:func:`py_tf_cosine_pairs`) is the third side."""
     from gexp_ml_dask_spark.llm.dedup import (
         tf_cosine_pairs,
-        tf_cosine_pairs_dense,
         tf_cosine_pairs_prefix,
     )
 
@@ -702,11 +728,8 @@ def test_prefix_tf_cosine_lossless_property(spark, texts, threshold):
         for r in tf_cosine_pairs_prefix(docs, threshold=threshold).collect()
     }
     assert inv == pre, (threshold, texts, inv ^ pre)
-    dense = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in tf_cosine_pairs_dense(docs, threshold=threshold).collect()
-    }
-    assert inv == dense, (threshold, texts, inv ^ dense)
+    ref = py_tf_cosine_pairs(texts, threshold)
+    assert inv == ref, (threshold, texts, inv ^ ref)
 
 
 @settings(max_examples=10, deadline=None)

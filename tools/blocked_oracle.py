@@ -77,7 +77,6 @@ TARGETS = {
     "op_llm_02_containment": ("pair", "id_a"),
     "op_llm_02_containment_prefix": ("pair", "id_a"),
     "op_llm_02_tf_cosine": ("pair", "id_a"),
-    "op_llm_02_tf_cosine_inverted": ("pair", "id_a"),
     "op_llm_02_tf_cosine_prefix": ("pair", "id_a"),
     "op_llm_02_minhash_md5": ("pair", "id_a"),
     "op_llm_02_simhash_neardup": ("pair", "id_a"),
