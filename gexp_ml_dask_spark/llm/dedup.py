@@ -149,16 +149,24 @@ def _set_postings(
     re-evaluating the whole interpreted higher-order shingle expression
     per exploded row — measured 31s -> <2s at sf0.01. The intermediate
     projection pins the expensive expression below the Generate; size()
-    above it reads the materialized array attribute."""
+    above it reads the materialized array attribute.
+
+    ``explode_outer`` plus a NOT NULL filter on the shingle, not
+    ``explode``: for a plain ``explode`` Spark infers ``size(<array>) >
+    0 AND isnotnull(<array>)`` on the generator's input, and that
+    Filter, below the ``fan_out`` exchange, evaluates the shingle
+    expression twice more per document. A NULL text (NULL array)
+    gives one NULL shingle, which the filter drops, so the rows are
+    those of ``explode``."""
     shingled = docs.select(
         F.col(id_col), shingles(text_col, n).alias("_shs"), *blk
     )
     return shingled.select(
         F.col(id_col),
         F.size("_shs").alias("_nsh"),
-        F.explode("_shs").alias("_sh"),
+        F.explode_outer("_shs").alias("_sh"),
         *blk,
-    )
+    ).filter(F.col("_sh").isNotNull())
 
 
 def _tf_table(

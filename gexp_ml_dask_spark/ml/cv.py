@@ -18,8 +18,6 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gexp_ml_dask_spark.operators.physical import persist_df, unpersist_df
-
 
 def with_fold(df: DataFrame, k: int = 10, seed: int = 42) -> DataFrame:
     """Assign a fold 0..k-1 per row (KFold(shuffle=True, seed),
@@ -46,21 +44,22 @@ def with_fold_hash(
 
 
 def cross_validate(
-    df: DataFrame,
+    folded: DataFrame,
     fit_fn,
     score_fn,
     k: int = 10,
-    seed: int = 42,
     parallelism: int = 4,
 ) -> list[float]:
     """OP-ML-06 — k-fold CV with concurrently-submitted fold jobs.
 
-    ``fit_fn(train_df) -> model``; ``score_fn(model, test_df) ->
-    float``. The folded set is persisted once and every fold filter
-    reads the cached partitions (the reference persists X_train for
-    the same reason, dask_pipeline.py:61-74).
+    ``folded`` carries the ``fold`` column of :func:`with_fold`;
+    fold ``i`` trains on the rows of every other fold and scores on
+    its own. ``fit_fn(train_df) -> model``; ``score_fn(model,
+    test_df) -> float``. The caller persists ``folded`` once, so every
+    fold filter reads the cached partitions (the reference persists
+    X_train for the same reason, dask_pipeline.py:61-74), and keeps
+    it until everything else that reads it has finished.
     """
-    folded = persist_df(with_fold(df, k, seed), eager=True)
 
     def run_fold(i: int) -> float:
         train = folded.filter(F.col("fold") != i)
@@ -68,12 +67,8 @@ def cross_validate(
         model = fit_fn(train)
         return score_fn(model, test)
 
-    try:
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            scores = list(pool.map(run_fold, range(k)))
-    finally:
-        unpersist_df(folded)
-    return scores
+    with ThreadPoolExecutor(max_workers=parallelism) as pool:
+        return list(pool.map(run_fold, range(k)))
 
 
 def cv_summary(scores: list[float]) -> tuple[float, float]:

@@ -29,18 +29,25 @@ lazy plan for every action, so the port fixes two points:
   same rows. The UQ step's own persists (the zero-gene-filtered
   table and the symmetrized factors) are released as soon as the
   checkpoint exists.
-- The scaled train set is persisted eagerly: it feeds all k folds
-  plus the eval fit, and is released when the run ends.
+- The scaled train set is persisted eagerly ONCE, with its CV fold
+  column (:func:`~gexp_ml_dask_spark.ml.cv.with_fold`): the k fold
+  fits filter it, and the eval fit reads it whole (the model uses
+  only its features and label columns). The eval fit runs on its own
+  thread beside the fold fits, and the set is released once both the
+  eval fit and the folds have finished, before the eval score. The
+  test set is scored once and is not persisted.
 
 Nothing the pipeline persists outlives the call.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gexp_ml_dask_spark.ml.cv import cross_validate, cv_summary
+from gexp_ml_dask_spark.ml.cv import cross_validate, cv_summary, with_fold
 from gexp_ml_dask_spark.ml.metrics import accuracy, r2_score
 from gexp_ml_dask_spark.ml.models import make_classifier, make_regressor
 from gexp_ml_dask_spark.ml.normalization import upper_quartile_transform
@@ -102,9 +109,12 @@ def gexp_pipeline(
     ``labels``: (sample_id, label) with STRING labels for
     classification, DOUBLE for regression.
 
-    ``fit_partitions``: repartition the scaled train/test sets to
-    this many partitions before model fitting. The assembled-vector
-    table has one row per SAMPLE — thousands of rows, not billions —
+    ``fit_partitions``: repartition the scaled train set, the fit
+    input, to this many partitions before model fitting (the test
+    set is scored once and keeps the labeled table's layout; an
+    accuracy does not depend on it, an r² only in its last digits,
+    through the order of its sums). The assembled-vector table has
+    one row per SAMPLE — thousands of rows, not billions —
     while the upstream long-form shuffles run at full width; leaving
     the fit input at shuffle-partition width makes every MLlib
     tree-iteration job pay ~32 near-empty tasks × dozens of jobs ×
@@ -165,8 +175,7 @@ def gexp_pipeline(
     train, test = scaler.transform(train), scaler.transform(test)
     if fit_partitions:
         train = train.repartition(fit_partitions)
-        test = test.repartition(fit_partitions)
-    train = persist_df(train, eager=True)
+    train = persist_df(with_fold(train, k_folds, seed), eager=True)
 
     if task == "classification":
         make_model = lambda: make_classifier("features_scaled", label_col, seed)  # noqa: E731
@@ -188,18 +197,19 @@ def gexp_pipeline(
         return make_model().fit(df).copy()
 
     try:
-        cv_scores = cross_validate(
-            train,
-            fit_fn=fit,
-            score_fn=score,
-            k=k_folds,
-            seed=seed,
-            parallelism=cv_parallelism,
-        )
-        mean_cv, var_cv = cv_summary(cv_scores)
-
-        eval_model = fit(train)
-        eval_score = score(eval_model, test)
+        # Leaving the with block waits for the eval fit, also when a
+        # fold raises, so the unpersist never races a running fit.
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            eval_fit = pool.submit(fit, train)
+            cv_scores = cross_validate(
+                train,
+                fit_fn=fit,
+                score_fn=score,
+                k=k_folds,
+                parallelism=cv_parallelism,
+            )
+            eval_model = eval_fit.result()
     finally:
         unpersist_df(train)
-    return mean_cv, var_cv, eval_score
+    mean_cv, var_cv = cv_summary(cv_scores)
+    return mean_cv, var_cv, score(eval_model, test)

@@ -250,16 +250,8 @@ def test_pipeline_scaler_fits_on_model_train_rows(spark, gexp_data, monkeypatch)
     assert sorted(seen["train"] + seen["scored"]) == _ids(labels)
 
 
-def test_pipeline_releases_its_persists(spark, gexp_data, monkeypatch):
-    """Every frame persisted during the pipeline run — the UQ step's
-    zero-gene-filtered table and symmetrized factors, the CV's folded
-    set and the scaled train set — is uncached when the call
-    returns."""
-    from pyspark.storagelevel import StorageLevel
-
-    gp = _pipeline_module()
-    gexp, labels, _ = gexp_data
-    frame_cls = type(gexp)
+def _record_persists(frame_cls, monkeypatch) -> list:
+    """Every frame ``persist`` is called on from now on, in order."""
     handles = []
     persist = frame_cls.persist
 
@@ -268,12 +260,65 @@ def test_pipeline_releases_its_persists(spark, gexp_data, monkeypatch):
         return persist(self, *args, **kwargs)
 
     monkeypatch.setattr(frame_cls, "persist", record)
-    gp.gexp_pipeline(gexp, labels, "classification", k_folds=3, cv_parallelism=3)
+    return handles
 
-    # kept + factors (UQ), folded (CV), train
-    assert len(handles) >= 4
+
+def _assert_released(handles) -> None:
+    from pyspark.storagelevel import StorageLevel
+
     assert [h.is_cached for h in handles] == [False] * len(handles)
     assert [h.storageLevel for h in handles] == [StorageLevel.NONE] * len(handles)
+
+
+def test_pipeline_releases_its_persists(spark, gexp_data, monkeypatch):
+    """The pipeline persists exactly three frames — the UQ step's
+    zero-gene-filtered table and symmetrized factors, and the scaled
+    train set with its fold column, which the CV folds and the eval
+    fit share — and every one is uncached when the call returns."""
+    gp = _pipeline_module()
+    gexp, labels, _ = gexp_data
+    handles = _record_persists(type(gexp), monkeypatch)
+    gp.gexp_pipeline(gexp, labels, "classification", k_folds=3, cv_parallelism=3)
+
+    # kept + factors (UQ), then the fold-tagged train set
+    assert len(handles) == 3
+    assert "fold" in handles[-1].columns
+    _assert_released(handles)
+
+
+@pytest.mark.parametrize("failing", ["eval_fit", "fold_fit"])
+def test_pipeline_fit_failure_propagates_and_releases(
+    spark, gexp_data, monkeypatch, failing
+):
+    """A fit that raises — the eval fit, which runs on its own thread
+    beside the folds, or every fold fit — surfaces from
+    ``gexp_pipeline``, and every frame the run persisted is uncached
+    afterwards."""
+    gp = _pipeline_module()
+    gexp, labels, _ = gexp_data
+    handles = _record_persists(type(gexp), monkeypatch)
+    make_classifier = gp.make_classifier
+
+    class Boom(RuntimeError):
+        pass
+
+    class Estimator:
+        def __init__(self, *args):
+            self.inner = make_classifier(*args)
+
+        def fit(self, df):
+            # The eval fit reads the persisted frame itself; a fold
+            # fit reads a filter of it.
+            whole = any(df is h for h in handles)
+            if whole == (failing == "eval_fit"):
+                raise Boom(failing)
+            return self.inner.fit(df)
+
+    monkeypatch.setattr(gp, "make_classifier", Estimator)
+    with pytest.raises(Boom, match=failing):
+        gp.gexp_pipeline(gexp, labels, "classification", k_folds=3, cv_parallelism=3)
+    assert len(handles) == 3
+    _assert_released(handles)
 
 
 def test_gexp_pipeline_and_ops_build_no_python_rdd(spark, gexp_data, monkeypatch):
@@ -467,12 +512,54 @@ def test_model_backend_gate(spark):
         make_lightgbm_classifier,
     )
 
+    from pyspark.ml.classification import (
+        GBTClassifier,
+        OneVsRest,
+        RandomForestClassifier,
+    )
+
     assert CLASSIFIER_ENGINE == "mllib.random_forest"
-    assert type(make_classifier()).__name__ == "RandomForestClassifier"
+    assert isinstance(make_classifier(), RandomForestClassifier)
     assert LIGHTGBM_ENGINE == "mllib.onevsrest_gbt"
     lgbm = make_lightgbm_classifier()
-    assert type(lgbm).__name__ == "OneVsRest"
-    assert type(lgbm.getClassifier()).__name__ == "GBTClassifier"
+    assert isinstance(lgbm, OneVsRest)
+    assert isinstance(lgbm.getClassifier(), GBTClassifier)
+
+
+def test_tree_ensembles_skip_per_tree_wrappers(spark):
+    """PySpark 4 caches ``trees`` in a ``cached_property``, and every
+    ``JavaModel.__init__`` fills it (``Params.params`` reads each
+    attribute of ``dir(self)`` that is not a plain property), building
+    one Python model per tree on every fit. The factories' fitted
+    models — the forest, the boosted regressor and each per-class
+    boosted classifier of the LightGBM variant — must not have built
+    them, and must still list every tree when asked."""
+    from pyspark.ml.linalg import Vectors
+
+    from gexp_ml_dask_spark.ml.models import (
+        make_classifier,
+        make_lightgbm_classifier,
+        make_regressor,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (Vectors.dense([float(i % 5), float(i % 3)]), float(i % 3), float(i))
+            for i in range(60)
+        ],
+        ["features", "label_idx", "label"],
+    )
+    lgbm = make_lightgbm_classifier(max_iter=3).fit(df)
+    fitted = [
+        (make_classifier().fit(df), 50),
+        (make_regressor().fit(df), 20),
+        *((m, 3) for m in lgbm.models),
+    ]
+    assert len(fitted) == 5
+    for model, n_trees in fitted:
+        assert "trees" not in vars(model), type(model)
+        assert len(model.trees) == n_trees == model.getNumTrees
+        assert model.trees[0].numNodes >= 1
 
 
 def test_mad_outlier_stats_golden(spark):

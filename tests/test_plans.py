@@ -331,6 +331,23 @@ def test_ngram_shingles_materialized_below_generate(spark, registry):
     assert "size(transform(" not in analyzed, analyzed[:4000]
 
 
+def test_set_postings_build_shingles_once(spark):
+    """The shingle-set postings evaluate the shingle expression ONCE
+    per document. A plain ``explode`` makes Spark infer ``size(<array>)
+    > 0 AND isnotnull(<array>)`` on the generator input, below the
+    ``fan_out`` exchange, and that Filter evaluated the whole
+    expression twice more per document (3 ``array_distinct(`` in the
+    postings plan)."""
+    from gexp_ml_dask_spark.llm.dedup import _set_postings
+    from gexp_ml_dask_spark.queries import load_docs
+
+    # A cached copy of the same postings would replace the plan.
+    spark.catalog.clearCache()
+    postings = _set_postings(load_docs(spark, SF_ORACLE), "doc_id", "text", 3, [])
+    optimized = postings._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("array_distinct(") == 1, optimized
+
+
 def test_md5_minhash_stays_codegen_no_python(spark, registry):
     """The md5_32 MinHash family must stay JVM-side: md5/conv are
     built-in expressions, the 24 per-hash mins are one partial+final
