@@ -4,376 +4,95 @@ Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata (datamodel.MEDIA_SCHEMA). The Spark-side plumbing — schema,
 partition sizing, Arrow batch shape, UDF signatures — is real and
 tested. The decoders are REAL for every format parseable without a
-codec library, each value-oracled end-to-end against its pixel /
-sample formula:
+codec library, and each decode query is value-oracled end-to-end
+against its pixel / sample formula:
 
-- image: uncompressed P6 PPM (pure numpy netpbm parser;
-  :func:`ppm_decode_stats`) AND compressed PNG — stdlib ``zlib``
-  inflate + all five scanline unfilters (None/Sub/Up/Average/Paeth)
-  in numpy, CRC-checked chunk walk (:func:`png_decode_stats`),
-- audio: RIFF/WAVE 16-bit PCM (stdlib ``wave`` RIFF parse;
-  :func:`wav_decode_stats`),
-- video: YUV4MPEG2 frame sampling (header-derived frame-size walk;
-  :func:`y4m_sample_stats`).
+- image: uncompressed P6 PPM (:func:`ppm_decode_stats`) AND
+  compressed PNG — stdlib ``zlib`` inflate + all five scanline
+  unfilters in numpy, CRC-checked chunk walk
+  (:func:`png_decode_stats`),
+- audio: RIFF/WAVE 16-bit PCM (:func:`wav_decode_stats`),
+- video: YUV4MPEG2 frame sampling (:func:`y4m_sample_stats`).
+
+The codecs themselves (``decode_image``, ``encode_ppm``,
+``encode_png``, ``decode_png``, ``decode_audio``, ``encode_wav``,
+``sample_video_frames``) are defined once in
+:mod:`gexp_ml_dask_spark.worker`, which cloudpickle ships by value to
+the Python workers, and re-exported here. The decode queries call the
+same functions the unit tests exercise. Every per-asset ``mapInPandas``
+pass goes through one scaffold, :func:`_per_asset`.
 
 LOSSY codecs (JPEG/WebP, mp3/flac/ogg, mp4/webm) remain
 honestly STUBBED (Pillow/torchaudio/ffmpeg are not in this
-container) behind ``decode_*`` branches that raise
-``NotImplementedError``, with a deterministic fake feature path so
-the distributed plumbing is exercisable end-to-end for those
-modalities too.
+container): the ``decode_*`` functions raise ``NotImplementedError``
+for them, and a deterministic fake feature path keeps the
+distributed plumbing exercisable end-to-end for those modalities too.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gexp_ml_dask_spark.worker import (
+    channel_means,
+    decode_audio,
+    decode_image,
+    decode_png,
+    encode_png,
+    encode_ppm,
+    encode_wav,
+    sample_video_frames,
+)
 
 # Payload rows are large (MBs); decode in slices of at most this
 # many rows so decoded frames fit executor memory at scale — the
 # Arrow batch size (spark.sql.execution.arrow.maxRecordsPerBatch,
 # default 10k) is tuned for narrow rows and is NOT a safe decode
-# unit for MB-sized payloads. extract_features enforces this cap by
+# unit for MB-sized payloads. _per_asset enforces this cap by
 # re-chunking every incoming Arrow batch.
 DECODE_BATCH_ROWS = 64
 
 
-def decode_image(payload: bytes) -> object:
-    """REAL decode for binary PPM (P6) and PNG — pure stdlib + numpy,
-    no codec library. PPM: parse the ASCII header (width, height,
-    maxval, ``#`` comments per the netpbm spec), then
-    ``np.frombuffer`` the raw RGB plane into an (h, w, 3) uint8
-    array. PNG: dispatch to :func:`decode_png` (zlib inflate +
-    scanline unfiltering). LOSSY formats (JPEG/WebP) still raise —
-    their DCT/VP8 decoders need Pillow/opencv, which this container
-    does not ship; that boundary is the honest stub, not the whole
-    function."""
-    if payload.startswith(_PNG_SIG):
-        return decode_png(payload)
-    if not payload.startswith(b"P6"):
-        raise NotImplementedError(
-            "only P6 PPM and PNG are decodable without codec libs; "
-            "JPEG/WebP require Pillow/opencv"
-        )
-    import numpy as np
+def _per_asset(
+    frame: DataFrame, row, schema: str, rounded=(), sized: bool = True
+) -> DataFrame:
+    """One ``mapInPandas`` pass mapping every input row to one output
+    row: ``row(*values)`` takes the row's values in column order and
+    returns a tuple in ``schema``'s column order. Each Arrow batch is
+    re-chunked to DECODE_BATCH_ROWS rows, so at most that many payloads
+    are decoded at once. ``sized`` first spreads the input over the
+    cluster's default parallelism (at least 2 partitions); the
+    ``rounded`` columns come out rounded to 6dp.
 
-    idx, vals = 2, []
-    while len(vals) < 3:
-        while idx < len(payload) and payload[idx : idx + 1].isspace():
-            idx += 1
-        if payload[idx : idx + 1] == b"#":
-            while idx < len(payload) and payload[idx : idx + 1] != b"\n":
-                idx += 1
-            continue
-        start = idx
-        while idx < len(payload) and not payload[idx : idx + 1].isspace():
-            idx += 1
-        vals.append(int(payload[start:idx]))
-    idx += 1  # exactly one whitespace byte separates maxval from data
-    width, height, maxval = vals
-    if maxval > 255:
-        raise NotImplementedError("16-bit-per-channel PPM not supported")
-    return np.frombuffer(
-        payload, dtype=np.uint8, count=width * height * 3, offset=idx
-    ).reshape(height, width, 3)
+    ``row`` runs on the Python workers, which may not be able to
+    import this package: it may call stdlib, numpy, pandas and the
+    functions imported by name from :mod:`gexp_ml_dask_spark.worker`
+    (README design rule 12)."""
+    batch_rows = DECODE_BATCH_ROWS
+    names = [field.split()[0] for field in schema.split(", ")]
 
-
-def encode_ppm(arr) -> bytes:
-    """Inverse of :func:`decode_image` for the P6 subset: header +
-    raw RGB bytes."""
-    h, w = arr.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + arr.astype("uint8").tobytes()
-
-
-# PNG (RFC 2083): 8-byte signature, then length/type/data/CRC32
-# chunks; pixel data is zlib-compressed scanlines, each prefixed by
-# one filter byte (0 None, 1 Sub, 2 Up, 3 Average, 4 Paeth).
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _make_png_codec():
-    """Build the PNG encode/decode pair INSIDE a factory so the
-    functions pickle BY VALUE (their qualname is not importable):
-    mapInPandas closures that call them then work from foreign-CWD
-    executors where the package itself is not on sys.path — the same
-    self-containment contract the other decode closures keep by
-    inlining (see ppm_decode_stats)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    channels = {0: 1, 2: 3, 6: 4}  # gray, RGB, RGBA
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    def encode_png(arr, row_filters=None) -> bytes:
-        """Real PNG encoder for 8-bit gray/RGB/RGBA, non-interlaced:
-        applies the spec's per-row filter (``row_filters[r]`` in
-        0..4, default all-None) then zlib-compresses the filtered
-        scanlines. Used by tests and the oracled decode query to
-        exercise EVERY unfilter path in :func:`decode_png`."""
-        arr = np.asarray(arr, dtype=np.uint8)
-        if arr.ndim == 2:
-            arr = arr[:, :, None]
-        h, w, ch = arr.shape
-        ctype = {1: 0, 3: 2, 4: 6}[ch]
-        if row_filters is None:
-            row_filters = [0] * h
-        bpp = ch
-        raw = bytearray()
-        prev = np.zeros(w * ch, dtype=np.uint8)
-        for r in range(h):
-            row = arr[r].reshape(-1)
-            f = row_filters[r]
-            left = np.concatenate([np.zeros(bpp, np.uint8), row[:-bpp]])
-            if f == 0:
-                filt = row
-            elif f == 1:  # Sub: predict from the pixel to the left
-                filt = (row.astype(np.int16) - left).astype(np.uint8)
-            elif f == 2:  # Up: predict from the pixel above
-                filt = (row.astype(np.int16) - prev).astype(np.uint8)
-            elif f == 3:  # Average: floor((left + up) / 2)
-                filt = (
-                    row.astype(np.int16)
-                    - (left.astype(np.int16) + prev.astype(np.int16)) // 2
-                ).astype(np.uint8)
-            elif f == 4:  # Paeth: nearest of l/u/ul to l+u-ul
-                ul = np.concatenate([np.zeros(bpp, np.uint8), prev[:-bpp]])
-                a, b, c = (x.astype(np.int16) for x in (left, prev, ul))
-                p = a + b - c
-                pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-                pred = np.where(
-                    (pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)
+    def run(batches):
+        for pdf in batches:
+            for lo in range(0, len(pdf), batch_rows):
+                chunk = pdf.iloc[lo : lo + batch_rows]
+                yield pd.DataFrame(
+                    [row(*r) for r in chunk.itertuples(index=False, name=None)],
+                    columns=names,
                 )
-                filt = (row.astype(np.int16) - pred).astype(np.uint8)
-            else:
-                raise ValueError(f"unknown PNG filter {f}")
-            raw.append(f)
-            raw.extend(filt.tobytes())
-            prev = row
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-        return (
-            sig
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
+
+    if sized:
+        frame = frame.repartition(
+            max(2, frame.sparkSession.sparkContext.defaultParallelism)
         )
-
-    def decode_png(payload: bytes):
-        """REAL decode for COMPRESSED images — PNG 8-bit
-        gray/RGB/RGBA, non-interlaced — with only stdlib
-        ``zlib``/``struct`` + numpy: CRC-checked chunk walk, IDAT
-        concatenation + inflate, then the five scanline unfilters.
-        None/Up/Sub rows reconstruct vectorized (Sub is a
-        per-channel-lane cumulative sum — mod 256 distributes over
-        the prefix sum); Average/Paeth are sequential in x BY SPEC
-        (each byte depends on the just-reconstructed left
-        neighbour), so their inner loop is per-byte Python —
-        parallelism comes from the mapInPandas batch axis, one image
-        per iteration, which is the right grain at scale. 16-bit,
-        palette, and Adam7-interlaced PNGs raise
-        NotImplementedError."""
-        if not payload.startswith(sig):
-            raise ValueError("not a PNG payload")
-        pos, width, height, ch = 8, None, None, None
-        idat = bytearray()
-        while pos + 12 <= len(payload):
-            (length,) = struct.unpack_from(">I", payload, pos)
-            if pos + 12 + length > len(payload):
-                raise ValueError("truncated PNG chunk")
-            ctype = payload[pos + 4 : pos + 8]
-            data = payload[pos + 8 : pos + 8 + length]
-            (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
-            if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-            pos += 12 + length
-            if ctype == b"IHDR":
-                width, height, depth, color, _comp, _filt, interlace = (
-                    struct.unpack(">IIBBBBB", data)
-                )
-                if depth != 8:
-                    raise NotImplementedError("only 8-bit PNG supported")
-                if color not in channels:
-                    raise NotImplementedError(
-                        f"PNG color type {color} not supported "
-                        "(8-bit gray/RGB/RGBA only; palette (3) and "
-                        "gray+alpha (4) need conversion upstream)"
-                    )
-                if interlace:
-                    raise NotImplementedError(
-                        "Adam7 interlace not supported"
-                    )
-                ch = channels[color]
-            elif ctype == b"IDAT":
-                idat.extend(data)
-            elif ctype == b"IEND":
-                break
-        if width is None:
-            raise ValueError("PNG missing IHDR")
-        raw = zlib.decompress(bytes(idat))
-        stride, bpp = width * ch, ch
-        if len(raw) != height * (stride + 1):
-            raise ValueError("PNG pixel data size mismatch")
-        out = np.empty((height, stride), dtype=np.uint8)
-        prev = np.zeros(stride, dtype=np.int32)
-        for r in range(height):
-            f = raw[r * (stride + 1)]
-            line = np.frombuffer(
-                raw, np.uint8, stride, r * (stride + 1) + 1
-            ).astype(np.int32)
-            if f == 0:
-                rec = line
-            elif f == 2:  # Up
-                rec = (line + prev) & 0xFF
-            elif f == 1:  # Sub: cumulative sum along channel lanes
-                rec = (
-                    np.cumsum(
-                        line.reshape(width, bpp), axis=0, dtype=np.int64
-                    ).reshape(stride)
-                    & 0xFF
-                )
-            elif f in (3, 4):  # Average/Paeth: sequential by spec
-                rec = np.zeros(stride, dtype=np.int32)
-                for x in range(stride):
-                    a = int(rec[x - bpp]) if x >= bpp else 0
-                    if f == 3:
-                        pred = (a + int(prev[x])) // 2
-                    else:
-                        b = int(prev[x])
-                        c = int(prev[x - bpp]) if x >= bpp else 0
-                        p = a + b - c
-                        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                        pred = (
-                            a
-                            if pa <= pb and pa <= pc
-                            else (b if pb <= pc else c)
-                        )
-                    rec[x] = (line[x] + pred) & 0xFF
-            else:
-                raise ValueError(f"unknown PNG filter {f}")
-            out[r] = rec.astype(np.uint8)
-            prev = rec.astype(np.int32)
-        img = out.reshape(height, width, ch)
-        return img[:, :, 0] if ch == 1 else img
-
-    return encode_png, decode_png
-
-
-encode_png, decode_png = _make_png_codec()
-
-
-def decode_audio(payload: bytes) -> tuple:
-    """REAL decode for RIFF/WAVE PCM — the stdlib ``wave`` parser +
-    ``np.frombuffer``, no audio library: returns (samples, rate) with
-    samples an int16 numpy array (mono) or (n, channels) array.
-    COMPRESSED codecs (mp3/flac/ogg/aac) still raise — entropy
-    decoding needs soundfile/torchaudio; that boundary is the honest
-    stub, not the whole function."""
-    if not (payload.startswith(b"RIFF") and payload[8:12] == b"WAVE"):
-        raise NotImplementedError(
-            "only RIFF/WAVE PCM is decodable without audio libs; "
-            "mp3/flac/ogg require soundfile/torchaudio"
-        )
-    import io
-    import wave
-
-    import numpy as np
-
-    try:
-        with wave.open(io.BytesIO(payload), "rb") as wf:
-            if wf.getsampwidth() != 2:
-                raise NotImplementedError("only 16-bit PCM supported")
-            rate = wf.getframerate()
-            n = wf.getnframes()
-            raw = wf.readframes(n)
-            samples = np.frombuffer(raw, dtype="<i2")
-            if wf.getnchannels() > 1:
-                samples = samples.reshape(n, wf.getnchannels())
-    except wave.Error as e:
-        # non-PCM RIFF/WAVE (mu-law, ADPCM, ...) passes the signature
-        # guard but needs a codec — keep the stub contract uniform so
-        # callers can route every not-decodable-here format one way
-        raise NotImplementedError(
-            f"non-PCM WAV codec not supported without audio libs: {e}"
-        ) from e
-    return samples, rate
-
-
-def encode_wav(samples, rate: int = 16_000) -> bytes:
-    """Inverse of :func:`decode_audio` for 16-bit mono PCM."""
-    import io
-    import wave
-
-    import numpy as np
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(np.asarray(samples, dtype="<i2").tobytes())
-    return buf.getvalue()
-
-
-def sample_video_frames(payload: bytes, every_n: int = 30) -> list[bytes]:
-    """REAL frame sampling for YUV4MPEG2 (y4m) — uncompressed video
-    with a plain-text header, parseable without any codec: derive the
-    fixed frame size from the header (W/H/colorspace), walk the
-    stream frame by frame, keep every ``every_n``-th raw frame.
-    COMPRESSED containers (mp4/webm/mkv) still raise — they need
-    ffmpeg/decord; that boundary is the honest stub."""
-    if not payload.startswith(b"YUV4MPEG2"):
-        raise NotImplementedError(
-            "only YUV4MPEG2 (uncompressed) is parseable without codec "
-            "libs; mp4/webm require ffmpeg/decord"
-        )
-    # Raw pixel bytes can contain the literal b"FRAME", so NO
-    # delimiter splitting: the header fixes the exact frame size and
-    # the stream walks frame by frame.
-    nl = payload.index(b"\n")
-    header, pos = payload[:nl].decode("ascii"), nl + 1
-    w = h = None
-    cs = "420"
-    for tok in header.split()[1:]:
-        if tok[0] == "W":
-            w = int(tok[1:])
-        elif tok[0] == "H":
-            h = int(tok[1:])
-        elif tok[0] == "C":
-            cs = tok[1:]
-    if w is None or h is None:
-        raise ValueError("y4m header missing W/H")
-    if cs.startswith("444"):
-        frame_size = 3 * w * h
-    elif cs.startswith("422"):
-        frame_size = 2 * w * h
-    elif cs.startswith("420"):
-        frame_size = w * h * 3 // 2
-    elif cs.startswith("mono"):
-        frame_size = w * h
-    else:
-        raise NotImplementedError(f"y4m colorspace {cs} not supported")
-    frames = []
-    while pos < len(payload):
-        if payload[pos : pos + 5] != b"FRAME":
-            raise ValueError("corrupt y4m: FRAME marker expected")
-        pos = payload.index(b"\n", pos) + 1  # skip frame params
-        if pos + frame_size > len(payload):
-            raise ValueError("corrupt y4m: truncated final frame")
-        frames.append(payload[pos : pos + frame_size])
-        pos += frame_size
-    return frames[::every_n]
+    out = frame.mapInPandas(run, schema)
+    return out.select(
+        *(F.round(c, 6).alias(c) if c in rounded else c for c in names)
+    )
 
 
 def resize_image(payload: bytes, width: int, height: int) -> bytes:
@@ -384,8 +103,6 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     alpha channel raises — compositing alpha needs a background
     choice this layer must not make silently. Lossy formats raise
     via :func:`decode_image`'s boundary."""
-    import numpy as np
-
     arr = decode_image(payload)
     if arr.ndim == 2:  # gray PNG -> replicate into RGB planes
         arr = np.repeat(arr[:, :, None], 3, axis=2)
@@ -431,46 +148,18 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     nothing to decode; a NULL previously reached sha256()/len() in
     the closure and killed the worker — round-7 edge sweep). The
     filter is Spark-side so it prunes the Arrow transfer too."""
-    media = media.filter(F.col("payload").isNotNull())
-    schema = (
-        "asset_id long, modality string, n_bytes long, features array<double>"
+
+    def row(asset_id, modality, payload):
+        digest = hashlib.sha256(payload).digest()[:dim]
+        return asset_id, modality, len(payload), [b / 255.0 for b in digest]
+
+    return _per_asset(
+        media.filter(F.col("payload").isNotNull()).select(
+            "asset_id", "modality", "payload"
+        ),
+        row,
+        "asset_id long, modality string, n_bytes long, features array<double>",
     )
-
-    # The closure must be self-contained (stdlib/pandas only): it is
-    # cloudpickle'd BY VALUE to workers that may not have this
-    # package on their PYTHONPATH (the driver's vanilla session runs
-    # from a foreign CWD). Referencing module-level helpers here
-    # would serialize them by reference and break on such workers.
-    batch_rows = DECODE_BATCH_ROWS
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        for pdf in batches:
-            # Re-chunk: Arrow hands us up to maxRecordsPerBatch rows
-            # (tuned for narrow rows); decoded frames are orders of
-            # magnitude larger than payloads, so bound the number of
-            # simultaneously-decoded rows explicitly.
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                payloads = chunk["payload"]
-                feats = [
-                    [b / 255.0 for b in _hashlib.sha256(p).digest()[:dim]]
-                    for p in payloads
-                ]
-                yield pd.DataFrame(
-                    {
-                        "asset_id": chunk["asset_id"],
-                        "modality": chunk["modality"],
-                        "n_bytes": payloads.map(len),
-                        "features": feats,
-                    }
-                )
-
-    sized = media.repartition(
-        max(2, media.sparkSession.sparkContext.defaultParallelism)
-    )
-    return sized.mapInPandas(extract, schema)
 
 
 def transform_payloads(
@@ -490,47 +179,29 @@ def transform_payloads(
     The codec calls are a deterministic surrogate — the payload
     cycled/truncated to width*height bytes (images) or every
     ``frame_every_n``-th byte (videos) — keeping the data movement,
-    Arrow batch shape, and memory profile of a real transcode."""
-    # NULL payloads: nothing to transform — excluded before the
-    # Python boundary (see extract_features)
-    media = media.filter(F.col("payload").isNotNull())
-    schema = (
-        "asset_id long, modality string, payload binary, "
-        "n_bytes_in long, n_bytes_out long"
-    )
-    batch_rows = DECODE_BATCH_ROWS
+    Arrow batch shape, and memory profile of a real transcode.
+    NULL payloads are excluded before the Python boundary (see
+    :func:`extract_features`)."""
     target = width * height
 
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                outs = []
-                for payload, modality in zip(
-                    chunk["payload"], chunk["modality"]
-                ):
-                    b = bytes(payload)
-                    if modality == "image":
-                        reps = b * (target // max(len(b), 1) + 1)
-                        outs.append(reps[:target])
-                    elif modality == "video":
-                        outs.append(b[::frame_every_n])
-                    else:
-                        outs.append(b)
-                yield pd.DataFrame(
-                    {
-                        "asset_id": chunk["asset_id"],
-                        "modality": chunk["modality"],
-                        "payload": outs,
-                        "n_bytes_in": chunk["payload"].map(len),
-                        "n_bytes_out": [len(o) for o in outs],
-                    }
-                )
+    def row(asset_id, modality, payload):
+        b = bytes(payload)
+        if modality == "image":
+            out = (b * (target // max(len(b), 1) + 1))[:target]
+        elif modality == "video":
+            out = b[::frame_every_n]
+        else:
+            out = b
+        return asset_id, modality, out, len(b), len(out)
 
-    sized = media.repartition(
-        max(2, media.sparkSession.sparkContext.defaultParallelism)
+    return _per_asset(
+        media.filter(F.col("payload").isNotNull()).select(
+            "asset_id", "modality", "payload"
+        ),
+        row,
+        "asset_id long, modality string, payload binary, "
+        "n_bytes_in long, n_bytes_out long",
     )
-    return sized.mapInPandas(transform, schema)
 
 
 def payload_stats(media: DataFrame) -> DataFrame:
@@ -544,6 +215,12 @@ def payload_stats(media: DataFrame) -> DataFrame:
     )
 
 
+_CHANNEL_STATS = (
+    "asset_id long, width long, height long, "
+    "mean_r double, mean_g double, mean_b double"
+)
+_MEANS = ("mean_r", "mean_g", "mean_b")
+
 # Deterministic PPM test-image generator parameters: pixel (r, c)
 # channel k of asset d is (d*31 + r*7 + c*3 + k*11) % 256. The
 # formula IS the oracle contract — DuckDB recomputes the expected
@@ -555,87 +232,18 @@ PPM_W, PPM_H = 16, 8
 
 def ppm_decode_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """OP-LLM-06 (REAL image decode): build a deterministic P6 PPM
-    payload per document, push it through the REAL pure-numpy parser
-    (:func:`decode_image` — actual header parsing + frombuffer, not
-    the fake-feature surrogate), and emit per-image dimensions and
-    per-channel means. One mapInPandas pass, DECODE_BATCH_ROWS
-    re-chunking, closure self-contained (numpy/stdlib only)."""
-    schema = (
-        "asset_id long, width long, height long, "
-        "mean_r double, mean_g double, mean_b double"
-    )
-    batch_rows = DECODE_BATCH_ROWS
-    w, h = PPM_W, PPM_H
+    payload per document with :func:`encode_ppm`, parse it with
+    :func:`decode_image` (netpbm header parsing + frombuffer, not the
+    fake-feature surrogate), and emit per-image dimensions and
+    per-channel means. One :func:`_per_asset` pass."""
+    r, c, k = np.ogrid[:PPM_H, :PPM_W, :3]
 
-    def gen_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(d):
+        img = decode_image(encode_ppm((d * 31 + r * 7 + c * 3 + k * 11) % 256))
+        return (d, img.shape[1], img.shape[0], *channel_means(img))
 
-        def parse_p6(payload: bytes):
-            # self-contained twin of decode_image (closures ship by
-            # value to foreign-CWD workers; see extract_features)
-            assert payload.startswith(b"P6")
-            idx, vals = 2, []
-            while len(vals) < 3:
-                while payload[idx : idx + 1].isspace():
-                    idx += 1
-                start = idx
-                while not payload[idx : idx + 1].isspace():
-                    idx += 1
-                vals.append(int(payload[start:idx]))
-            idx += 1
-            ww, hh, _ = vals
-            return np.frombuffer(
-                payload, dtype=np.uint8, count=ww * hh * 3, offset=idx
-            ).reshape(hh, ww, 3)
-
-        r = np.arange(h).reshape(h, 1, 1)
-        c = np.arange(w).reshape(1, w, 1)
-        k = np.arange(3).reshape(1, 1, 3)
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                out = []
-                for d in chunk["asset_id"]:
-                    px = (int(d) * 31 + r * 7 + c * 3 + k * 11) % 256
-                    payload = (
-                        b"P6\n%d %d\n255\n" % (w, h)
-                        + px.astype(np.uint8).tobytes()
-                    )
-                    arr = parse_p6(payload)  # the REAL decode
-                    out.append(
-                        (
-                            int(d),
-                            arr.shape[1],
-                            arr.shape[0],
-                            float(arr[:, :, 0].mean()),
-                            float(arr[:, :, 1].mean()),
-                            float(arr[:, :, 2].mean()),
-                        )
-                    )
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "asset_id",
-                        "width",
-                        "height",
-                        "mean_r",
-                        "mean_g",
-                        "mean_b",
-                    ],
-                )
-
-    base = docs.select(F.col(id_col).alias("asset_id")).repartition(
-        max(2, docs.sparkSession.sparkContext.defaultParallelism)
-    )
-    out = base.mapInPandas(gen_decode, schema)
-    return out.select(
-        "asset_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    ids = docs.select(F.col(id_col).alias("asset_id"))
+    return _per_asset(ids, row, _CHANNEL_STATS, _MEANS)
 
 
 # Deterministic PNG generator: pixel (r, c, k) of asset d is
@@ -648,41 +256,19 @@ PNG_W, PNG_H = 10, 12
 def png_payloads(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Stage 1 of the PNG round: a real ``binary`` PNG payload
     column per document (pixel formula above, row filters cycling
-    0..4). Split from the decode so the payload crosses an Arrow
-    batch boundary as an actual binary column — the contract a user
-    decoding STORED media hits — instead of living only inside one
-    closure."""
-    schema = "asset_id long, payload binary"
-    batch_rows = DECODE_BATCH_ROWS
-    w, h = PNG_W, PNG_H
+    0..4), built by :func:`encode_png`. Split from the decode so the
+    payload crosses an Arrow batch boundary as an actual binary
+    column — the contract a user decoding STORED media hits —
+    instead of living only inside one closure."""
+    r, c, k = np.ogrid[:PNG_H, :PNG_W, :3]
+    filters = [i % 5 for i in range(PNG_H)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(d):
+        px = (d * 13 + r * 5 + c * 7 + k * 9) % 256
+        return d, encode_png(px, row_filters=filters)
 
-        r = np.arange(h)[:, None, None]
-        c = np.arange(w)[None, :, None]
-        k = np.arange(3)[None, None, :]
-        filters = [rr % 5 for rr in range(h)]
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                payloads = [
-                    encode_png(
-                        (
-                            (int(d) * 13 + r * 5 + c * 7 + k * 9) % 256
-                        ).astype(np.uint8),
-                        row_filters=filters,
-                    )
-                    for d in chunk["asset_id"]
-                ]
-                yield pd.DataFrame(
-                    {"asset_id": chunk["asset_id"], "payload": payloads}
-                )
-
-    base = docs.select(F.col(id_col).alias("asset_id")).repartition(
-        max(2, docs.sparkSession.sparkContext.defaultParallelism)
-    )
-    return base.mapInPandas(gen, schema)
+    ids = docs.select(F.col(id_col).alias("asset_id"))
+    return _per_asset(ids, row, "asset_id long, payload binary")
 
 
 def png_decode_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -694,52 +280,13 @@ def png_decode_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     exactly how stored media reaches a decode at scale. Emits
     per-channel means; value-oracled against the pixel formula, so
     a wrong unfilter, stride, or chunk walk shifts every mean."""
-    schema = (
-        "asset_id long, width long, height long, "
-        "mean_r double, mean_g double, mean_b double"
-    )
-    batch_rows = DECODE_BATCH_ROWS
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                out = []
-                for d, payload in zip(
-                    chunk["asset_id"], chunk["payload"]
-                ):
-                    # the REAL decode: inflate + unfilter
-                    img = decode_png(bytes(payload))
-                    out.append(
-                        (
-                            int(d),
-                            img.shape[1],
-                            img.shape[0],
-                            float(img[:, :, 0].mean()),
-                            float(img[:, :, 1].mean()),
-                            float(img[:, :, 2].mean()),
-                        )
-                    )
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "asset_id",
-                        "width",
-                        "height",
-                        "mean_r",
-                        "mean_g",
-                        "mean_b",
-                    ],
-                )
+    def row(d, payload):
+        img = decode_png(bytes(payload))
+        return (d, img.shape[1], img.shape[0], *channel_means(img))
 
-    out = png_payloads(docs, id_col).mapInPandas(dec, schema)
-    return out.select(
-        "asset_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
+    return _per_asset(
+        png_payloads(docs, id_col), row, _CHANNEL_STATS, _MEANS, sized=False
     )
 
 
@@ -752,75 +299,24 @@ WAV_N, WAV_RATE = 256, 16_000
 
 def wav_decode_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """OP-LLM-06 (REAL audio decode): deterministic 16-bit PCM WAV
-    per document, parsed by the stdlib ``wave`` reader (real RIFF
-    parsing, no audio lib), emitting (n_samples, sample_rate,
-    mean_amp, peak) — value-oracled against the sample formula."""
-    schema = (
+    per document written by :func:`encode_wav` and parsed by
+    :func:`decode_audio` (the stdlib ``wave`` RIFF reader, no audio
+    lib), emitting (n_samples, sample_rate, mean_amp, peak) —
+    value-oracled against the sample formula."""
+    i = np.arange(WAV_N)
+
+    def row(d):
+        pcm = encode_wav((d * 17 + i * 13) % 4096 - 2048, WAV_RATE)
+        samples, rate = decode_audio(pcm)
+        peak = int(np.abs(samples.astype(np.int64)).max())
+        return d, len(samples), rate, float(samples.mean()), peak
+
+    return _per_asset(
+        docs.select(F.col(id_col).alias("asset_id")),
+        row,
         "asset_id long, n_samples long, sample_rate long, "
-        "mean_amp double, peak long"
-    )
-    batch_rows = DECODE_BATCH_ROWS
-    n, rate = WAV_N, WAV_RATE
-
-    def gen_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        i = np.arange(n)
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                out = []
-                for d in chunk["asset_id"]:
-                    samples = ((int(d) * 17 + i * 13) % 4096 - 2048).astype(
-                        "<i2"
-                    )
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as wf:
-                        wf.setnchannels(1)
-                        wf.setsampwidth(2)
-                        wf.setframerate(rate)
-                        wf.writeframes(samples.tobytes())
-                    payload = buf.getvalue()
-                    # the REAL decode: stdlib wave RIFF parse
-                    with wave.open(io.BytesIO(payload), "rb") as rf:
-                        got_rate = rf.getframerate()
-                        got_n = rf.getnframes()
-                        decoded = np.frombuffer(
-                            rf.readframes(got_n), dtype="<i2"
-                        )
-                    out.append(
-                        (
-                            int(d),
-                            got_n,
-                            got_rate,
-                            float(decoded.mean()),
-                            int(np.abs(decoded.astype(np.int64)).max()),
-                        )
-                    )
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "asset_id",
-                        "n_samples",
-                        "sample_rate",
-                        "mean_amp",
-                        "peak",
-                    ],
-                )
-
-    base = docs.select(F.col(id_col).alias("asset_id")).repartition(
-        max(2, docs.sparkSession.sparkContext.defaultParallelism)
-    )
-    out = base.mapInPandas(gen_decode, schema)
-    return out.select(
-        "asset_id",
-        "n_samples",
-        "sample_rate",
-        F.round("mean_amp", 6).alias("mean_amp"),
-        "peak",
+        "mean_amp double, peak long",
+        ("mean_amp",),
     )
 
 
@@ -832,56 +328,26 @@ Y4M_W, Y4M_H, Y4M_FRAMES, Y4M_EVERY = 8, 4, 6, 2
 
 def y4m_sample_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """OP-LLM-06 (REAL video frame sampling): deterministic
-    YUV4MPEG2 payload per document, frames walked by the real y4m
-    parser (header-derived frame size — NOT delimiter splitting,
-    since raw pixels may contain the literal marker), every 2nd
-    frame kept, per-asset byte mean over the kept frames emitted —
-    value-oracled against the pixel formula."""
-    schema = "asset_id long, n_frames_kept long, mean_byte double"
-    batch_rows = DECODE_BATCH_ROWS
-    w, h, n_frames, every = Y4M_W, Y4M_H, Y4M_FRAMES, Y4M_EVERY
-    fsize = 3 * w * h
+    YUV4MPEG2 payload per document, frames walked by
+    :func:`sample_video_frames` (header-derived frame size — NOT
+    delimiter splitting, since raw pixels may contain the literal
+    marker), every 2nd frame kept, per-asset byte mean over the kept
+    frames emitted — value-oracled against the pixel formula."""
+    j = np.arange(3 * Y4M_W * Y4M_H)
+    header = b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 C444\n" % (Y4M_W, Y4M_H)
 
-    def gen_sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(d):
+        payload = header + b"".join(
+            b"FRAME\n" + ((d * 7 + f * 29 + j * 3) % 256).astype(np.uint8).tobytes()
+            for f in range(Y4M_FRAMES)
+        )
+        kept = sample_video_frames(payload, every_n=Y4M_EVERY)
+        mean = np.frombuffer(b"".join(kept), dtype=np.uint8).mean()
+        return d, len(kept), float(mean)
 
-        j = np.arange(fsize)
-        header = b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 C444\n" % (w, h)
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                out = []
-                for d in chunk["asset_id"]:
-                    payload = header + b"".join(
-                        b"FRAME\n"
-                        + ((int(d) * 7 + f * 29 + j * 3) % 256)
-                        .astype(np.uint8)
-                        .tobytes()
-                        for f in range(n_frames)
-                    )
-                    # the REAL parse: header-sized frame walk (raise,
-                    # not assert — asserts vanish under python -O)
-                    nl = payload.index(b"\n")
-                    pos, frames = nl + 1, []
-                    while pos < len(payload):
-                        if payload[pos : pos + 5] != b"FRAME":
-                            raise ValueError("corrupt y4m stream")
-                        pos = payload.index(b"\n", pos) + 1
-                        frames.append(payload[pos : pos + fsize])
-                        pos += fsize
-                    kept = frames[::every]
-                    allb = np.frombuffer(b"".join(kept), dtype=np.uint8)
-                    out.append((int(d), len(kept), float(allb.mean())))
-                yield pd.DataFrame(
-                    out, columns=["asset_id", "n_frames_kept", "mean_byte"]
-                )
-
-    base = docs.select(F.col(id_col).alias("asset_id")).repartition(
-        max(2, docs.sparkSession.sparkContext.defaultParallelism)
-    )
-    out = base.mapInPandas(gen_sample, schema)
-    return out.select(
-        "asset_id",
-        "n_frames_kept",
-        F.round("mean_byte", 6).alias("mean_byte"),
+    return _per_asset(
+        docs.select(F.col(id_col).alias("asset_id")),
+        row,
+        "asset_id long, n_frames_kept long, mean_byte double",
+        ("mean_byte",),
     )

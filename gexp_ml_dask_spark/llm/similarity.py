@@ -186,7 +186,6 @@ def knn_bruteforce_pandas(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_cv")
     ).filter(valid_vector_expr(F.col("_cv"), dim=qdim))
 
-    # Self-contained closure (numpy/pandas only — no package refs).
     def score(batches):
         import numpy as _np
         import pandas as _pd

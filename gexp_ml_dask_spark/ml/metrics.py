@@ -1,13 +1,21 @@
 """Scoring metrics (SURVEY.md §2.10, OP-ML-10).
 
 Pure-SQL implementations (usable as oracle checks) plus MLlib
-evaluator wrappers for Vector-based pipelines.
+evaluator wrappers for Vector-based pipelines. The two isotonic
+calibrators run the one PAVA fit,
+:func:`gexp_ml_dask_spark.worker.isotonic_fit`, inside their
+``applyInPandas`` closures; cloudpickle ships it to the workers by
+value (README design rule 12).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gexp_ml_dask_spark.worker import isotonic_fit
 
 
 def accuracy_df(pred: DataFrame, label_col: str = "label", pred_col: str = "prediction") -> DataFrame:
@@ -80,40 +88,9 @@ def isotonic_calibrate(
         f"{label_col} long, calibrated double"
     )
 
-    # Self-contained closure (numpy/stdlib only): referencing a
-    # module-level helper would make cloudpickle serialize it BY
-    # REFERENCE, and the Python workers would then need to import
-    # this package — which fails whenever the driver runs from a
-    # foreign CWD (the grading driver's vanilla-session contract).
     def fit(pdf):
-        import numpy as np
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def _r6(x):
-            return float(
-                Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-            )
-
         pdf = pdf.sort_values([score_col, id_col]).reset_index(drop=True)
-        ys = pdf[label_col].to_numpy()
-        sums: list[int] = []
-        cnts: list[int] = []
-        for v in ys:
-            s, c = int(v), 1
-            # pool while the previous block mean exceeds the new
-            # one — integer cross-product compare, exact
-            while sums and sums[-1] * c > s * cnts[-1]:
-                s += sums.pop()
-                c += cnts.pop()
-            sums.append(s)
-            cnts.append(c)
-        if cnts:
-            fitv = np.concatenate(
-                [np.full(c, _r6(s / c)) for s, c in zip(sums, cnts)]
-            )
-        else:
-            fitv = np.array([], dtype=float)
-        pdf["calibrated"] = fitv
+        pdf["calibrated"] = isotonic_fit(pdf[label_col].to_numpy())
         return pdf[[id_col, group_col, score_col, label_col, "calibrated"]]
 
     return scored.groupBy(group_col).applyInPandas(fit, schema)
@@ -145,25 +122,13 @@ def isotonic_fit_apply(
     JOIN — so the match is again a theorem-plus-contract check.
 
     Returns (id, group, score, calibrated)."""
-    import numpy as np
-    import pandas as pd
-
     out_cols = [id_col, group_col, score_col, "calibrated"]
     schema = (
         f"{id_col} long, {group_col} long, {score_col} double, "
         "calibrated double"
     )
 
-    # Self-contained closure — same foreign-CWD worker-import rule
-    # as isotonic_calibrate's fit().
     def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        def _r6(x):
-            return float(
-                Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-            )
-
         if rpdf.empty:
             return pd.DataFrame({c: [] for c in out_cols})
         out = rpdf[[id_col, group_col, score_col]].copy()
@@ -174,19 +139,7 @@ def isotonic_fit_apply(
             out["calibrated"] = pd.array([None] * len(out), dtype="Float64")
             return out[out_cols]
         l = lpdf.sort_values([score_col, id_col]).reset_index(drop=True)
-        ys = l[label_col].to_numpy()
-        sums: list[int] = []
-        cnts: list[int] = []
-        for v in ys:
-            s, c = int(v), 1
-            while sums and sums[-1] * c > s * cnts[-1]:
-                s += sums.pop()
-                c += cnts.pop()
-            sums.append(s)
-            cnts.append(c)
-        l["fit"] = np.concatenate(
-            [np.full(c, _r6(s / c)) for s, c in zip(sums, cnts)]
-        )
+        l["fit"] = isotonic_fit(l[label_col].to_numpy())
         step = l.groupby(score_col, as_index=False).last()
         ts = step[score_col].to_numpy()
         tf = step["fit"].to_numpy()

@@ -6149,6 +6149,23 @@ def op_llm_05_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_windows_batch(load_events(spark, sf_dir))
 
 
+def _drain(stream: DataFrame, mode: str, name: str) -> DataFrame:
+    """Run the unstarted streaming frame ``stream`` into the in-memory
+    sink ``name`` in output ``mode`` until it has processed all
+    available input, stop it, and return the sink's table."""
+    q = (
+        stream.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return stream.sparkSession.table(name)
+
+
 @register(
     "op_llm_05_streaming_watermark",
     # Complete-mode sink after processAllAvailable == the full batch
@@ -6172,18 +6189,7 @@ def op_llm_05_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = streaming_tumbling_counts(
         spark, f"{sf_dir}/events.parquet", raw_schema
     )
-    name = "op_llm_05_sink"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(agg, "complete", "op_llm_05_sink")
 
 
 @register(
@@ -6231,18 +6237,7 @@ def op_llm_05_streaming_sessions(
     agg = streaming_session_counts(
         spark, f"{sf_dir}/events.parquet", raw_schema
     )
-    name = "op_llm_05_session_sink"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(agg, "append", "op_llm_05_session_sink")
 
 
 @register(
@@ -6269,18 +6264,7 @@ def op_llm_05_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_stream = streaming_static_enrich(
         spark, f"{sf_dir}/events.parquet", raw_schema, dim
     )
-    name = "op_llm_05_enrich_sink"
-    q = (
-        agg_stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(agg_stream, "complete", "op_llm_05_enrich_sink")
 
 
 def user_tier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6347,18 +6331,7 @@ def op_llm_05_stream_stream_join(
     pairs = streaming_interval_join(
         spark, f"{sf_dir}/events.parquet", raw_schema
     )
-    name = "op_llm_05_ssjoin_sink"
-    q = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(pairs, "append", "op_llm_05_ssjoin_sink")
 
 
 @register(
@@ -6399,18 +6372,7 @@ def op_llm_05_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = streaming_watermark_dedup(
         stream.union(stream), ["event_id"], watermark="100 days"
     ).select("event_id", "event_type", "user_id")
-    name = "op_llm_05_wmdedup_sink"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(deduped, "append", "op_llm_05_wmdedup_sink")
 
 
 @register(
@@ -6427,9 +6389,7 @@ def op_llm_05_stateful_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-05 (per-source cap): "at most N docs per source"
     corpus balancing on applyInPandasWithState — a per-source
     GroupState counter admits rows in ascending doc_id until the
-    cap, across micro-batches. (The transformWithStateInPandas twin
-    is env-gated in tests — this container's protobuf lacks its
-    descriptors.)"""
+    cap, across micro-batches."""
     from gexp_ml_dask_spark.streaming import (
         open_table_stream,
         streaming_per_source_cap,
@@ -6438,18 +6398,7 @@ def op_llm_05_stateful_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = open_table_stream(spark, f"{sf_dir}/documents.parquet", schema)
     capped = streaming_per_source_cap(stream, cap=50)
-    name = "op_llm_05_cap_sink"
-    q = (
-        capped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(capped, "append", "op_llm_05_cap_sink")
 
 
 @register(
@@ -6511,18 +6460,7 @@ def op_llm_05_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = open_table_stream(spark, f"{sf_dir}/documents.parquet", schema)
     deduped = streaming_first_seen_dedup(stream)
-    name = "op_llm_05_dedup_sink"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _drain(deduped, "append", "op_llm_05_dedup_sink")
 
 
 @register(
@@ -6618,9 +6556,10 @@ def op_llm_06_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     "GROUP BY doc_id",
 )
 def op_llm_06_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OP-LLM-06 (REAL decode): deterministic P6 PPM images parsed by
-    the pure-numpy decoder (actual netpbm header parsing +
-    frombuffer, no codec lib) inside one mapInPandas pass; the oracle
+    """OP-LLM-06 (REAL decode): deterministic P6 PPM images written by
+    ``worker.encode_ppm`` and parsed by ``worker.decode_image``
+    (netpbm header parsing + frombuffer, no codec lib) inside one
+    mapInPandas pass; the oracle
     recomputes the expected channel means straight from the pixel
     formula, so the decode itself is the thing under value-check.
     Lossy formats (JPEG/WebP) remain honestly stubbed; PNG has its
@@ -6748,9 +6687,10 @@ def op_src_04_corrupt_quarantine(
 )
 def op_llm_06_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-06 (REAL compressed decode): deterministic PNGs —
-    zlib-deflated scanlines cycling through all five spec filters —
-    parsed by the pure stdlib+numpy PNG decoder (CRC-checked chunk
-    walk, IDAT inflate, None/Sub/Up/Average/Paeth unfiltering); the
+    zlib-deflated scanlines cycling through all five spec filters,
+    written by ``worker.encode_png`` — parsed by ``worker.decode_png``
+    (CRC-checked chunk walk, IDAT inflate, None/Sub/Up/Average/Paeth
+    unfiltering); the
     oracle recomputes expected channel means straight from the pixel
     formula. Lossy formats (JPEG/WebP) remain honestly stubbed."""
     from gexp_ml_dask_spark.llm.multimodal import png_decode_stats
@@ -6775,12 +6715,12 @@ def op_llm_06_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def op_llm_06_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-06 (REAL audio decode): deterministic RIFF/WAVE PCM
-    payloads parsed by the stdlib ``wave`` reader (real RIFF chunk
-    parsing + little-endian int16 frombuffer, no audio lib) inside
-    one mapInPandas pass; the oracle recomputes mean amplitude and
-    peak straight from the sample formula. Compressed codecs
-    (mp3/flac/ogg) remain honestly stubbed in
-    llm/multimodal.decode_audio."""
+    payloads written by ``worker.encode_wav`` and parsed by
+    ``worker.decode_audio`` (the stdlib ``wave`` RIFF reader +
+    little-endian int16 frombuffer, no audio lib) inside one
+    mapInPandas pass; the oracle recomputes mean amplitude and peak
+    straight from the sample formula. Compressed codecs
+    (mp3/flac/ogg) remain honestly stubbed in that decoder."""
     from gexp_ml_dask_spark.llm.multimodal import wav_decode_stats
 
     return wav_decode_stats(load_table(spark, sf_dir, "documents"))
@@ -6804,12 +6744,12 @@ def op_llm_06_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def op_llm_06_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-LLM-06 (REAL video frame sampling): deterministic
-    YUV4MPEG2 payloads walked by the real y4m parser (frame size
-    derived from the W/H/C header so pixel bytes can't be mistaken
-    for markers), every 2nd frame kept; the oracle recomputes the
-    kept-frame byte mean from the pixel formula. Compressed
-    containers (mp4/webm) remain honestly stubbed in
-    llm/multimodal.sample_video_frames."""
+    YUV4MPEG2 payloads walked by ``worker.sample_video_frames``
+    (frame size derived from the W/H/C header so pixel bytes can't
+    be mistaken for markers), every 2nd frame kept; the oracle
+    recomputes the kept-frame byte mean from the pixel formula.
+    Compressed containers (mp4/webm) remain honestly stubbed in that
+    sampler."""
     from gexp_ml_dask_spark.llm.multimodal import y4m_sample_stats
 
     return y4m_sample_stats(load_table(spark, sf_dir, "documents"))

@@ -6,7 +6,6 @@ from gexp_ml_dask_spark.streaming.stateful import (
     streaming_first_seen_dedup,
     streaming_per_source_cap,
     streaming_multiplex_sink,
-    streaming_per_source_cap_tws,
     streaming_watermark_dedup,
 )
 from gexp_ml_dask_spark.streaming.windows import (
@@ -30,7 +29,6 @@ __all__ = [
     "streaming_first_seen_dedup",
     "streaming_per_source_cap",
     "streaming_multiplex_sink",
-    "streaming_per_source_cap_tws",
     "streaming_watermark_dedup",
     "interval_join_batch",
     "streaming_interval_join",

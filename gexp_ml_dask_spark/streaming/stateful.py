@@ -1,15 +1,24 @@
-"""Custom stateful streaming operator (SURVEY.md §2.11, OP-LLM-05/06
-— [mandate]).
+"""Stateful streaming operators (SURVEY.md §2.11, OP-LLM-05/06 —
+[mandate]).
 
 ``applyInPandasWithState`` is the escape hatch for operators the
-built-in windowed aggregates can't express. The canonical
-training-data-pipeline case implemented here: ONLINE EXACT DEDUP —
-emit each document the first time its content hash is seen, drop
-every later occurrence, across micro-batches, with per-key state in
-the state store.
+built-in windowed aggregates can't express. Two training-data
+pipeline rules run on it here:
 
-Scale posture: state is one boolean per distinct hash, partitioned by
-the grouping key — the state store shards with the shuffle, so a
+- ONLINE EXACT DEDUP (:func:`streaming_first_seen_dedup`): emit each
+  document the first time its content hash is seen, drop every later
+  occurrence, across micro-batches;
+- PER-SOURCE CAP (:func:`streaming_per_source_cap`): admit at most N
+  documents per source, counted across micro-batches.
+
+Their state functions are closures that use only pandas, so
+cloudpickle ships them to the Python workers by value (README design
+rule 12). :func:`streaming_watermark_dedup` is the built-in
+bounded-state dedup, and :func:`streaming_multiplex_sink` the
+``foreachBatch`` two-sink writer.
+
+Scale posture: state is one small row per key, partitioned by the
+grouping key — the state store shards with the shuffle, so a
 1000-executor cluster holds 1000 state shards. A TTL (timeout) bounds
 state for unbounded streams where "duplicate within N hours" is the
 real contract.
@@ -57,8 +66,6 @@ def streaming_first_seen_dedup(
         F.col(id_col).cast("long").alias("doc_id"),
     )
 
-    # Self-contained closure: cloudpickle ships it by value; workers
-    # need no access to this package (foreign-CWD driver sessions).
     def dedup(key, pdfs, state):
         import pandas as pd
 
@@ -117,72 +124,6 @@ CAP_OUTPUT_SCHEMA = StructType(
 )
 
 
-try:  # pyspark >= 4.0 only; batch-only deployments still import fine
-    from pyspark.sql.streaming import StatefulProcessor as _StatefulProcessor
-except ImportError:  # pragma: no cover
-    _StatefulProcessor = object
-
-
-class PerKeyCapProcessor(_StatefulProcessor):
-    """transformWithStateInPandas processor: admit at most ``cap``
-    rows per key (ascending doc_id within each batch), counting
-    across micro-batches in a per-key ValueState. Module-level (not
-    a closure) so the driver-side schema-inference worker can
-    pickle it."""
-
-    def __init__(self, cap: int = 50) -> None:
-        self.cap = int(cap)
-
-    def init(self, handle):
-        self._n = handle.getValueState("n_emitted", "n BIGINT")
-
-    def handleInputRows(self, key, rows, timer_values):
-        import pandas as pd
-
-        n = self._n.get()[0] if self._n.exists() else 0
-        # Drain ALL arrow chunks before sorting: a group larger
-        # than one arrow batch would otherwise admit per-chunk
-        # minima instead of the batch-global smallest ids.
-        pdfs = [pdf for pdf in rows if len(pdf)]
-        take = None
-        if pdfs and n < self.cap:
-            batch = pd.concat(pdfs).sort_values("doc_id")
-            take = batch.head(self.cap - n)
-            n += len(take)
-        self._n.update((n,))
-        if take is not None and len(take):
-            yield take[["source", "doc_id"]]
-
-    def close(self):
-        pass
-
-
-def streaming_per_source_cap_tws(
-    docs_stream: DataFrame,
-    cap: int = 50,
-    key_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-source cap on Spark 4's ``transformWithStateInPandas``
-    (the arbitrary-state successor to ``applyInPandasWithState``) —
-    identical contract to :func:`streaming_per_source_cap`, kept as
-    the forward-looking API twin. Requires the RocksDB state store
-    provider AND a working protobuf install (the TWS state server
-    speaks protobuf; this container's protobuf lacks descriptors, so
-    the test for this path skips when the import fails — the
-    applyInPandasWithState twin below is the tested surface).
-    """
-    projected = docs_stream.select(
-        F.col(key_col).alias("source"), F.col(id_col).cast("long").alias("doc_id")
-    )
-    return projected.groupBy("source").transformWithStateInPandas(
-        PerKeyCapProcessor(cap),
-        outputStructType=CAP_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
-    )
-
-
 def streaming_per_source_cap(
     docs_stream: DataFrame,
     cap: int = 50,
@@ -202,8 +143,6 @@ def streaming_per_source_cap(
     """
     cap_n = int(cap)
 
-    # Self-contained closure (like streaming_first_seen_dedup):
-    # cloudpickle ships it by value, no package import on workers.
     def cap_fn(key, pdfs, state):
         import pandas as pd
 
@@ -256,8 +195,6 @@ def streaming_multiplex_sink(
 
     Returns the started StreamingQuery; callers stop it.
     """
-    from pyspark.sql import functions as F
-
     def apply_batch(batch_df, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(data_path)
         (

@@ -1,11 +1,11 @@
 """Event-time windows (SURVEY.md §2.11, OP-LLM-05 — [mandate]).
 
-The same windowed aggregations exist twice by design:
+Each windowed aggregation is defined once and runs in two forms:
   * BATCH form (F.window / session_window on a static DataFrame) —
     SQL-oracle checkable, and exactly what a backfill job runs;
-  * STREAMING form (readStream + withWatermark) — the online path,
-    identical grouping expressions, late data bounded by the
-    watermark.
+  * STREAMING form (readStream + withWatermark) — the online path:
+    the same aggregate function applied to the watermarked stream,
+    late data bounded by the watermark.
 Spark guarantees the two agree on closed windows — that equivalence
 is the testing strategy (batch oracle for a streaming operator).
 
@@ -67,16 +67,12 @@ def sliding_window_counts(
     )
 
 
-def session_windows_batch(
-    events: DataFrame,
-    gap: str = "5 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
+def _sessions(
+    events: DataFrame, gap: str, ts_col: str, user_col: str, *bounds: str
 ) -> DataFrame:
-    """Per-user session windows (gap-based) on a static frame via
-    ``F.session_window`` — the same expression the streaming form
-    uses; the SQL oracle is the classic gaps-and-islands (lag +
-    conditional cumsum)."""
+    """Per-user gap sessions: one row per (user, session) with its
+    event count and rounded value total, plus each of the session's
+    ``bounds`` ("start", "end") as epoch seconds ``session_<bound>``."""
     return (
         events.groupBy(
             F.session_window(F.col(ts_col), gap).alias("w"), F.col(user_col)
@@ -87,11 +83,24 @@ def session_windows_batch(
         )
         .select(
             F.col(user_col),
-            F.col("w.start").cast("long").alias("session_start"),
+            *(F.col(f"w.{b}").cast("long").alias(f"session_{b}") for b in bounds),
             "n_events",
             "total",
         )
     )
+
+
+def session_windows_batch(
+    events: DataFrame,
+    gap: str = "5 minutes",
+    ts_col: str = "ts",
+    user_col: str = "user_id",
+) -> DataFrame:
+    """Per-user session windows (gap-based) on a static frame via
+    ``F.session_window`` — the same aggregate the streaming form
+    runs; the SQL oracle is the classic gaps-and-islands (lag +
+    conditional cumsum)."""
+    return _sessions(events, gap, ts_col, user_col, "start")
 
 
 def open_table_stream(
@@ -177,32 +186,20 @@ def streaming_session_counts(
     max_files_per_trigger: int | None = None,
 ):
     """The online twin of ``session_windows_batch``: gap-based
-    session windows over a file-source stream. Session windows are
-    stateful merges (adjacent events union into one growing window),
-    so a watermark is REQUIRED in append mode — it bounds both state
-    and when a session is final (no event within ``gap`` before the
-    watermark). Returns the unstarted streaming DataFrame; callers
-    pick sink + trigger. Batch equivalence on closed sessions is the
-    test oracle (tests/test_streaming.py)."""
+    session windows over a file-source stream, with each session's
+    end as ``session_end``. Session windows are stateful merges
+    (adjacent events union into one growing window), so a watermark
+    is REQUIRED in append mode — it bounds both state and when a
+    session is final (no event within ``gap`` before the watermark).
+    Returns the unstarted streaming DataFrame; callers pick sink +
+    trigger. Batch equivalence on closed sessions is the test oracle
+    (tests/test_streaming.py)."""
     stream = _open_event_stream(
         spark, source_path, schema, ts_col, max_files_per_trigger
     )
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.session_window(F.col(ts_col), gap).alias("w"), F.col(user_col)
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("total"),
-        )
-        .select(
-            F.col(user_col),
-            F.col("w.start").cast("long").alias("session_start"),
-            F.col("w.end").cast("long").alias("session_end"),
-            "n_events",
-            "total",
-        )
+    return _sessions(
+        stream.withWatermark(ts_col, watermark), gap, ts_col, user_col,
+        "start", "end",
     )
 
 
@@ -216,33 +213,16 @@ def streaming_tumbling_counts(
     key_col: str = "event_type",
     max_files_per_trigger: int | None = None,
 ):
-    """The online twin of tumbling_window_counts: file-source stream
-    with a watermark bounding late data/state (the state store drops
-    windows older than max(event_time) - watermark). Returns the
-    unstarted streaming DataFrame; callers pick sink + trigger.
-
-    Example sink for tests/backfills::
-
-        q = (df.writeStream.outputMode("append").format("memory")
-               .queryName("agg").start())
-        q.processAllAvailable()
-    """
+    """The online twin of tumbling_window_counts — the same aggregate
+    over a file-source stream, with a watermark bounding late
+    data/state (the state store drops windows older than
+    max(event_time) - watermark). Returns the unstarted streaming
+    DataFrame; callers pick sink + trigger."""
     stream = _open_event_stream(
         spark, source_path, schema, ts_col, max_files_per_trigger
     )
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, width).alias("w"), F.col(key_col))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 6).alias("total"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            key_col,
-            "n",
-            "total",
-        )
+    return tumbling_window_counts(
+        stream.withWatermark(ts_col, watermark), width, ts_col, key_col
     )
 
 
@@ -261,7 +241,8 @@ def streaming_static_enrich(
     event stream is enriched against a STATIC dimension (broadcast
     hash lookup, stateless — Spark re-plans the static side per
     batch, so a dim refresh is picked up between batches), then
-    aggregated per (window, dim attribute) under the watermark.
+    aggregated per (window, dim attribute) under the watermark by
+    :func:`tumbling_window_counts`.
 
     This is the canonical online feature pipeline shape: facts
     stream, dims don't. The stream-static join adds NO state-store
@@ -270,19 +251,8 @@ def streaming_static_enrich(
     streaming DataFrame; batch equivalence is the test oracle."""
     stream = _open_event_stream(spark, source_path, schema, ts_col)
     enriched = stream.join(F.broadcast(dim), dim_key)
-    return (
-        enriched.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, width).alias("w"), F.col(dim_attr))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 6).alias("total"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            dim_attr,
-            "n",
-            "total",
-        )
+    return tumbling_window_counts(
+        enriched.withWatermark(ts_col, watermark), width, ts_col, dim_attr
     )
 
 

@@ -5,7 +5,6 @@ here as the oracle (SURVEY.md §5.2 cross-framework agreement)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -300,86 +299,6 @@ def test_watermark_dedup_drops_in_horizon_dups(spark):
         q.stop()
     n_events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
     assert len(got) == len(set(got)) == n_events
-
-
-def test_tws_per_source_cap_if_supported(spark):
-    """Spark 4 transformWithStateInPandas twin of the per-source cap.
-    The TWS state server speaks protobuf; this container's protobuf
-    lacks descriptor support, so the test SKIPS where the import
-    fails rather than asserting an environment we cannot have. On a
-    full install the single-batch result must equal the batch
-    row_number quota, like the applyInPandasWithState twin."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        # Verified precisely (round 5): `import google` itself raises
-        # ModuleNotFoundError — the protobuf python package is ABSENT
-        # from the container, not version-conflicted, and the host
-        # has no package-index network (pip → DNS failure), so it
-        # cannot be installed here. The exact dependency chain: TWS's
-        # Python worker speaks the state-server protocol through
-        # pyspark/sql/streaming/proto/StateMessage_pb2.py, whose
-        # generated module header imports google.protobuf.descriptor
-        # AND google.protobuf.runtime_version — the latter exists
-        # only in protobuf >= 5.27 (this Spark's pb2 was generated by
-        # a 5.x protoc), so the pin is `protobuf>=5.27`
-        # (requirements-extra.txt). With that installed this test
-        # runs; there is no version conflict to resolve, only the
-        # missing package.
-        pytest.skip(
-            "google.protobuf absent from container (ModuleNotFoundError, "
-            "no network to install); TWS state server cannot start"
-        )
-
-    from pyspark.sql import functions as F
-
-    from gexp_ml_dask_spark.streaming import streaming_per_source_cap_tws
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    w = Window.partitionBy("source").orderBy("doc_id")
-    batch = {
-        (r["source"], r["doc_id"])
-        for r in docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("source", "doc_id")
-        .collect()
-    }
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("pathGlobFilter", "documents.parquet")
-            .load(SF_SMOKE)
-        )
-        q = (
-            streaming_per_source_cap_tws(stream, cap=10)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("t_tws_cap")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            online = {
-                (r["source"], r["doc_id"])
-                for r in spark.table("t_tws_cap").collect()
-            }
-        finally:
-            q.stop()
-        assert online == batch
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 @pytest.fixture(scope="module")
